@@ -1043,6 +1043,7 @@ def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     sole_late = (
         li.select("l_orderkey", "l_suppkey", "l_shipdate")
         .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
+        # Skew bound: per-order collect_set state <= its suppliers (<= 7 in TPC-H).
         .groupBy("l_orderkey")
         .agg(
             F.size(F.collect_set("l_suppkey")).alias("n_supp"),

@@ -65,14 +65,11 @@ def configure_state_store(
 
     ``track_rows=False`` additionally disables RocksDB's
     ``trackTotalNumberOfRows`` — Spark's documented write-path perf knob
-    (maintaining the count costs an extra lookup per put/delete). The
-    round-7 A/B on the 200-symbol bench fixture measured it worth
-    ~5-10% ticks/s (inside a noisy-sandbox spread; see BASELINE.md).
-    It stays ON by default because it zeroes the ``numRowsTotal``
-    progress metric that the engine's state-eviction observability
-    proof reads (``streaming/metrics.py``,
-    ``tests/test_streaming_stateful.py``) — flip it per-deployment when
-    dashboards don't consume state row counts.
+    (maintaining the count costs an extra lookup per put/delete). It
+    stays ON by default because turning it off zeroes the
+    ``numRowsTotal`` progress metric that ``streaming/metrics.py`` and
+    the state-eviction tests read; flip it per deployment when no
+    dashboard consumes state row counts.
     """
     provider = STATE_STORE_PROVIDERS[backend]
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
@@ -151,6 +148,20 @@ def get_spark(
         builder = builder.master(f"local[{cpus}]")
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+        )
+        # Local checkpoints go through the FileSystem API. Spark's default
+        # for file: paths, the FileContext manager, makes about ten
+        # permission calls per checkpoint file, and without libhadoop
+        # Hadoop's local filesystem forks a chmod/ls process for each
+        # one; this manager needs two (the file and its .crc). Both write
+        # a temp file and finish with the same rename(2), and both keep
+        # Hadoop's .crc files and Spark's checkpoint checksums. Local
+        # only: cluster checkpoints (HDFS, object stores) keep Spark's
+        # default manager.
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
         )
 
     if extra_conf:

@@ -24,11 +24,25 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+#: Micro-batch phases of the progress report's ``durationMs``, in the
+#: order a batch runs them, and the column each is recorded as. They
+#: run inside ``triggerExecution``, so they sum to at most ``trigger_ms``.
+_PHASES = {
+    "latestOffset": "latest_offset_ms",
+    "getBatch": "get_batch_ms",
+    "queryPlanning": "query_planning_ms",
+    "addBatch": "add_batch_ms",
+    "walCommit": "wal_commit_ms",
+    "commitOffsets": "commit_offsets_ms",
+}
+
 #: Columns of the snapshot DataFrame, in schema order.
 _SNAPSHOT_SCHEMA = (
     "query_name string, batch_id long, num_input_rows long,"
     " input_rows_per_sec double, processed_rows_per_sec double,"
-    " trigger_ms long, state_rows_total long, state_rows_updated long,"
+    " trigger_ms long, "
+    + "".join(f"{col} long, " for col in _PHASES.values())
+    + "state_commit_ms long, state_rows_total long, state_rows_updated long,"
     " watermark string"
 )
 
@@ -39,10 +53,12 @@ class ProgressRecorder(StreamingQueryListener):
 
     Attach with ``spark.streams.addListener(rec)`` (or ``rec.attach``),
     run any streaming query, then read ``rec.snapshot_df(spark)`` — one
-    row per (query, batch) with rates, state-store row counts and
-    trigger latency. Listener callbacks arrive on the engine's listener
-    bus thread; the deque append is atomic, and ``snapshot_df`` copies
-    before building the DataFrame.
+    row per (query, batch) with rates, state-store row counts, trigger
+    latency, the time of each micro-batch phase and the state stores'
+    commit time summed over the batch's state operators. Listener
+    callbacks arrive on the engine's listener bus thread; the deque
+    append is atomic, and ``snapshot_df`` copies before building the
+    DataFrame.
     """
 
     def __init__(self, max_batches: int = 256) -> None:
@@ -55,6 +71,7 @@ class ProgressRecorder(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = json.loads(event.progress.json)
         state = p.get("stateOperators") or []
+        durations = p.get("durationMs") or {}
         self._batches.append(
             {
                 "query_name": p.get("name"),
@@ -64,8 +81,13 @@ class ProgressRecorder(StreamingQueryListener):
                 "processed_rows_per_sec": float(
                     p.get("processedRowsPerSecond", 0.0) or 0.0
                 ),
-                "trigger_ms": int(
-                    (p.get("durationMs") or {}).get("triggerExecution", 0)
+                "trigger_ms": int(durations.get("triggerExecution", 0)),
+                **{
+                    col: int(durations.get(phase, 0))
+                    for phase, col in _PHASES.items()
+                },
+                "state_commit_ms": int(
+                    sum(s.get("commitTimeMs", 0) for s in state)
                 ),
                 "state_rows_total": int(
                     sum(s.get("numRowsTotal", 0) for s in state)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import ast
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -127,6 +129,40 @@ def test_shim_classifier_requires_exactly_one_pk_column(spark):
     assert c["data"] == 1 and c["shim"] == 0, c
 
 
+def _pk_repartitions(src: str, pks: set[str]) -> list[str]:
+    """Source of every ``.repartition(<n>, <args...>)`` call in ``src``
+    (two or more arguments) where a later argument quotes a table PK
+    column. The calls come from the parsed module, so a nested call in
+    any argument (``df.rdd.getNumPartitions()``) cannot end the match
+    early the way a ``[^)]+`` regex did."""
+    hits = []
+    for node in ast.walk(ast.parse(src)):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "repartition"
+            and len(node.args) > 1
+            and any(
+                isinstance(c, ast.Constant) and c.value in pks
+                for arg in node.args[1:]
+                for c in ast.walk(arg)
+            )
+        ):
+            hits.append(ast.get_source_segment(src, node))
+    return hits
+
+
+def test_pk_repartition_scan_sees_nested_first_argument():
+    pks = {"doc_id"}
+    assert _pk_repartitions(
+        'x = df.repartition(df.rdd.getNumPartitions(), "doc_id")', pks
+    ) == ['df.repartition(df.rdd.getNumPartitions(), "doc_id")']
+    assert _pk_repartitions("x = df.repartition(max(n, 2), F.col('doc_id'))", pks)
+    # Single-argument REPARTITION_BY_COL and non-PK keys stay free.
+    assert not _pk_repartitions('x = df.repartition("doc_id")', pks)
+    assert not _pk_repartitions('x = df.repartition(dp(), "s")', pks)
+
+
 def test_engine_never_repartitions_by_num_on_table_pk():
     """The census disambiguation contract ('a REPARTITION_BY_NUM hash
     exchange on a single table PK can only be the loader shim') was a
@@ -135,7 +171,6 @@ def test_engine_never_repartitions_by_num_on_table_pk():
     single-arg repartition("pk") (REPARTITION_BY_COL, e.g. tpch_q2) and
     graph-key repartition(dp, "s"/"t") remain free."""
     import os
-    import re
 
     from kafka_stream_faust_deprecated_spark.io import SHIM_KEYS
 
@@ -146,9 +181,6 @@ def test_engine_never_repartitions_by_num_on_table_pk():
         "kafka_stream_faust_deprecated_spark",
     )
     pks = set(SHIM_KEYS.values())
-    # .repartition(<something>, <args...>) with at least two arguments:
-    # flag when any later argument quotes a table PK column.
-    call = re.compile(r"\.repartition\(\s*([^)]+)\)", re.S)
     offenders = []
     for root, _, files in os.walk(pkg):
         for fname in files:
@@ -157,13 +189,7 @@ def test_engine_never_repartitions_by_num_on_table_pk():
             path = os.path.join(root, fname)
             if os.path.basename(path) == "io.py":
                 continue  # the shim itself lives here
-            src = open(path).read()
-            for m in call.finditer(src):
-                args = m.group(1)
-                if "," not in args:
-                    continue  # REPARTITION_BY_COL form: not the shim tag
-                tail = args.split(",", 1)[1]
-                hit = [pk for pk in pks if f'"{pk}"' in tail or f"'{pk}'" in tail]
-                if hit:
-                    offenders.append((path, m.group(0)[:80], hit))
+            with open(path) as f:
+                hits = _pk_repartitions(f.read(), pks)
+            offenders += [(path, h[:80]) for h in hits]
     assert not offenders, offenders

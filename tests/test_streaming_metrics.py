@@ -58,6 +58,14 @@ def test_progress_recorder_captures_sma_batches(spark, tmp_path):
         assert first["num_input_rows"] > 0
         assert first["state_rows_total"] > 0
         assert first["trigger_ms"] > 0
+        # Every batch carries its phase split and state commit time; the
+        # phases run inside the trigger, so they cannot exceed it.
+        phases = ("latest_offset_ms", "get_batch_ms", "query_planning_ms",
+                  "add_batch_ms", "wal_commit_ms", "commit_offsets_ms")
+        for r in rows:
+            assert all(r[c] >= 0 for c in phases + ("state_commit_ms",)), r
+            assert sum(r[c] for c in phases) <= r["trigger_ms"], r
+        assert first["add_batch_ms"] > 0
         # A progress event reports the watermark the batch STARTED
         # with: batch 0 carries the epoch floor, batch 1 the
         # fixture-derived watermark (max event time 59 s - 5 s delay).
@@ -69,6 +77,7 @@ def test_progress_recorder_captures_sma_batches(spark, tmp_path):
         df = rec.snapshot_df(spark, "sma_metrics_test")
         agg = df.groupBy().sum("num_input_rows").collect()[0][0]
         assert agg == sum(r["num_input_rows"] for r in rows)
+        assert set(phases) | {"state_commit_ms"} <= set(df.columns)
     finally:
         rec.detach(spark)
 
@@ -78,6 +87,7 @@ def test_snapshot_df_empty_safe(spark):
     df = rec.snapshot_df(spark)
     assert df.count() == 0
     assert "state_rows_total" in df.columns
+    assert {"add_batch_ms", "wal_commit_ms", "state_commit_ms"} <= set(df.columns)
 
 
 def test_state_eviction_visible_in_progress(spark, tmp_path):

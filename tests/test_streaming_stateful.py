@@ -120,13 +120,32 @@ def test_stateful_sma_idle_state_evicted(spark, tmp_path):
     )
 
 
-def test_stateful_sma_checkpoint_restart_resumes_state(spark, tmp_path, state_backend):
-    """Durability (the reference's changelog-topic story, ma_agg.py:42):
-    stop the query mid-stream, start a NEW query on the same checkpoint,
-    feed the rest of the fixture — buffered seconds, emitted-window set,
-    and armed timeouts must all come back from the state store, so the
-    combined output equals the single-run golden with no duplicates and
-    no losses across the restart boundary."""
+#: Spark's default checkpoint file manager for ``file:`` and HDFS paths.
+_FILECONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def _checkpoint_manager_class(spark, path) -> str:
+    """The checkpoint file manager a query started now would use for
+    ``path``."""
+    jvm = spark._jvm
+    return (
+        jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+        .create(
+            jvm.org.apache.hadoop.fs.Path(str(path)),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+        .getClass()
+        .getName()
+    )
+
+
+def _restart_resumes_state(spark, tmp_path, first_manager=None):
+    """Run the first half of the fixture, stop, then restart on the same
+    checkpoint with the rest; ``first_manager`` is the checkpoint file
+    manager class of the first run (None: the session's own)."""
     ticks = build_fixture()
     half = len(ticks) // 2
     src = tmp_path / "src"
@@ -155,8 +174,20 @@ def test_stateful_sma_checkpoint_restart_resumes_state(spark, tmp_path, state_ba
             .start()
         )
 
-    q1 = _start()
-    q1.awaitTermination(300)
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    prior = spark.conf.get(key, None)
+    if first_manager is not None:
+        spark.conf.set(key, first_manager)
+        assert _checkpoint_manager_class(spark, tmp_path) == first_manager
+    try:
+        q1 = _start()
+        q1.awaitTermination(300)
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+    assert q1.lastProgress is not None and q1.lastProgress["batchId"] >= 1
 
     p2 = src / "f2.json"
     write_ndjson(ticks[half:], str(p2))
@@ -173,6 +204,24 @@ def test_stateful_sma_checkpoint_restart_resumes_state(spark, tmp_path, state_ba
     keys = [(r["symbol"], _iso(r["window_start"])) for r in rows]
     assert len(keys) == len(set(keys)), "restart re-emitted windows"
     _check(rows, golden_sma(ticks))
+
+
+def test_stateful_sma_checkpoint_restart_resumes_state(spark, tmp_path, state_backend):
+    """Durability (the reference's changelog-topic story, ma_agg.py:42):
+    stop the query mid-stream, start a NEW query on the same checkpoint,
+    feed the rest of the fixture — buffered seconds, emitted-window set,
+    and armed timeouts must all come back from the state store, so the
+    combined output equals the single-run golden with no duplicates and
+    no losses across the restart boundary."""
+    _restart_resumes_state(spark, tmp_path)
+
+
+def test_stateful_sma_resumes_filecontext_checkpoint(spark, tmp_path, state_backend):
+    """A checkpoint written through Spark's default FileContext manager,
+    by any session without the engine's local setting, resumes under
+    the local FileSystem manager: the output equals the golden with no
+    window emitted twice."""
+    _restart_resumes_state(spark, tmp_path, first_manager=_FILECONTEXT_MANAGER)
 
 
 def test_stateful_sma_straggler_cannot_resurrect(spark, tmp_path):
