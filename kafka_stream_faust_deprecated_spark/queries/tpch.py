@@ -657,9 +657,15 @@ def tpch_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar came back through a whitelisted BroadcastNestedLoopJoin.
     ``sum() OVER ()`` on the part-bounded agg output computes the same
     total in the same relation: one lineitem pass, no BNLJ (A/B at
-    sf0.1: 0.53 -> 0.38 s, identical output). The single-partition
-    window is part-catalog-bounded — the whitelisted bounded-relation
-    class."""
+    sf0.1: 0.53 -> 0.38 s, identical output).
+
+    Skew bound: ``Window.partitionBy()`` has no key, so the window sends
+    the whole per-part aggregate, up to one row per part (about 200k×SF
+    rows), through one task, and AQE cannot split it. That is under
+    1 MB at the fixture scales (sf0.1 and below) but grows linearly
+    with SF: at 100 TB it is a single-task straggler. The fix
+    (ROADMAP #5) is a two-level reduction of ``tot`` to a 1-row
+    broadcast over the reused aggregate."""
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier").where(F.col("s_nationkey") < 3)
     val = (

@@ -9,6 +9,9 @@ The config choices are the ones that matter at 100 TB on a real cluster:
 * UTC session timezone — the reference container ran TZ=Asia/Taipei and
   normalized to UTC by hand (``faust_app/ma_agg.py:46-47``); we make UTC
   the engine-wide invariant instead.
+* local sessions fork Python workers from the engine's ``pydaemon``,
+  so a Python task no longer re-reads ``pyspark.zip`` and the
+  spark-core jar when pyspark invalidates its import caches
 
 Local-fixture caveat: the testdata parquet files are written as a SINGLE
 row group, so ``spark.sql.files.maxPartitionBytes``/``openCostInBytes``
@@ -25,6 +28,21 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+#: The directory holding the engine package, which workers need on
+#: their path to start ``pydaemon``.
+_ENGINE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PATH_KEY = "spark.executorEnv.PYTHONPATH"
+
+
+def _with_engine_path(pythonpath: str | None) -> str:
+    """``pythonpath`` with the engine's parent directory appended, unless
+    it is already on it."""
+    entries = [p for p in (pythonpath or "").split(os.pathsep) if p]
+    if _ENGINE_PARENT not in entries:
+        entries.append(_ENGINE_PARENT)
+    return os.pathsep.join(entries)
 
 
 def _local_cpus() -> int:
@@ -162,6 +180,22 @@ def get_spark(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
+        )
+        # Python workers fork from the engine's daemon module, which makes
+        # zipimporter cache invalidation lazy on Python 3.10-3.12 (see
+        # pydaemon.py). pyspark invalidates import caches at the start of
+        # every task, and each zipimporter over pyspark.zip or the
+        # spark-core jar then re-reads its archive's directory: 135-160 ms
+        # of CPU per task (Python 3.11, 4-core VM). Workers find the module through the engine's
+        # parent directory, which stays on any PYTHONPATH extra_conf sets,
+        # so the driver's cwd need not be the checkout. Local only: on a
+        # cluster the daemon starts before --py-files are on the path.
+        builder = builder.config(
+            "spark.python.daemon.module", "kafka_stream_faust_deprecated_spark.pydaemon"
+        )
+        extra_conf = dict(extra_conf or {})
+        extra_conf[_WORKER_PATH_KEY] = _with_engine_path(
+            extra_conf.get(_WORKER_PATH_KEY)
         )
 
     if extra_conf:

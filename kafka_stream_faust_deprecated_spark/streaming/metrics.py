@@ -43,7 +43,7 @@ _SNAPSHOT_SCHEMA = (
     " trigger_ms long, "
     + "".join(f"{col} long, " for col in _PHASES.values())
     + "state_commit_ms long, state_rows_total long, state_rows_updated long,"
-    " watermark string"
+    " state_memory_bytes long, state_partitions long, watermark string"
 )
 
 
@@ -54,11 +54,11 @@ class ProgressRecorder(StreamingQueryListener):
     Attach with ``spark.streams.addListener(rec)`` (or ``rec.attach``),
     run any streaming query, then read ``rec.snapshot_df(spark)`` — one
     row per (query, batch) with rates, state-store row counts, trigger
-    latency, the time of each micro-batch phase and the state stores'
-    commit time summed over the batch's state operators. Listener
-    callbacks arrive on the engine's listener bus thread; the deque
-    append is atomic, and ``snapshot_df`` copies before building the
-    DataFrame.
+    latency, the time of each micro-batch phase, and the state stores'
+    commit time, memory and partition count, each summed over the
+    batch's state operators. Listener callbacks arrive on the engine's
+    listener bus thread; the deque append is atomic, and ``snapshot_df``
+    copies before building the DataFrame.
     """
 
     def __init__(self, max_batches: int = 256) -> None:
@@ -94,6 +94,12 @@ class ProgressRecorder(StreamingQueryListener):
                 ),
                 "state_rows_updated": int(
                     sum(s.get("numRowsUpdated", 0) for s in state)
+                ),
+                "state_memory_bytes": int(
+                    sum(s.get("memoryUsedBytes", 0) for s in state)
+                ),
+                "state_partitions": int(
+                    sum(s.get("numShufflePartitions", 0) for s in state)
                 ),
                 "watermark": (p.get("eventTime") or {}).get("watermark"),
             }

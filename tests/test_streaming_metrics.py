@@ -66,6 +66,14 @@ def test_progress_recorder_captures_sma_batches(spark, tmp_path):
             assert all(r[c] >= 0 for c in phases + ("state_commit_ms",)), r
             assert sum(r[c] for c in phases) <= r["trigger_ms"], r
         assert first["add_batch_ms"] > 0
+        # State size and layout, summed over the SMA's two state
+        # operators (dropDuplicates and the windowed aggregate): each
+        # holds rows in memory, and each opens one store per shuffle
+        # partition, a count fixed when the checkpoint was created.
+        shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert first["state_memory_bytes"] > 0
+        for r in rows:
+            assert r["state_partitions"] == 2 * shuffle_partitions, r
         # A progress event reports the watermark the batch STARTED
         # with: batch 0 carries the epoch floor, batch 1 the
         # fixture-derived watermark (max event time 59 s - 5 s delay).
@@ -77,7 +85,11 @@ def test_progress_recorder_captures_sma_batches(spark, tmp_path):
         df = rec.snapshot_df(spark, "sma_metrics_test")
         agg = df.groupBy().sum("num_input_rows").collect()[0][0]
         assert agg == sum(r["num_input_rows"] for r in rows)
-        assert set(phases) | {"state_commit_ms"} <= set(df.columns)
+        state_cols = {"state_commit_ms", "state_memory_bytes", "state_partitions"}
+        assert set(phases) | state_cols <= set(df.columns)
+        assert df.groupBy().max("state_memory_bytes").collect()[0][0] == max(
+            r["state_memory_bytes"] for r in rows
+        )
     finally:
         rec.detach(spark)
 
@@ -87,7 +99,8 @@ def test_snapshot_df_empty_safe(spark):
     df = rec.snapshot_df(spark)
     assert df.count() == 0
     assert "state_rows_total" in df.columns
-    assert {"add_batch_ms", "wal_commit_ms", "state_commit_ms"} <= set(df.columns)
+    assert {"add_batch_ms", "wal_commit_ms", "state_commit_ms",
+            "state_memory_bytes", "state_partitions"} <= set(df.columns)
 
 
 def test_state_eviction_visible_in_progress(spark, tmp_path):
