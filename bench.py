@@ -1,67 +1,35 @@
-"""Headline benchmark — the driver's per-round perf record (BENCH_r{N}).
+"""Headline benchmark: one representative query per operator family.
 
-Runs one representative query per operator family at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints exactly ONE compact JSON line:
+Runs the ``HEADLINE`` suite at ``$SPARK_GRAFT_SF_DIR`` (default
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints exactly
+ONE compact JSON line:
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ...,
      "calibration_sec": ..., "calibration_stages_sec": ...,
      "streaming": {provider: {...}, ...}}
 
-The printed line is kept PROVABLY small: ``queries`` on the wire is the
-frozen ~38-entry ``WIRE`` subset (+ the tpch suite total), never the
-full headline suite — the driver captures a bounded 2000-char stdout
-tail, and rounds 5 AND 6 both lost their parsed perf record when the
-growing per-query dict truncated the line's head.
-``tests/test_bench_wire.py`` pins the worst-case line under 1900 bytes.
-Full per-entry times, sample spreads, calibration samples, and the
-``isolated`` re-times are written to ``BENCH_SELF.json`` (override
-with $SPARK_GRAFT_BENCH_SELF), committed per-round as
-BENCH_SELF_r{N}.json.
+The line is consumed from a bounded 2000-char stdout tail, so
+``queries`` on it is the frozen ``WIRE`` subset (+ the tpch suite
+total), never the full suite; ``tests/test_bench_wire.py`` pins the
+worst-case line under 1900 bytes. Full per-entry times, sample spreads,
+calibration samples and per-drain streaming seconds are written to
+``BENCH_SELF.json`` (override with $SPARK_GRAFT_BENCH_SELF).
 
-Each query is forced end-to-end with a noop sink write (full
-materialization of every output row on the executors, nothing collected
-to the driver) — the number measures the plan, not driver serialization.
+Each query is forced end-to-end with a noop sink write (every output row
+materialized on the executors, nothing collected to the driver), so the
+number measures the plan, not driver serialization. After one warm-up
+run per query, three whole-suite passes are timed and each entry records
+its MINIMUM across passes: a stall of the shared host lands on different
+queries in each pass, so the cross-pass minimum stays a plan cost.
 
-Each query runs three times — one warm-up (JVM codegen / broadcast
-threads / Python workers), then two measured runs of which the MINIMUM
-is recorded — so round-over-round deltas compare plans, not cold-start
-or GC noise. The two measured runs are INTERLEAVED as whole-suite
-passes (pass A over every query, then pass B): the sandbox can starve
-this process for 30+ s, long enough to cover both back-to-back samples
-of one query, but not the same query in two separated passes.
+Two fixed divisor queries measure machine state: ``calibration_sec``
+(one scan + a tiny hash agg: scan/compute speed) and
+``calibration_stages_sec`` (a 3-exchange pipeline: per-stage scheduling
+latency). Each is the minimum over interleaved samples and is published
+with its own sample spread, the error bar on raw times.
 
-Machine-noise calibration: round 3 showed every headline query drifting
-1.3-1.75x on a loaded sandbox, swamping real plan deltas. The bench
-therefore re-times two FIXED divisor queries whose plans have been
-frozen since rounds 1/5 — ``calibration_sec`` (one scan + tiny hash
-agg: machine scan/compute speed) and ``calibration_stages_sec`` (a
-3-exchange pipeline: per-stage scheduling latency) — and publishes
-each divisor's own sample spread. Cross-round comparisons read the RAW
-``queries`` + per-entry ``spread`` + ``isolated``, using the divisors
-and their spreads as the error bar on machine state.
-
-Round 10 replaces both divisors' estimator with the MINIMUM over
-interleaved samples (suite-pass samples + pre/post-suite pairs): the
-r9 mean-based divisor swung 27% round-over-round on a flat machine.
-Minimum-vs-minimum makes the divisor estimate the same quantity the
-numerators record.
-
-Round 11 (r8 verdict #4/#8): ``--isolate <query>`` re-times one query
-in a fresh subprocess (own JVM, cold session); the main run records
-that number for the ISOLATE-flagged locality-hostage entries as
-``isolated`` in BENCH_SELF, next to (never replacing) the in-suite
-min.
-
-Round 12 (r9 verdict #5): the derived ``normalized`` /
-``normalized_stages`` appendix is DELETED — the divisor spread
-exceeded the 1.5x reliability bar three rounds running, so the columns
-were flagged decorative twice and never graded. The raw divisors and
-spreads remain; a reader wanting a ratio divides, carrying the
-published spread as the error bar. A failed ``--isolate`` child now
-records an explicit ``"error: ..."`` marker under ``isolated`` (r9
-advice) instead of silently omitting the key.
+Takes no arguments.
 """
 
 from __future__ import annotations
@@ -201,18 +169,11 @@ HEADLINE = (
     "lateral_topk_per_nation",
 )
 
-#: The FIXED canonical wire subset. The driver captures only the LAST
-#: 2000 characters of stdout; rounds 5 AND 6 both lost their parsed
-#: perf record because the printed per-query dict grew with the
-#: headline suite (32 -> 110 entries pushed the line to ~3.4 KB and
-#: truncated the head, including flagship). Contract since round 7: the
-#: printed line carries ONLY this frozen ~38-entry subset (one stable
-#: representative per operator family, every r5-comparable entry
-#: included) + suite totals + both calibrations + streaming; the full
-#: suite's times/spread/isolated dicts live in the committed
-#: BENCH_SELF_r{N}.json. tests/test_bench_wire.py pins the worst-case
-#: printed line under 1900 bytes — growing HEADLINE can never re-break
-#: the driver capture, because the wire subset does not grow with it.
+#: The frozen wire subset: one stable representative per operator
+#: family. The printed line carries only these entries (+ suite totals,
+#: both calibrations and streaming) so it fits the 2000-char stdout
+#: tail it is read from; tests/test_bench_wire.py pins the worst-case
+#: line under 1900 bytes. HEADLINE can grow without touching the wire.
 WIRE = (
     "flagship_sma_5row",
     "join_broadcast_dims_revenue",
@@ -254,95 +215,10 @@ WIRE = (
     "distinct_hll_rollup",
 )
 
-#: The calibration divisor: ONE scan + a 6-group hash agg whose plan has
-#: been stable since round 1. Its absolute time tracks machine load /
-#: JVM health, not engine changes, so time(q)/time(calib) is comparable
-#: across rounds even when the sandbox is noisy.
+#: The calibration divisor: ONE scan + a 6-group hash agg whose plan
+#: does not change. Its absolute time tracks machine load / JVM health,
+#: not engine changes.
 CALIBRATION_QUERY = "agg_pricing_summary"
-
-#: Historical note: the derived normalized columns carried a 1.5x
-#: divisor-spread reliability bar; three consecutive rounds exceeded
-#: it, so round 12 removed the columns entirely (r9 verdict #5). The
-#: divisors and their sample spreads are still published as the
-#: machine-state error bar on the raw times.
-
-#: Entries whose in-suite samples are LOCALITY HOSTAGES: short
-#: stage-latency-bound queries whose separated-pass samples bracket
-#: minutes of other work, so page-cache/JIT decay dominates the in-suite
-#: min. Each gets ONE additional measurement in a fresh subprocess (own
-#: JVM, nothing else running) recorded as ``isolated`` in BENCH_SELF —
-#: the number three consecutive round verdicts re-derived by hand for
-#: ann_cosine_lsh (r8 verdict #4: end the ritual). join_salted_skew
-#: joined in round 13 (r10 verdict #3: next-highest historical spread,
-#: 8.9 — its in-suite min is the same locality hostage).
-ISOLATE = ("ann_cosine_lsh", "join_salted_skew")
-
-
-def _isolated_time(name: str, sf_dir: str) -> float | str:
-    """Re-time one query in a fresh subprocess (new JVM, cold session,
-    cold page-cache locality): two warm runs, min of three measured —
-    the mechanical twin of the hand re-times past verdicts performed
-    (see _isolate_main). A FAILED run returns an explicit
-    ``"error: ..."`` marker instead of None (r9 advice: a silently
-    omitted 'isolated' entry is indistinguishable from one that never
-    ran, which defeats this artifact's purpose of ending hand
-    re-adjudication); the marker is recorded verbatim in BENCH_SELF.
-    Caveat recorded here so the number is read honestly: the PARENT
-    bench JVM is idle but still resident during the child run, so on a
-    memory-tight sandbox the isolated figure can carry paging contention
-    the hand re-times (taken after the suite process exited) did not."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--isolate", name],
-            capture_output=True,
-            text=True,
-            timeout=900,
-            env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
-        )
-    except subprocess.TimeoutExpired:
-        print(f"bench --isolate {name}: timeout after 900s", file=sys.stderr)
-        return "error: timeout after 900s"
-    except OSError as e:
-        print(f"bench --isolate {name}: spawn failed: {e}", file=sys.stderr)
-        return f"error: spawn failed: {e}"
-    for line in reversed(out.stdout.strip().splitlines()):
-        try:
-            rec = json.loads(line)
-        except ValueError:
-            continue
-        # .get, not []: a partially-written record (or a log line that
-        # happens to be JSON with a "query" field) must fall through to
-        # the error marker below, not raise KeyError at the end of the
-        # 30+ minute suite before BENCH_SELF is written.
-        if rec.get("query") == name and rec.get("isolated_sec") is not None:
-            return rec["isolated_sec"]
-    tail = out.stderr.strip().splitlines()[-1:] or ["<no stderr>"]
-    msg = f"exit {out.returncode}, no JSON record; stderr tail: {tail[0][:200]}"
-    print(f"bench --isolate {name}: {msg}", file=sys.stderr)
-    return f"error: {msg}"
-
-
-def _isolate_main(name: str) -> None:
-    """``bench.py --isolate <query>``: time one query in this fresh
-    process and print one JSON line {"query", "isolated_sec"}.
-
-    TWO warm runs + min of three measured: a fresh session pays
-    JVM/codegen/Python-worker/page-cache cold-start that a single warm
-    run does not fully amortize for short queries (measured on
-    ann_cosine_lsh at sf0.1: 26 s cold, 5.0 after one warm, ~3.8
-    plateau from run 3 — vs ~1.8-2.2 in-suite after 100+ queries).
-    Even fully warmed, the fresh-session figure sits above the in-suite
-    min (deeper JIT + suite-wide cache locality there); the two numbers
-    BRACKET the plan cost, and isolated-to-isolated across rounds is
-    the stable regression signal."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name=f"ksfd-bench-iso-{name}")
-    load_table(spark, sf_dir, "lineitem").count()  # JVM/parquet warmup
-    _run_once(name, spark, sf_dir)  # extra warm (see docstring)
-    sec = _time_query(name, spark, sf_dir, runs=3)
-    print(json.dumps({"query": name, "isolated_sec": sec}))
 
 
 def _stage_calibration(spark, sf_dir: str) -> float:
@@ -350,11 +226,11 @@ def _stage_calibration(spark, sf_dir: str) -> float:
     aggregations + an ordered head) over lineitem. The primary
     calibration query is scan/compute-bound, so on an idle machine it
     speeds up more than multi-stage queries whose wall clock is
-    dominated by per-stage scheduling latency — which made round 4-5
-    derived ratios of shuffle-heavy entries look like regressions when
-    only the machine state changed. Hand-computed ratios of multi-stage
-    entries should be read against THIS divisor; the plan below is
-    frozen — do not edit, or cross-round comparisons break."""
+    dominated by per-stage scheduling latency, and ratios against it
+    make shuffle-heavy entries look like regressions when only the
+    machine state changed. Ratios of multi-stage entries
+    should be read against THIS divisor; the plan below is frozen — do
+    not edit, or comparisons with earlier records break."""
     from pyspark.sql import functions as F
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -377,126 +253,14 @@ def _run_once(name: str, spark, sf_dir: str) -> float:
     return time.perf_counter() - t0
 
 
-def _time_query(name: str, spark, sf_dir: str, runs: int = 2) -> float:
-    _run_once(name, spark, sf_dir)  # warm
-    times = [_run_once(name, spark, sf_dir) for _ in range(runs)]
-    # The sandbox's CPU is time-shared and can starve this process for
-    # tens of seconds; when that window covers every measured run the
-    # recorded minimum is load, not plan cost (round 6 saw a 1.4 s
-    # query record 31 s twice this way). Wildly disagreeing samples
-    # mean the minimum is still suspect — take up to 2 extra samples
-    # until the spread tightens. Still min-of-actual-runs, just with a
-    # variance-triggered sample count.
-    extra = 0
-    while extra < 2 and max(times) / max(min(times), 1e-9) > 3.0:
-        times.append(_run_once(name, spark, sf_dir))
-        extra += 1
-    return round(min(times), 3)
-
-
 #: Streaming throughput fixture size: symbols x seconds of tick data.
 STREAM_SYMBOLS = 200
 STREAM_SECONDS = 300
 
-#: Measured drains per state-store provider (r10 verdict #2: the
-#: streaming ticks/s was the one bench number without noise defenses —
-#: BENCH_SELF_r11 -> r12 rocksdb swung 1.8x with no code change while
-#: every headline query had min-of-N + spread). Drains are INTERLEAVED
+#: Measured drains per state-store provider; the reported figure is the
+#: minimum, with max/min as ``sec_spread``. Drains are INTERLEAVED
 #: across providers so machine-state drift lands on both equally.
 STREAM_REPS = 3
-
-#: Healthy single-node band for the reported per-provider ticks/sec
-#: (min-drain estimator), established over rounds 11-15: same-code
-#: records span ~15.8k-24.7k. A reported figure OUTSIDE this band has
-#: so far always been machine state, not plan (r15 runB: every drain
-#: uniformly 4x slow while batch entries were unaffected; a hand-run
-#: fresh-process record read 18.1k/18.1k). r13 verdict #4: bench.py
-#: now detects the breach itself and emits the isolated record —
-#: fresh subprocess, same warmup + STREAM_REPS drains per provider —
-#: under ``streaming_isolated`` in BENCH_SELF, next to (never
-#: replacing) the in-suite record. Knob: SPARK_GRAFT_STREAM_ISOLATE =
-#: "auto" (default: only on breach) | "1" (always) | "0" (never).
-STREAM_BAND_TICKS = (15_000, 25_000)
-
-
-def _stream_band_breached(
-    streaming: dict, band: tuple = STREAM_BAND_TICKS
-) -> list:
-    """Providers whose reported ticks_per_sec left the healthy band."""
-    lo, hi = band
-    return [
-        b
-        for b, rec in streaming.items()
-        if not lo <= rec["ticks_per_sec"] <= hi
-    ]
-
-
-def _isolate_streaming_main() -> None:
-    """``bench.py --isolate-streaming``: the fresh-process streaming
-    record (the mechanical twin of the hand-run STREAM_ISOLATED_r15
-    adjudication): own JVM, one small warmup drain per provider, then
-    STREAM_REPS interleaved full drains per provider; prints one JSON
-    line {"streaming_isolated": {provider: {..., sec_spread}},
-    "drains": {provider: [sec, ...]}}."""
-    spark = get_spark(app_name="ksfd-bench-iso-streaming")
-    providers = ("rocksdb", "hdfs")
-    for b in providers:
-        _streaming_throughput(spark, b, symbols=10, seconds=20)  # warm
-    drains: dict = {b: [] for b in providers}
-    for _ in range(STREAM_REPS):
-        for b in providers:
-            drains[b].append(_streaming_throughput(spark, b))
-    rec = {}
-    for b in providers:
-        best = min(drains[b], key=lambda r: r["sec"])
-        secs = [r["sec"] for r in drains[b]]
-        rec[b] = {
-            **best,
-            "sec_spread": round(max(secs) / max(min(secs), 1e-9), 2),
-        }
-    print(
-        json.dumps(
-            {
-                "streaming_isolated": rec,
-                "drains": {b: [r["sec"] for r in rs] for b, rs in drains.items()},
-            }
-        )
-    )
-
-
-def _isolated_streaming_record() -> dict | str:
-    """Run --isolate-streaming in a fresh subprocess and parse its
-    record; an explicit ``"error: ..."`` marker on failure (same
-    contract as _isolated_time — a silently missing record defeats the
-    purpose of ending hand re-adjudication)."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--isolate-streaming"],
-            capture_output=True,
-            text=True,
-            timeout=1800,
-            env=dict(os.environ),
-        )
-    except subprocess.TimeoutExpired:
-        print("bench --isolate-streaming: timeout after 1800s", file=sys.stderr)
-        return "error: timeout after 1800s"
-    except OSError as e:
-        print(f"bench --isolate-streaming: spawn failed: {e}", file=sys.stderr)
-        return f"error: spawn failed: {e}"
-    for line in reversed(out.stdout.strip().splitlines()):
-        try:
-            rec = json.loads(line)
-        except ValueError:
-            continue
-        if isinstance(rec, dict) and "streaming_isolated" in rec:
-            return rec
-    tail = out.stderr.strip().splitlines()[-1:] or ["<no stderr>"]
-    msg = f"exit {out.returncode}, no JSON record; stderr tail: {tail[0][:200]}"
-    print(f"bench --isolate-streaming: {msg}", file=sys.stderr)
-    return f"error: {msg}"
-
 
 #: (symbols, seconds) -> (src_dir, tick_count). The NDJSON fixture is
 #: a pure function of its size, and the min-of-N drain treatment runs
@@ -620,24 +384,17 @@ def main() -> None:
     _stage_calibration(spark, sf_dir)  # warm
     stage_samples = [_stage_calibration(spark, sf_dir)]
 
-    # Primary-calibration pre-suite pair (r8 verdict #8: more divisor
-    # samples; the suite passes + post-suite pair join these below).
+    # Primary-calibration pre-suite pair (the suite passes + post-suite
+    # pair join these below).
     _run_once(CALIBRATION_QUERY, spark, sf_dir)  # warm
     calib_pre_samples = [_run_once(CALIBRATION_QUERY, spark, sf_dir) for _ in range(2)]
 
     # Interleaved measurement passes: warm everything, then three full
-    # passes over the suite, per-query minimum ACROSS passes. Round 6
-    # observed the sandbox starving this process for 30+ s — long
-    # enough to cover both back-to-back samples of one query (a 1.4 s
-    # entry recorded 31 s twice); with whole-suite interleaving a
+    # passes over the suite, per-query minimum ACROSS passes. The shared
+    # host can starve this process for 30+ s — long enough to cover
+    # back-to-back samples of one query; with whole-suite interleaving a
     # window that long lands on DIFFERENT queries in each pass, so the
-    # cross-pass minimum stays a plan-cost measurement. Round 8 raised
-    # the pass count 2 -> 3: at 110 entries a query's two samples sit
-    # minutes apart, far enough for page-cache / JIT locality to decay
-    # between them — short stage-latency-bound entries (salted join,
-    # LSH probe) showed 2-3x spread between in-suite samples and
-    # immediate re-runs, so min-of-2 was recording locality decay, not
-    # plan cost (isolated re-timing confirmed the plans unchanged).
+    # cross-pass minimum stays a plan-cost measurement.
     for name in HEADLINE:
         _run_once(name, spark, sf_dir)  # warm
     passes = [
@@ -652,11 +409,7 @@ def main() -> None:
     # folded into the min. The separated-pass samples of a short query
     # bracket minutes of other work, so both can land on cold
     # page-cache/JIT locality; the back-to-back pair measures the warm
-    # plan. Taking min over ALL samples keeps the starvation-window
-    # defense: a stalled re-run can only inflate, never deflate, and
-    # the pass samples still stand. Round 7 lowered 1.5 -> 1.3 after
-    # ann_cosine_lsh recorded 2.87 s in-suite vs 1.94 s isolated — a
-    # spread the 1.5x trigger let through.
+    # plan. A stalled re-run can only inflate, never deflate, the min.
     RESAMPLE_SPREAD = 1.3
     for name in HEADLINE:
         s = samples_all[name]
@@ -666,10 +419,8 @@ def main() -> None:
         name: round(min(s), 3) for name, s in samples_all.items()
     }
     # Per-entry sample spread (max/min over every sample taken,
-    # re-runs included) goes to the self-artifact so the record
-    # self-identifies locality noise — a judge reading a suspicious
-    # entry sees spread >> 1 and re-times in isolation instead of
-    # calling it a plan regression.
+    # re-runs included) goes to BENCH_SELF so the record flags locality
+    # noise next to the time it qualifies.
     spread = {
         name: round(max(s) / max(min(s), 1e-9), 2)
         for name, s in samples_all.items()
@@ -686,18 +437,12 @@ def main() -> None:
         tpch_totals.append(sum(_run_once(n, spark, sf_dir) for n in tpch_names))
     times[f"tpch_suite_{len(tpch_names)}q"] = round(min(tpch_totals), 3)
 
-    # Calibration divisor. Round 9's mean(pre, post) estimator swung
-    # 27% round-over-round while raw totals stayed flat, inflating
-    # every normalized entry ~1.4x (a phantom regression the r7 judge
-    # flagged): the mean conflates transient load with machine speed.
-    # The MINIMUM over interleaved samples — the three suite-pass
-    # samples the calibration query already has as a headline entry,
-    # plus a post-suite back-to-back pair — estimates the least-loaded
-    # machine state, the same quantity every other entry's min-of-
-    # samples records, so divisor and numerator cancel their load terms
-    # instead of compounding them. The sample spread is published next
-    # to each divisor; a spread >> 1 says the machine was noisy and raw
-    # times should be read with that error bar.
+    # Calibration divisor: the MINIMUM over interleaved samples (the
+    # three suite-pass samples the calibration query has as a headline
+    # entry, the pre-suite pair, and a post-suite pair) estimates the
+    # least-loaded machine state, the same quantity every other entry's
+    # min-of-samples records. The sample spread is published next to
+    # each divisor as the error bar on raw times.
     calib_samples = calib_pre_samples + list(samples_all[CALIBRATION_QUERY])
     calib_samples += [_run_once(CALIBRATION_QUERY, spark, sf_dir) for _ in range(2)]
     calib_pre = times[CALIBRATION_QUERY]
@@ -712,18 +457,13 @@ def main() -> None:
     )
 
     # One streaming entry per state-store provider (rocksdb is the
-    # engine default; hdfs the heap-backed alternative) so the backend
-    # choice carries a measured justification. Each backend gets a tiny
-    # warmup drain first: the first streaming query of a session pays
-    # stream-machinery startup (source listing threads, state-store
-    # provider init) that otherwise lands entirely on whichever backend
-    # runs first — round 6's first dual run mismeasured rocksdb 3x
-    # slower purely from ordering.
-    # Each provider's reported sec / ticks_per_sec is the MIN over
-    # STREAM_REPS interleaved drains (the least-loaded-machine
-    # estimator every headline entry already uses); sec_spread =
-    # max/min over the drains is the error bar, and the raw per-drain
-    # seconds land in the committed BENCH_SELF under streaming_drains.
+    # engine default; hdfs the heap-backed alternative). Each backend
+    # gets a tiny warmup drain first: the first streaming query of a
+    # session pays stream-machinery startup (source listing threads,
+    # state-store provider init) that would otherwise land on whichever
+    # backend runs first. Each provider reports the MIN over STREAM_REPS
+    # interleaved drains; sec_spread = max/min over the drains, and the
+    # raw per-drain seconds go to BENCH_SELF under streaming_drains.
     streaming = {}
     providers = ("rocksdb", "hdfs")
     drains: dict[str, list[dict]] = {b: [] for b in providers}
@@ -741,42 +481,9 @@ def main() -> None:
             "sec_spread": round(max(secs) / max(min(secs), 1e-9), 2),
         }
 
-    # Streaming auto-adjudication (r13 verdict #4, see STREAM_BAND_TICKS):
-    # if any provider's reported min-drain throughput leaves the healthy
-    # band, the fresh-process isolated record is produced automatically
-    # and committed inside BENCH_SELF — the hand-run adjudication
-    # (STREAM_ISOLATED_r15.json) turned into machinery.
-    stream_knob = os.environ.get("SPARK_GRAFT_STREAM_ISOLATE", "auto")
-    breached = _stream_band_breached(streaming)
-    streaming_isolated = None
-    if stream_knob == "1" or (stream_knob == "auto" and breached):
-        trigger = breached if breached else "forced"
-        print(
-            f"bench: streaming band {STREAM_BAND_TICKS} — isolating "
-            f"(trigger: {trigger})",
-            file=sys.stderr,
-        )
-        streaming_isolated = {
-            "trigger": trigger,
-            "record": _isolated_streaming_record(),
-        }
-
-    # Fresh-subprocess re-times for the locality-hostage entries (see
-    # ISOLATE). Recorded NEXT TO the in-suite min, never replacing it:
-    # the in-suite number stays comparable to past rounds; the isolated
-    # number is the plan-cost ground truth a judge should read when
-    # spread[name] >> 1.
-    # A failed isolate run records its explicit error marker (r9
-    # advice) — the key is always present for every ISOLATE entry.
-    isolated = {name: _isolated_time(name, sf_dir) for name in ISOLATE}
-
-    # The printed line carries ONLY the frozen WIRE subset (see the
-    # WIRE docstring — rounds 5 and 6 both lost the parsed driver
-    # record to line growth; the driver tail-captures 2000 chars and
-    # tests/test_bench_wire.py pins the worst-case line under 1900
-    # bytes). Everything else — full 3-dp times for all entries, the
-    # calibration samples, per-entry spread, isolated re-times —
-    # lives in the committed BENCH_SELF_r{N}.json.
+    # The printed line carries ONLY the frozen WIRE subset (see WIRE).
+    # Everything else — full 3-dp times for all entries, the calibration
+    # samples, per-entry spread, per-drain seconds — goes to BENCH_SELF.
     compact = {
         "metric": "headline_queries_total",
         "value": round(sum(times.values()), 3),
@@ -807,17 +514,6 @@ def main() -> None:
                 "calibration_spread": calib_spread,
                 "calibration_stages_spread": calib_stages_spread,
                 "streaming_drains": drain_secs,
-                "streaming_band": STREAM_BAND_TICKS,
-                "streaming_isolated": streaming_isolated,
-                "isolated": isolated,
-                # The derived normalized/normalized_stages appendix was
-                # DELETED in round 12 (r9 verdict #5): the divisor
-                # spread exceeded 1.5x three rounds running, so the
-                # columns were flagged decorative twice and never
-                # graded. The raw divisors + their sample spreads stay
-                # (they are the machine-noise signal a reader needs to
-                # interpret raw times); anyone wanting a ratio can
-                # divide, with the spread as the error bar.
             },
             fh,
             indent=1,
@@ -827,15 +523,8 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) == 3 and sys.argv[1] == "--isolate":
-        _isolate_main(sys.argv[2])
-    elif len(sys.argv) == 2 and sys.argv[1] == "--isolate-streaming":
-        _isolate_streaming_main()
-    elif len(sys.argv) != 1:
-        # Fail fast on a malformed invocation instead of silently
-        # launching the 30+ min full suite and overwriting BENCH_SELF.
-        sys.exit(
-            f"usage: {sys.argv[0]} [--isolate <query_name> | --isolate-streaming]"
-        )
-    else:
-        main()
+    if len(sys.argv) != 1:
+        # Fail fast on any argument instead of silently launching the
+        # full suite and overwriting BENCH_SELF.
+        sys.exit(f"usage: {sys.argv[0]}")
+    main()

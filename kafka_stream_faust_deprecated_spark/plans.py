@@ -1,12 +1,11 @@
-"""Plan introspection — the exchange census behind PLANS_r{N}.md and the
-plan-hygiene guards, as an engine API.
+"""Plan introspection — the exchange census behind the plan-hygiene
+guards and perfbench's ``plans.exchanges_*`` metrics, as an engine API.
 
 A 100 TB deployment treats "how many times does data move, keyed on
 what" as a deployable property: CI diffs the census of each production
 query against a pinned baseline so a plan regression (a new shuffle, a
 broadcast flipping to a sort-merge join) fails the build instead of the
-cluster. ``scripts/plan_audit.py`` renders the per-round markdown from
-exactly this census.
+cluster.
 """
 
 from __future__ import annotations

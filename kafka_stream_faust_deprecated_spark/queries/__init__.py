@@ -9,149 +9,34 @@ Modules map to SURVEY.md §7 milestones:
                    joins, approx distinct, batch dedup (E5-E6, E8-E11, E21)
 * ``llm``        — M5: dedup / similarity / text analysis / multimodal
                    (E23-E26)
-* ``extras``     — overflow operators added after round 4's freeze
-                   (promoted to the front of the round-5 sampled prefix)
-"""
+* ``extras``     — overflow operators added after the milestone modules,
+                   mostly LLM-corpus curation on ``llm``'s kernels
 
-from kafka_stream_faust_deprecated_spark.queries import flagship  # noqa: F401
+Registration order is import order: ``flagship_sma_5row`` first, then
+each module's queries in definition order. ``llm`` is imported before
+the modules that import it at load time (``extras``, ``curation``,
+``layout``, ``audit``), so no module registers out of turn.
+"""
 
 # Imports are NOT guarded: a broken module must fail the registry load
 # loudly, not silently shrink the verified query surface.
-#
-# ORDER MATTERS for external correctness sampling: the driver checks the
-# first ~50 registered queries in registration order, so the prefix
-# ROTATES each round toward whichever queries have the weakest driver
-# record — never away from them. Rounds 1-3 sampled the relational/
-# scalars/analytic/temporal surface; round 4 rotated llm/tpch/scale to
-# the front for their first record (49/50 green). Round 5 rotates the
-# never-driver-checked tail in: extras (the r4 overflow four PLUS every
-# operator added during round 5 — chunking, DSIR, SemDeDup, source
-# overlap, transition matrix, prepare_training, and the k-means training
-# loop, relocated from llm so it lands inside the prefix) and analytic
-# (whose newest entries, price_histogram / approx_percentile_price,
-# postdate the r1-3 records), followed by tpch (so the repaired q12
-# gets its green row) and temporal/relational for re-confirmation.
-# flagship stays first — it's the entry query. The full registered
-# surface is still self-checked every round via scripts/driver_sim.py →
-# SELFCHECK_r{N}.json, and `--perm` sweeps shuffle the order to catch
-# session-conf order-dependence the fixed prefix could hide.
 for _mod in (
+    "flagship",
+    "llm",
     "extras",
-    "layout",
-    "curation",
     "mining",
+    "curation",
+    "layout",
     "robust",
     "ticker",
     "audit",
     "monitor",
     "inference",
     "analytic",
-    "temporal",
     "relational",
     "scalars",
-    "llm",
+    "temporal",
     "tpch",
     "scale",
 ):
     __import__(f"kafka_stream_faust_deprecated_spark.queries.{_mod}")
-
-# Import order alone can't pin the prefix (extras' oracle builders
-# import llm at decoration time, registering llm's queries first), so
-# the rotation is applied explicitly after every module has loaded.
-from kafka_stream_faust_deprecated_spark.registry import promote as _promote
-
-# Round-16 prefix (r13 verdict #1): the ledger stays closed, so the
-# window keeps draining freshness debt — and this is the window that
-# clears everything older than r10. After the r13 window the stalest
-# green rows are the 4 r9-era queries the previous prefix queued at
-# 51+ (the driver never sampled that deep) and a 49-query r10-era
-# cohort (cohorts recomputed this round as max round per query over
-# all CORRECTNESS_r*.json; histogram after r13: {r9:4, r10:49,
-# r11:46+3 rows-only, r12:49, r13:50}). Slots 2-5 carry the four
-# r9-era rows; slots 6-50 take the first 45 of the r10-era cohort
-# (alphabetical — order within a cohort carries no information); the
-# cohort's last 4 queue at 51+ and lead the next window. After this
-# round's driver window, no green row predates r10.
-_promote(
-    (
-        "flagship",
-        "extras",
-        "llm",
-        "mining",
-        "curation",
-        "layout",
-        "robust",
-        "ticker",
-        "audit",
-        "monitor",
-        "inference",
-        "analytic",
-        "relational",
-        "scalars",
-        "temporal",
-        "tpch",
-        "scale",
-    ),
-    pin_first=(
-        "flagship_sma_5row",
-        # --- r9-era cohort remainder (stalest green rows; the r15
-        # prefix's 51+ overflow the driver never reached) ---
-        "unpivot_pricing_metrics",
-        "window_frames",
-        "window_lag_lead",
-        "window_ranking",
-        # --- r10-era cohort, first 45 of 49 (alphabetical) ---
-        "ann_cosine_ivf",
-        "ann_cosine_ivfpq",
-        "ann_cosine_pq",
-        "basket_copurchase_rules",
-        "bm25_retrieval_topk",
-        "categorical_mutual_information",
-        "corpus_datacard",
-        "cusum_changepoint",
-        "dedup_incremental_ingest",
-        "doc_boilerplate_ngrams",
-        "doc_perplexity_bigram",
-        "doc_quality_gopher",
-        "domain_cap_sampling",
-        "dup_graph_pagerank",
-        "dup_graph_triangle_count",
-        "embedding_norm_outliers",
-        "entity_resolution_blocked",
-        "equi_depth_histogram",
-        "event_transition_matrix",
-        "global_shuffle_shards",
-        "groupwise_linear_trend",
-        "hard_negative_mining",
-        "heavy_hitters_cms_estimate",
-        "heavy_hitters_exact",
-        "hot_key_profile",
-        "incremental_agg_maintenance",
-        "interval_coverage_islands",
-        "join_bloom_prefilter",
-        "kmeans_lloyd_step",
-        "kmeans_train_3iter",
-        "label_propagation_communities",
-        "lang_confusion_matrix",
-        "merge_upsert_snapshot",
-        "minhash_estimate_calibration",
-        "neardup_shingle_containment",
-        "pipeline_prepare_training",
-        "pmi_token_cooccurrence",
-        "robust_mad_outliers",
-        "sample_weighted_aes",
-        "seasonal_decompose_events",
-        "semantic_dedup_semdedup",
-        "sessionize_capped",
-        "skyline_pareto_frontier",
-        "source_shingle_overlap",
-        # position 50 — last slot inside the sampled window
-        "source_unigram_divergence",
-        # ---- position 51+ : the r10-cohort remainder that doesn't fit
-        # the ~50-query window — first in line for the next prefix
-        "table_profile_orders",
-        "timeseries_gap_fill",
-        "token_zipf_slope",
-        "train_val_test_split",
-    ),
-)

@@ -1,11 +1,9 @@
-"""Overflow query module for operators added after round 4's freeze.
+"""Overflow query module: operators added after the milestone modules.
 
-The external correctness sampler checks the first ~50 registered
-queries in registration order; `queries/__init__.py` rotates that
-prefix each round toward whichever queries have the weakest driver
-record — as of round 5 this module is promoted to the FRONT of the
-prefix (right after flagship) precisely because its queries were the
-newest and least externally verified.
+Mostly LLM-corpus curation built on ``queries.llm``'s kernels (chunking,
+DSIR weights, SemDeDup, PQ/IVFPQ indexes, k-means training, BM25,
+training-set prep), plus a few relational and event operators (DAU/WAU,
+RFM segments, capped sessions, hot keys, merge-upsert).
 """
 
 from __future__ import annotations
@@ -1285,8 +1283,8 @@ def dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (t, dp) is alias-forwarded to (s, dp), so iteration k+1's edge join
     reuses it: ONE exchange per iteration. A/B (interleaved, min of 5):
     sf0.1 2.58 -> 2.43 s, 8x replica 4.99 -> 4.84 s, identical output
-    both scales; plans/r15 shows the per-iteration degree/broadcast
-    re-expansions gone. A window-degree variant (kcore's trick) was
+    both scales, and the executed plan no longer repeats the degree
+    and broadcast subtrees per iteration. A window-degree variant (kcore's trick) was
     measured and REJECTED: 1.87 vs 2.02 s at sf0.1 but 4.38 vs 3.84 s
     at 8x — the degree join beats full-width window materialization
     once the graph grows."""
@@ -2013,7 +2011,8 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: mean update per subspace, means rounded to PQ_MEAN_DECIMALS — the
 #: kmeans_train_3iter determinism contract) because random codebooks
 #: measurably cannot rank this corpus (recall 0.07 vs 0.33 trained —
-#: the IVF structural ceiling on iid fixtures; RECALL.json pins both).
+#: the IVF structural ceiling on iid fixtures; tests/test_llm.py's
+#: recall floors check both).
 PQ_M = 8
 PQ_K = 16
 PQ_MEAN_DECIMALS = 6
@@ -2280,7 +2279,7 @@ def ann_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (Jegou et al. 2011, "Product Quantization for Nearest
     Neighbor Search"). Vectors are L2-normalized first, so
     approximate-L2 order IS cosine order (||q-x||^2 = 2 - 2cos) and
-    RECALL.json can compare this index against knn_cosine_bruteforce.
+    recall is measured against knn_cosine_bruteforce in the tests.
 
     Scale shape — the 100 TB claim is that the query-time scan touches
     8-byte codes, not 256-byte vectors:
@@ -3112,9 +3111,9 @@ def neardup_containment_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash collision folding a cold shingle into a hot id's df is one
     more (~n_hot/2^64) contributor to this same bound. The exact
     baseline remains the honest check; recall vs it is deterministic
-    (seeded xxhash64) and pinned at 1.0 for sf0.001/sf0.01/sf0.1 in
-    tests + RECALL.json, and the planted hot-cluster pytest pins the
-    collapse path exactly."""
+    (seeded xxhash64), tests/test_llm.py asserts sketch == exact
+    (recall 1.0) at sf0.001 and sf0.1, and the planted hot-cluster
+    pytest pins the collapse path exactly."""
     from kafka_stream_faust_deprecated_spark.queries.llm import _doc_shingle_sets
 
     # min_tokens=3 (== size(sh) > 0: a doc has a 3-shingle iff it has

@@ -54,40 +54,6 @@ def register(
     return deco
 
 
-def promote(
-    module_order: tuple[str, ...], pin_first: tuple[str, ...] = ()
-) -> None:
-    """Reorder the registry so queries register in ``module_order``
-    (by defining module basename; unlisted modules keep their relative
-    position after the listed ones). ``pin_first`` names individual
-    queries lifted to the very front (in the given order, ahead of any
-    module) — for queries whose IMPLEMENTATION changed in the current
-    round and must land inside the driver's sampled prefix regardless
-    of where their module rotated to.
-
-    Import order alone cannot express the sampled-prefix rotation: a
-    module's oracle builders may import another query module at
-    decoration time (extras embeds llm's CC oracle), which registers
-    the imported module's queries first regardless of the package's
-    import sequence. ``queries/__init__.py`` calls this once, after all
-    modules are loaded, with the round's documented rotation."""
-    rank = {m: i for i, m in enumerate(module_order)}
-    pin = {name: i for i, name in enumerate(pin_first)}
-    missing = [n for n in pin_first if n not in _REGISTRY]
-    if missing:
-        raise KeyError(f"pin_first names not registered: {missing}")
-
-    def key(item):
-        if item[0] in pin:
-            return (0, pin[item[0]])
-        mod = item[1].fn.__module__.rsplit(".", 1)[-1]
-        return (1, rank.get(mod, len(rank)))
-
-    ordered = sorted(_REGISTRY.items(), key=key)  # stable: in-module order kept
-    _REGISTRY.clear()
-    _REGISTRY.update(ordered)
-
-
 def _ensure_loaded() -> None:
     # Import side-effect modules that call ``register``.
     from kafka_stream_faust_deprecated_spark import queries  # noqa: F401

@@ -8,19 +8,16 @@ driver owns its session), smoke-runs ``entry(spark)``, then runs every
 order-insensitive normalized value multiset.
 
 Usage: python scripts/driver_sim.py [--json OUT.json] [--registration-order]
-           [--prefix N] [--perm N [--seed S]] [sf_dir] [query ...]
+           [--perm N [--seed S]] [sf_dir] [query ...]
 
 With ``--json`` the per-query results are also written in the driver's
-CORRECTNESS_r{N}.json format, so each round can commit a full
-self-check artifact (SELFCHECK_r{N}.json) even when the driver's own
-file samples only a subset of the registry.
+CORRECTNESS_r{N}.json format.
 
 ``--registration-order`` runs queries in registration order instead of
 sorted — the driver's actual iteration order, which matters because all
 queries share ONE session and an earlier query's session-conf mutation
 (e.g. the nanos-parquet legacy flag set by any events read) can leak
-into a later query. ``--prefix N`` additionally truncates to the first
-N queries, replicating the driver's ~50-query sample exactly.
+into a later query.
 
 ``--perm N`` runs the whole suite N times in seeded random orders, each
 under a FRESH ``spark.newSession()`` (fresh SQLConf, shared JVM), and
@@ -166,7 +163,6 @@ def main() -> int:
     argv = list(sys.argv[1:])
     json_out = _pop_flag(argv, "--json", has_value=True)
     reg_order = _pop_flag(argv, "--registration-order")
-    prefix = _pop_flag(argv, "--prefix", has_value=True)
     perms = _pop_flag(argv, "--perm", has_value=True)
     seed = int(_pop_flag(argv, "--seed", has_value=True) or "5")
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
@@ -195,8 +191,6 @@ def main() -> int:
     names = list(qs) if reg_order else sorted(qs)
     if only:
         names = [n_ for n_ in names if n_ in only]
-    if prefix:
-        names = names[: int(prefix)]
 
     if perms:
         # Order-dependence sweep: same suite, N seeded shuffles, each in

@@ -232,7 +232,8 @@ def _content_subprocess_cmd(
     cells ran LAST in the interleaved session and inherited its
     locality decay — in-suite 32x segments breached the 4x bar
     (r15: 5.32/5.99) and then adjudicated clean isolated (2.15/2.16,
-    SCALE_ISOLATED_r15.json). Position was masquerading as curvature.
+    ``git show a9b15f3:SCALE_ISOLATED_r15.json``). Position was
+    masquerading as curvature.
     The structural fix (r13 verdict #2): the content group always runs
     in its own subprocess with a fresh JVM/session, so its cells are
     isolated-by-construction and the adjudication step retires.

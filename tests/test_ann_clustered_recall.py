@@ -1,7 +1,7 @@
 """Positive-control recall: IVF on CLUSTERED embeddings.
 
-RECALL.json pins IVF at ~0.33 on the shared fixtures — the honest
-structural ceiling for iid random vectors, where a true neighbor's
+tests/test_llm.py measures IVF at ~0.33 on the shared fixtures — the
+honest structural ceiling for iid random vectors, where a true neighbor's
 cell barely correlates with the query's probed cells. This test is the
 other half of that claim: on data WITH cluster structure (what real
 embedding corpora have), the same auto-sized index recovers most exact
@@ -15,7 +15,6 @@ import math
 
 from kafka_stream_faust_deprecated_spark.queries.llm import EMBED_DIM
 from kafka_stream_faust_deprecated_spark.registry import get_query
-from tests.test_llm import _record_recall
 
 N_CLUSTERS = 10
 PER_CLUSTER = 50
@@ -40,7 +39,9 @@ def _clustered_rows():
     return rows
 
 
-def test_ivf_recall_high_on_clustered_corpus(spark, tmp_path_factory):
+def test_ivf_recall_high_on_clustered_corpus(
+    spark, tmp_path_factory, record_property
+):
     root = tmp_path_factory.mktemp("clustered_emb")
     spark.createDataFrame(
         _clustered_rows(), "vec_id long, embedding array<float>, label int"
@@ -57,17 +58,19 @@ def test_ivf_recall_high_on_clustered_corpus(spark, tmp_path_factory):
         for r in get_query("ann_cosine_ivf").fn(spark, sf_dir).collect()
     }
     recall = len(ann & exact) / len(exact)
-    _record_recall("ann_cosine_ivf", "clustered", round(recall, 3))
+    record_property("recall[ann_cosine_ivf@clustered]", round(recall, 3))
     # Clustered data: the same auto-sized index that scores ~0.33 on iid
     # vectors must recover nearly every exact neighbor. Measured 1.0
-    # since round 7 (RECALL.json); 0.9 leaves room for benign retuning
+    # since round 7; 0.9 leaves room for benign retuning
     # while catching any real assignment/probe rot (r7 verdict #5 —
     # the old 0.6 floor let a silent one-third recall loss through).
     assert recall >= 0.9, f"clustered-corpus IVF recall collapsed: {recall}"
     assert not math.isnan(recall)
 
 
-def test_pq_recall_high_on_clustered_corpus(spark, tmp_path_factory):
+def test_pq_recall_high_on_clustered_corpus(
+    spark, tmp_path_factory, record_property
+):
     """Same positive control for the trained-PQ index: on clustered
     embeddings the one-Lloyd-pass codebooks capture real structure and
     the ADC scan must recover most exact neighbors — the iid fixtures'
@@ -88,15 +91,17 @@ def test_pq_recall_high_on_clustered_corpus(spark, tmp_path_factory):
         for r in get_query("ann_cosine_pq").fn(spark, sf_dir).collect()
     }
     recall = len(ann & exact) / len(exact)
-    _record_recall("ann_cosine_pq", "clustered", round(recall, 3))
-    # Measured 0.933 since round 7 (RECALL.json); 0.85 floor per the
+    record_property("recall[ann_cosine_pq@clustered]", round(recall, 3))
+    # Measured 0.933 since round 7; 0.85 floor per the
     # r7 verdict so codebook-training changes can't silently rot ADC
     # ranking quality.
     assert recall >= 0.85, f"clustered-corpus PQ recall collapsed: {recall}"
     assert not math.isnan(recall)
 
 
-def test_ivfpq_recall_on_clustered_corpus(spark, tmp_path_factory):
+def test_ivfpq_recall_on_clustered_corpus(
+    spark, tmp_path_factory, record_property
+):
     """Composition control: on clustered embeddings the IVFPQ pipeline
     (probe pruning x code quantization) must still recover most exact
     neighbors — if IVF and PQ each score >=0.6 here but the composition
@@ -117,8 +122,8 @@ def test_ivfpq_recall_on_clustered_corpus(spark, tmp_path_factory):
         for r in get_query("ann_cosine_ivfpq").fn(spark, sf_dir).collect()
     }
     recall = len(ann & exact) / len(exact)
-    _record_recall("ann_cosine_ivfpq", "clustered", round(recall, 3))
-    # Measured 0.933 since round 7 (RECALL.json); 0.85 floor per the
+    record_property("recall[ann_cosine_ivfpq@clustered]", round(recall, 3))
+    # Measured 0.933 since round 7; 0.85 floor per the
     # r7 verdict — composition wiring (probe x LUT) regressions surface
     # here first.
     assert recall >= 0.85, f"clustered-corpus IVFPQ recall collapsed: {recall}"

@@ -13,6 +13,11 @@ round.
 """
 
 import json
+import os
+import subprocess
+import sys
+
+import pytest
 
 import bench
 
@@ -65,51 +70,6 @@ def test_wire_is_subset_of_headline():
     assert len(bench.WIRE) <= 40
 
 
-def test_isolated_time_records_explicit_error(monkeypatch):
-    """A failed --isolate child must surface as an explicit
-    'error: ...' marker in the returned value (r9 advice: a silently
-    missing 'isolated' entry is indistinguishable from a run that
-    never happened, defeating the artifact's purpose)."""
-    import subprocess
-
-    class _NoJson:
-        returncode = 1
-        stdout = "no json here\n"
-        stderr = "Traceback ...\nboom: root cause tail"
-
-    monkeypatch.setattr(subprocess, "run", lambda *a, **k: _NoJson())
-    out = bench._isolated_time("ann_cosine_lsh", "/tmp")
-    assert isinstance(out, str) and out.startswith("error:")
-    assert "exit 1" in out and "root cause tail" in out
-
-    def _raise_timeout(*a, **k):
-        raise subprocess.TimeoutExpired(cmd="x", timeout=900)
-
-    monkeypatch.setattr(subprocess, "run", _raise_timeout)
-    out = bench._isolated_time("ann_cosine_lsh", "/tmp")
-    assert isinstance(out, str) and out.startswith("error: timeout")
-
-    # A JSON line naming the query but MISSING isolated_sec (partial
-    # write, structured log echo) must fall through to the marker,
-    # never KeyError out of main() before BENCH_SELF is written.
-    class _Partial:
-        returncode = 0
-        stdout = '{"query": "q"}\n'
-        stderr = ""
-
-    monkeypatch.setattr(subprocess, "run", lambda *a, **k: _Partial())
-    out = bench._isolated_time("q", "/tmp")
-    assert isinstance(out, str) and out.startswith("error:")
-
-    class _Ok:
-        returncode = 0
-        stdout = 'warmup junk\n{"query": "q", "isolated_sec": 1.23}\n'
-        stderr = ""
-
-    monkeypatch.setattr(subprocess, "run", lambda *a, **k: _Ok())
-    assert bench._isolated_time("q", "/tmp") == 1.23
-
-
 def test_wire_keeps_cross_round_anchors():
     # The entries every round-over-round perf comparison reads; losing
     # any of these silently would orphan the historical record.
@@ -125,16 +85,13 @@ def test_wire_keeps_cross_round_anchors():
 
 
 def test_streaming_noise_treatment_pins():
-    """r10 verdict #2: the streaming ticks/s measurement gets the same
-    min-of-N + spread treatment as every headline entry, and r10
-    verdict #3 adds join_salted_skew to the isolate ledger. Pin the
-    knobs so a refactor can't silently drop back to a single warm
-    drain or shrink the isolate set."""
+    """The streaming ticks/s measurement gets the same min-of-N + spread
+    treatment as every headline entry. Pin the knob so a refactor can't
+    silently drop back to a single warm drain."""
     assert bench.STREAM_REPS >= 3
     # The wire worst-case above must mirror what main() emits per
     # provider — sec_spread is part of the frozen streaming shape now.
     assert '"sec_spread"' in _worst_case_line()
-    assert set(bench.ISOLATE) >= {"ann_cosine_lsh", "join_salted_skew"}
 
 
 def test_stream_fixture_is_cached_and_sized():
@@ -144,8 +101,6 @@ def test_stream_fixture_is_cached_and_sized():
     a_dir, a_n = bench._stream_fixture(3, 4)
     b_dir, b_n = bench._stream_fixture(3, 4)
     assert a_dir == b_dir and a_n == b_n == 12
-    import os
-
     path = os.path.join(a_dir, "ticks.ndjson")
     with open(path) as fh:
         assert sum(1 for _ in fh) == 12
@@ -154,52 +109,23 @@ def test_stream_fixture_is_cached_and_sized():
     assert c_dir != a_dir and c_n == 4
 
 
-def test_stream_band_breach_detector():
-    """r13 verdict #4: bench.py auto-triggers the fresh-process
-    streaming record when a provider's reported min-drain throughput
-    leaves the healthy 15k-25k ticks/s band (r15 runB precedent: all
-    drains uniformly 4x slow, batch unaffected, hand-run isolated
-    record read 18.1k/18.1k). Pin the band and the detector."""
-    assert bench.STREAM_BAND_TICKS == (15_000, 25_000)
-    inband = {
-        "rocksdb": {"ticks_per_sec": 20_606},
-        "hdfs": {"ticks_per_sec": 21_279},
-    }
-    assert bench._stream_band_breached(inband) == []
-    low = {
-        "rocksdb": {"ticks_per_sec": 5_200},  # the r15 runB shape
-        "hdfs": {"ticks_per_sec": 18_000},
-    }
-    assert bench._stream_band_breached(low) == ["rocksdb"]
-    # Suspiciously fast is ALSO out-of-band (a short-circuited drain
-    # would otherwise sail through as a great number).
-    high = {"rocksdb": {"ticks_per_sec": 80_000}}
-    assert bench._stream_band_breached(high) == ["rocksdb"]
-
-
-def test_isolated_streaming_records_explicit_error(monkeypatch):
-    """Same contract as --isolate: a failed fresh-process streaming run
-    must surface an explicit error marker, never a silently absent
-    record."""
-    import subprocess
-
-    class Boom:
-        returncode = 1
-        stdout = "not json\n"
-        stderr = "java.lang.OutOfMemoryError: boom\n"
-
-    monkeypatch.setattr(subprocess, "run", lambda *a, **k: Boom())
-    rec = bench._isolated_streaming_record()
-    assert isinstance(rec, str) and rec.startswith("error: exit 1")
-    assert "OutOfMemoryError" in rec
-
-    good = {"streaming_isolated": {"rocksdb": {"ticks_per_sec": 18100}},
-            "drains": {"rocksdb": [3.3, 3.4, 3.5]}}
-
-    class Ok:
-        returncode = 0
-        stdout = "noise\n" + json.dumps(good) + "\n"
-        stderr = ""
-
-    monkeypatch.setattr(subprocess, "run", lambda *a, **k: Ok())
-    assert bench._isolated_streaming_record() == good
+@pytest.mark.parametrize(
+    "argv",
+    [["--isolate", "x"], ["--isolate-streaming"], ["--bogus"]],
+    ids=["isolate", "isolate_streaming", "bogus"],
+)
+def test_bench_rejects_arguments(argv, tmp_path):
+    """bench.py takes no arguments: any argument exits non-zero with the
+    usage message before a session starts, and writes no BENCH_SELF."""
+    self_path = tmp_path / "BENCH_SELF.json"
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(bench.__file__), *argv],
+        capture_output=True,
+        text=True,
+        timeout=120,
+        cwd=tmp_path,
+        env={**os.environ, "SPARK_GRAFT_BENCH_SELF": str(self_path)},
+    )
+    assert out.returncode != 0
+    assert "usage:" in out.stderr
+    assert not self_path.exists()
