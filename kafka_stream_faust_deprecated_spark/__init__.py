@@ -12,8 +12,11 @@ Design principles (see SURVEY.md §4, §7):
 * DataFrame/SQL first — declare logical plans, let Catalyst pick the
   physical strategy (broadcast vs sort-merge joins, partial aggregation,
   predicate pushdown, AQE re-planning).
-* Pandas UDFs / applyInPandas only where built-ins genuinely cannot
-  express the semantics (as-of join fallback, multimodal decode).
+* Python over data only where built-ins genuinely cannot express the
+  work, and then per Arrow batch: ``arrow_udf``/``mapInArrow`` for the
+  vector kernels (one BLAS matmul per batch, no per-row Python objects),
+  pandas functions only where the logic is pandas-shaped (as-of join
+  fallback, multimodal decode).
 * Structured Streaming for the reference's actual surface: watermarked
   sliding-window aggregation with a window-completeness gate.
 * Every batch operator ships with a DuckDB-oracle SQL twin so the

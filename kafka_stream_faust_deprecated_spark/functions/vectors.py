@@ -8,16 +8,42 @@ the DuckDB oracle (``embedding::DOUBLE[]``) accumulate identically.
 LSH hyperplanes are derived from md5 in plain Python (driver-side, tiny)
 and embedded as literals in both the Spark plan and the oracle SQL, so
 the approximate index is deterministic and cross-engine checkable.
+
+The BLAS kernels (centroid argmax, PQ encode, LSH buckets, the fused
+assign + partial-sums pass) are ``arrow_udf``/``mapInArrow`` functions
+over three primitives: ``_matrix`` reads an Arrow vector column as one
+(n x dim) float64 matrix, ``_assign`` takes the first-occurrence argmax
+of a caller-supplied score per subspace, and ``_cell_sums`` counts and
+sums each cell's members. They need a non-null, fixed-length vector
+column.
+
+Determinism contract shared by every kernel: only an argmax INDEX or a
+sign leaves a BLAS matmul as an emitted value — never a score. BLAS
+accumulation order differs from the oracle's sequential
+``list_dot_product`` by ~1e-13 relative, which can matter only for two
+distinct candidates scoring within reorder error of each other (or a
+dot within reorder error of zero for an LSH sign bit). An epsilon would
+only move that critical surface, so the plain rule stays and the oracle
+hash-match pins it on the platform under test. Callers that emit a
+score recompute the winner's score with the sequential JVM dot.
 """
 
 from __future__ import annotations
 
 import hashlib
+from typing import Callable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+
+#: One subspace's score: (n x subdim) rows -> (n x cells) scores.
+Score = Callable[[np.ndarray], np.ndarray]
+
+#: Output schema of ``partial_sums``.
+PARTIAL_SUMS_SCHEMA = "j int, cell int, n long, sums array<double>"
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -55,218 +81,164 @@ def lsh_hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def _sign_bits(vec: Column, planes: list[list[float]]) -> Column:
-    bits = [
-        F.when(dot(vec, F.array(*[F.lit(c) for c in plane])) > 0, F.lit("1")).otherwise(
-            F.lit("0")
-        )
-        for plane in planes
-    ]
-    return F.concat(*bits)
+def _matrix(arr: pa.Array) -> np.ndarray:
+    """The rows of a ``list<float|double>`` array as one contiguous
+    (n x dim) float64 matrix. ``flatten()`` honours a sliced array's
+    offset, which ``.values`` does not. Raises ``ValueError`` on a null
+    row or element and on rows of unequal length."""
+    n = len(arr)
+    flat = arr.flatten()
+    if arr.null_count or flat.null_count:
+        raise ValueError("vector column has null rows or elements")
+    lengths = arr.value_lengths().to_numpy()
+    dim = int(lengths[0]) if n else 0
+    if (lengths != dim).any():
+        raise ValueError(f"ragged vector rows: lengths {lengths.min()}..{lengths.max()}")
+    return flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, dim)
 
 
-def lsh_table_buckets(
-    vec: Column, n_tables: int, bits_per_table: int, dim: int
-) -> Column:
-    """Multi-table random-hyperplane LSH: array of (t, bucket) structs.
-
-    Each of the ``n_tables`` tables hashes the vector to a
-    ``bits_per_table``-bit sign bucket from its own hyperplane set;
-    candidates are pairs sharing a bucket in ANY table
-    (OR-amplification — recall 1-(1-p^k)^L instead of p^k). At scale
-    (t, bucket) is the shuffle key: explode the array, join on it.
-
-    Pure-JVM variant (per-plane ``zip_with``+``aggregate``): fine for a
-    handful of planes; for a production-sized plane count use
-    ``lsh_bucket_strings_pandas`` — the per-row cost here is an
-    interpreted lambda step per (plane, component).
-    """
-    planes = lsh_hyperplanes(n_tables * bits_per_table, dim)
-    return F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("t"),
-                _sign_bits(
-                    vec, planes[t * bits_per_table : (t + 1) * bits_per_table]
-                ).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ]
-    )
+def _rows(mat: np.ndarray) -> pa.ListArray:
+    """A 2-D array as an Arrow list array, one list per row."""
+    n, width = mat.shape
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * width)
+    return pa.ListArray.from_arrays(offsets, pa.array(mat.ravel()))
 
 
-def centroid_argmax_pandas(centroids: list[list[float]], norms: list[float]):
-    """Arrow-vectorized nearest-centroid assignment: the INDEX (0-based
-    position in ``centroids``) of the max-cosine centroid per vector,
-    via one dense (batch x dim) @ (dim x k) BLAS matmul per Arrow batch.
+def _assign(x: np.ndarray, scoring: list[Score]):
+    """Yield ``(j, subvectors, cells)`` per subspace j: the matrix is cut
+    into ``len(scoring)`` equal column blocks and each row goes to its
+    block's max-score cell. Ties break to the FIRST (lowest) cell
+    (``np.argmax``), matching the oracles' ``ORDER BY score DESC, id``."""
+    sub = x.shape[1] // len(scoring)
+    for j, score in enumerate(scoring):
+        s = x[:, j * sub : (j + 1) * sub]
+        yield j, s, np.argmax(score(s), axis=1)
 
-    This is the hot kernel of IVF cell assignment / k-means Lloyd
-    iterations / SemDeDup: the interpreted ``transform`` formulation
-    (k zip_with+aggregate dots per row, no codegen, no CSE) costs
-    k x dim interpreter steps per row; one matmul does the same flops
-    in BLAS, ~100x cheaper at k=64, dim=64 (same argument as
-    ``lsh_bucket_strings_pandas``).
 
-    Determinism contract: only the ARGMAX leaves this function — never a
-    score value — so the BLAS-vs-sequential accumulation-order
-    difference (~1e-13 relative) can matter only if two DISTINCT
-    centroids score within reorder error of each other, which for
-    md5-random or k-means-mean centroids is the same
-    astronomically-unlikely near-tie class the LSH sign bits already
-    accept (see ``lsh_bucket_strings_pandas``'s caveat); the sf0.01
-    oracle hash-match pins it on the platform under test. Callers that
-    OUTPUT a score value must recompute the winner's score with the
-    sequential JVM dot (one dot per row — cheap) so emitted values stay
-    bit-identical with the oracle.
+def _cell_sums(s: np.ndarray, cells: np.ndarray):
+    """``(cell, n, sums)`` of the non-empty cells: member count and
+    element-wise member sum, in ascending cell order."""
+    counts = np.bincount(cells)
+    sums = np.zeros((len(counts), s.shape[1]), dtype=np.float64)
+    np.add.at(sums, cells, s)
+    hot = np.flatnonzero(counts)
+    return hot, counts[hot], sums[hot]
 
-    Ties broken by FIRST occurrence (``np.argmax``) = lowest index,
-    matching the oracles' ``ORDER BY s DESC, cid``. The per-row norm is
-    not applied — a positive per-row scale never changes the argmax.
-    """
-    from pyspark.sql.functions import pandas_udf
 
+def cosine_scoring(centroids: list[list[float]], norms: list[float]) -> list[Score]:
+    """Nearest-centroid scoring over the whole vector: ``(X @ C) / ||c||``.
+    The per-row norm is not applied — a positive per-row scale never
+    changes the argmax."""
     mat_c = np.array(centroids, dtype=np.float64).T  # dim x k
     inv_norms = 1.0 / np.array(norms, dtype=np.float64)  # k
-
-    @pandas_udf("int")
-    def cidx(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        mat = np.array(v.tolist(), dtype=np.float64)  # batch x dim
-        scores = (mat @ mat_c) * inv_norms
-        return pd.Series(np.argmax(scores, axis=1).astype("int32"))
-
-    return cidx
+    return [lambda x: (x @ mat_c) * inv_norms]
 
 
-def centroid_partial_sums_pandas(centroids: list[list[float]], norms: list[float]):
-    """Arrow-native fused assign + per-cell partial sums for a k-means
-    mean update (r15, guide §4.2): ONE ``mapInPandas`` pass emits, per
-    Arrow batch, one row per non-empty cell — ``(cidx, n, sums)`` where
-    ``sums`` is the element-wise sum of the batch's member vectors.
-    Callers reduce the partials with a (cidx, pos)-keyed aggregate and
-    divide: ``mean = round(sum(sums[pos]) / sum(n), d)``.
-
-    This replaces the assign-project + 64-way ``posexplode`` + corpus
-    x dim row HashAggregate shape: the per-row JVM work (array explode,
-    per-row literal lookup) disappears, and the Python -> JVM transfer
-    drops from one int per row to k x (dim + 2) doubles per batch.
-
-    Determinism contract: the argmax side is ``centroid_argmax_pandas``
-    verbatim (BLAS matmul, first-occurrence ties — see its caveat). The
-    SUMS leave this function, and their per-batch/np.add.at accumulation
-    order differs from the JVM hash-aggregate it replaces by ~1e-15
-    relative — absorbed by the caller's KMEANS_MEAN_DECIMALS rounding,
-    the same contract that already absorbs the Spark-vs-DuckDB
-    summation-order difference (oracle hash-green at 3 SFs pins it; the
-    residual risk is the documented half-step boundary class shared by
-    every rounded float aggregate in the engine)."""
-    mat_c = np.array(centroids, dtype=np.float64).T  # dim x k
-    inv_norms = 1.0 / np.array(norms, dtype=np.float64)  # k
-    kk = mat_c.shape[1]
-
-    def fn(batches):
-        for b in batches:
-            if len(b) == 0:
-                continue
-            mat = np.array(b["v"].tolist(), dtype=np.float64)  # batch x dim
-            idx = np.argmax((mat @ mat_c) * inv_norms, axis=1)
-            acc = np.zeros((kk, mat.shape[1]), dtype=np.float64)
-            np.add.at(acc, idx, mat)
-            counts = np.bincount(idx, minlength=kk)
-            hot = np.flatnonzero(counts)
-            yield pd.DataFrame(
-                {
-                    "cidx": hot.astype("int32"),
-                    "n": counts[hot].astype("int64"),
-                    "sums": [acc[i].tolist() for i in hot],
-                }
-            )
-
-    return fn
-
-
-def pq_partial_sums_pandas(
-    codebooks: list[list[list[float]]], norms2: list[list[float]]
-):
-    """Arrow-native fused PQ encode + per-(subspace, codeword) partial
-    sums for the PQ codebook mean update (r15, guide §4.2 — the
-    centroid_partial_sums_pandas pattern applied to ``_pq_train``): one
-    ``mapInPandas`` pass emits, per Arrow batch, one row per non-empty
-    (j, code) cell — ``(j, code, n, sums)`` with ``sums`` the
-    element-wise sum of the batch's member SUBvectors. Callers reduce
-    with a (j, code, pos) aggregate and ``round(sum/count, d)``.
-
-    Replaces encode + an m-way struct explode + a subdim posexplode +
-    a corpus x dim row HashAggregate. The encode arithmetic is
-    ``pq_encode_pandas`` verbatim (same score form, same
-    first-occurrence argmin ties); the summation-order note on
-    ``centroid_partial_sums_pandas`` applies to the emitted sums."""
+def pq_scoring(codebooks: list[list[list[float]]], norms2: list[list[float]]) -> list[Score]:
+    """Product-quantization scoring, one subspace per codebook: the
+    nearest codeword by squared L2 via ``S @ B - 0.5*||c||^2`` (the
+    per-row ``||s||^2`` term is constant across codewords). ``norms2``
+    holds the SAME Python-sequential ``||c||^2`` literals the oracle
+    embeds, so scores differ from the oracle's only by dot reorder
+    noise."""
     mats = [np.array(cb, dtype=np.float64).T for cb in codebooks]  # subdim x k
     half_n2 = [0.5 * np.array(n2, dtype=np.float64) for n2 in norms2]
-    m = len(codebooks)
-    kk = mats[0].shape[1] if m else 0
+    return [lambda s, b=b, h=h: s @ b - h for b, h in zip(mats, half_n2)]
+
+
+def _vector_udf(return_type: str, kernel: Callable[[np.ndarray], pa.Array]):
+    """A scalar ``arrow_udf`` applying ``kernel`` to the matrix of its
+    vector column. An empty batch maps to an empty null array, which
+    Spark casts to ``return_type``."""
+
+    @arrow_udf(return_type)
+    def udf(v: pa.Array) -> pa.Array:
+        return kernel(_matrix(v)) if len(v) else pa.nulls(0)
+
+    return udf
+
+
+def centroid_argmax(centroids: list[list[float]], norms: list[float]):
+    """``int`` UDF: the 0-based position in ``centroids`` of each
+    vector's max-cosine centroid — one (batch x dim) @ (dim x k) matmul
+    per Arrow batch instead of k interpreted ``zip_with`` dots per row.
+    The hot kernel of IVF cell assignment, k-means and SemDeDup."""
+    scoring = cosine_scoring(centroids, norms)
+
+    def cells(x: np.ndarray) -> pa.Array:
+        ((_, _, cell),) = _assign(x, scoring)
+        return pa.array(cell.astype(np.int32))
+
+    return _vector_udf("int", cells)
+
+
+def pq_encode(codebooks: list[list[list[float]]], norms2: list[list[float]]):
+    """``array<int>`` UDF: per vector, the m nearest-codeword indices
+    (one per subspace) under ``pq_scoring``."""
+    scoring = pq_scoring(codebooks, norms2)
+
+    def codes(x: np.ndarray) -> pa.Array:
+        out = np.empty((len(x), len(scoring)), dtype=np.int32)
+        for j, _, cells in _assign(x, scoring):
+            out[:, j] = cells
+        return _rows(out)
+
+    return _vector_udf("array<int>", codes)
+
+
+def partial_sums(scoring: list[Score]):
+    """``mapInArrow`` function (schema ``PARTIAL_SUMS_SCHEMA``) fusing
+    assignment with the mean update's partial sums: per Arrow batch of a
+    one-column vector relation, one ``(j, cell, n, sums)`` row per
+    non-empty (subspace, cell), ``sums`` the element-wise sum of the
+    members' subvectors. k-means passes ``cosine_scoring`` (j = 0), the
+    PQ codebook update ``pq_scoring``. Callers reduce with a
+    (j, cell, pos) aggregate and ``round(sum/n, d)``.
+
+    The sums DO leave this function: their per-batch ``np.add.at``
+    order differs from a JVM hash aggregate by ~1e-15 relative, which
+    the caller's rounding absorbs — the same contract that absorbs the
+    Spark-vs-DuckDB summation order (the residual risk is the half-step
+    boundary class every rounded float aggregate in the engine shares)."""
 
     def fn(batches):
         for b in batches:
-            if len(b) == 0:
+            if not b.num_rows:
                 continue
-            mat = np.array(b["v"].tolist(), dtype=np.float64)  # batch x dim
-            sub = mat.shape[1] // m
-            rows = {"j": [], "code": [], "n": [], "sums": []}
-            for j in range(m):
-                s = mat[:, j * sub : (j + 1) * sub]
-                idx = np.argmax(s @ mats[j] - half_n2[j], axis=1)
-                acc = np.zeros((kk, sub), dtype=np.float64)
-                np.add.at(acc, idx, s)
-                counts = np.bincount(idx, minlength=kk)
-                for c in np.flatnonzero(counts):
-                    rows["j"].append(j)
-                    rows["code"].append(int(c))
-                    rows["n"].append(int(counts[c]))
-                    rows["sums"].append(acc[c].tolist())
-            yield pd.DataFrame(rows)
+            out = {"j": [], "cell": [], "n": [], "sums": []}
+            for j, s, cells in _assign(_matrix(b.column(0)), scoring):
+                hot, n, sums = _cell_sums(s, cells)
+                out["j"].append(np.full(len(hot), j, dtype=np.int32))
+                out["cell"].append(hot.astype(np.int32))
+                out["n"].append(n.astype(np.int64))
+                out["sums"].append(sums)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.concatenate(out[c])) for c in ("j", "cell", "n")]
+                + [_rows(np.concatenate(out["sums"]))],
+                names=["j", "cell", "n", "sums"],
+            )
 
     return fn
 
 
-def lsh_bucket_strings_pandas(
+def lsh_buckets(
     n_tables: int, bits_per_table: int, dim: int, bits_stride: int | None = None
 ):
-    """Arrow-vectorized LSH bucket assignment: ``array<string>`` of
-    ``n_tables`` sign-bit bucket strings per vector.
+    """``array<string>`` UDF: the ``n_tables`` sign-bit bucket strings
+    of each vector, from ONE (batch x dim) @ (dim x planes) matmul per
+    Arrow batch. Only the SIGN of each dot is consumed (|dot| is O(1)
+    on this corpus, reorder error ~1e-13); a flipped bit would only
+    perturb candidate recall, never a verified pair.
 
-    Bucket assignment is a dense (batch x dim) @ (dim x planes) matmul —
-    exactly the shape BLAS is built for. A scalar pandas UDF moves each
-    Arrow batch into numpy once, does ONE matmul for all planes, and
-    emits bucket strings; per-row cost is ~100x below the per-plane
-    higher-order-function formulation once planes x dim grows past a few
-    hundred flops. Only the SIGN of each dot product is consumed, so the
-    accumulation-order difference between BLAS and the oracle's
-    sequential ``list_dot_product`` is irrelevant in practice (|dot| is
-    O(1) while fp reorder error is ~1e-13; the sf0.01 oracle hash-match
-    would catch any flipped bit loudly).
-
-    Caveat (platform-pinned determinism): the empirical |dot| >> error
-    margin is measured on THIS corpus/platform, not guaranteed. A dot
-    product landing within BLAS reorder error of zero could hash
-    differently than the oracle's sequential sum on another BLAS
-    build/arch. An epsilon threshold would not remove the risk (it only
-    relocates the critical surface from 0 to eps), so we keep the plain
-    sign rule and pin correctness via the oracle hash-match on the
-    platform under test. A flipped bit only perturbs LSH candidate
-    recall, never correctness of verified pairs.
+    ``bits_stride`` decouples the plane LAYOUT from the bucket WIDTH:
+    table t owns global plane indices [t*stride, (t+1)*stride) and its
+    bucket string uses the first ``bits_per_table`` of them. With
+    stride > bits, a corpus-size-derived bucket width keeps each table's
+    planes a stable prefix — widening the bucket refines existing
+    buckets instead of reshuffling every table's hyperplane set, and a
+    static oracle can truncate a stride-wide bucket string to the same
+    width.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    # ``bits_stride`` decouples the plane LAYOUT from the bucket WIDTH:
-    # table t owns global plane indices [t*stride, (t+1)*stride) and its
-    # bucket string uses the first ``bits_per_table`` of them. With
-    # stride > bits, a corpus-size-derived bucket width (auto-sized LSH)
-    # keeps each table's planes a stable prefix — widening the bucket
-    # refines existing buckets instead of reshuffling every table's
-    # hyperplane set, and a static oracle can truncate a stride-wide
-    # bucket string to the same width.
     stride = bits_per_table if bits_stride is None else bits_stride
     if stride < bits_per_table:
         raise ValueError(f"bits_stride {stride} < bits_per_table {bits_per_table}")
@@ -278,65 +250,9 @@ def lsh_bucket_strings_pandas(
     ]
     planes = np.array(used, dtype=np.float64).T  # dim x (tables*bits)
 
-    @pandas_udf("array<string>")
-    def buckets(v: pd.Series) -> pd.Series:
-        mat = np.array(v.tolist(), dtype=np.float64)  # batch x dim
-        bits = (mat @ planes) > 0  # batch x (tables*bits)
-        chars = np.where(bits, "1", "0")
-        out = []
-        for row in chars:
-            out.append(
-                [
-                    "".join(row[t * bits_per_table : (t + 1) * bits_per_table])
-                    for t in range(n_tables)
-                ]
-            )
-        return pd.Series(out)
+    def buckets(x: np.ndarray) -> pa.Array:
+        chars = np.where((x @ planes) > 0, b"1", b"0")  # batch x (tables*bits)
+        words = chars.view(f"S{bits_per_table}")  # batch x tables
+        return _rows(words).cast(pa.list_(pa.string()))
 
-    return buckets
-
-
-def pq_encode_pandas(
-    codebooks: list[list[list[float]]], norms2: list[list[float]]
-):
-    """Arrow-vectorized product-quantization encoder: per vector, the
-    ``array<int>`` of m nearest-codeword indices (one per subspace).
-
-    ``codebooks[j]`` holds subspace j's k codewords (each ``dim/m``
-    components). Per Arrow batch the encoder does m small
-    (batch x subdim) @ (subdim x k) BLAS matmuls — the same kernel
-    shape as ``centroid_argmax_pandas`` — and takes the argmin of the
-    squared L2 distance per subspace via the score form
-    ``dot(sub, c) - 0.5*||c||^2`` (argmin distance == argmax score;
-    the per-row ``||sub||^2`` term is constant across codewords and
-    never materialized).
-
-    Determinism contract (same as ``centroid_argmax_pandas``): only the
-    ARGMIN index leaves the UDF — callers that emit a distance VALUE
-    must recompute it JVM-side with the sequential dot so emitted
-    doubles match the oracle bit-for-bit. Ties break to the lowest
-    code (``np.argmax`` first occurrence), matching the oracles'
-    ``ORDER BY score DESC, code``.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    mats = [np.array(cb, dtype=np.float64).T for cb in codebooks]  # subdim x k
-    # ``norms2[j][c]`` is the SAME Python-sequential ||c||^2 literal the
-    # oracle embeds — passed in, not recomputed, so the score differs
-    # from the oracle's only by BLAS-vs-sequential dot reorder noise.
-    half_n2 = [0.5 * np.array(n2, dtype=np.float64) for n2 in norms2]
-    m = len(codebooks)
-
-    @pandas_udf("array<int>")
-    def codes(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="object")
-        mat = np.array(v.tolist(), dtype=np.float64)  # batch x dim
-        sub = mat.shape[1] // m
-        out = np.empty((len(mat), m), dtype=np.int32)
-        for j in range(m):
-            scores = mat[:, j * sub : (j + 1) * sub] @ mats[j] - half_n2[j]
-            out[:, j] = np.argmax(scores, axis=1)
-        return pd.Series(list(out))
-
-    return codes
+    return _vector_udf("array<string>", buckets)

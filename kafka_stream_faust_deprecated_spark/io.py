@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_stream_faust_deprecated_spark.schemas import BATCH_TABLES, STOCK_TICK_SCHEMA
+from kafka_stream_faust_deprecated_spark.session import cached
 
 TABLES = BATCH_TABLES
 
@@ -29,25 +30,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: Per-session memo of table DataFrames. A DataFrame here is an
-#: analyzed RELATION (schema + file listing), not data: re-reading the
-#: same immutable fixture table pays parquet footer + listing + (for
-#: the parallel variant) an RDD-conversion partition probe on EVERY
-#: query construction — ~0.2-0.4 s of py4j/driver work per call that a
-#: long-lived session (the driver runs ~50 queries in one) repays
-#: nothing for. Keyed by (session identity, app id); entries from any
-#: other session are evicted on access so a dead session's plans are
-#: never resurrected.
-_TABLE_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _memo_get(spark: SparkSession, sf_dir: str, name: str, parallel: bool):
-    sess_key = (id(spark), spark.sparkContext.applicationId)
-    for k in [k for k in _TABLE_MEMO if k[0] != sess_key]:
-        del _TABLE_MEMO[k]
-    return (sess_key, sf_dir, name, parallel), _TABLE_MEMO
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan. Schema comes from the footer; filters/projection on
     the returned DataFrame push down into this scan.
@@ -56,21 +38,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     rejects outright; we read nanos as long (legacy conf) and truncate to
     microseconds JVM-side — the same ns->us truncation DuckDB applies on
     read, so both engines see identical values.
+
+    The relation (schema + file listing, not data) is built once per
+    session: re-reading an immutable fixture table would pay parquet
+    footer + listing py4j work on every query construction.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    key, memo = _memo_get(spark, sf_dir, name, False)
-    if key in memo:
-        return memo[key]
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        df = spark.read.parquet(table_path(sf_dir, name))
-    memo[key] = df
-    return df
+
+    def build() -> DataFrame:
+        if name == "events":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            df = spark.read.parquet(table_path(sf_dir, name))
+            if dict(df.dtypes).get("ts") == "bigint":
+                df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+            return df
+        return spark.read.parquet(table_path(sf_dir, name))
+
+    return cached(spark, ("table", sf_dir, name), build)
 
 
 #: Unique(-ish) key column used by the under-split shim's hash
@@ -114,19 +99,18 @@ def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     (hash on the table's unique key, not round-robin — see SHIM_KEYS
     for the measured sort-before-repartition cost this avoids).
     """
-    key, memo = _memo_get(spark, sf_dir, name, True)
-    if key in memo:
-        return memo[key]
-    df = load_table(spark, sf_dir, name)
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
+
+    def build() -> DataFrame:
+        df = load_table(spark, sf_dir, name)
+        par = spark.sparkContext.defaultParallelism
+        if df.rdd.getNumPartitions() >= par:
+            return df
         shim_key = SHIM_KEYS.get(name)
         if shim_key is not None:
-            df = df.repartition(par, F.col(shim_key))
-        else:
-            df = df.repartition(par)
-    memo[key] = df
-    return df
+            return df.repartition(par, F.col(shim_key))
+        return df.repartition(par)
+
+    return cached(spark, ("table_parallel", sf_dir, name), build)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -21,6 +21,7 @@ from kafka_stream_faust_deprecated_spark.functions.text import (
 from kafka_stream_faust_deprecated_spark.io import load_table, load_table_parallel
 from kafka_stream_faust_deprecated_spark.queries.llm import SQL_NORM
 from kafka_stream_faust_deprecated_spark.registry import register
+from kafka_stream_faust_deprecated_spark.session import cached
 
 DSIR_TARGET_LANG = "en"
 
@@ -814,10 +815,18 @@ def source_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# k-means TRAINING loop (moved here from llm.py so the round-5 sampled
-# prefix covers it — the single-step kmeans_lloyd_step stays in llm)
+# SemDeDup and the k-means TRAINING loop (the single-step
+# kmeans_lloyd_step stays in llm)
 # ---------------------------------------------------------------------------
 
+from kafka_stream_faust_deprecated_spark.functions.vectors import (  # noqa: E402
+    PARTIAL_SUMS_SCHEMA,
+    centroid_argmax,
+    cosine_scoring,
+    partial_sums,
+    pq_encode,
+    pq_scoring,
+)
 from kafka_stream_faust_deprecated_spark.queries.llm import (  # noqa: E402
     _ANN_BITS_SQL,
     _IVF_K_SQL,
@@ -887,15 +896,12 @@ def semantic_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget and a tunable dedup rate via k and the threshold.
 
     Scale shape: cell assignment is the SAME zero-shuffle BLAS-matmul
-    argmax as ann_cosine_ivf (`centroid_argmax_pandas` — no join, no
+    argmax as ann_cosine_ivf (`centroid_argmax` — no join, no
     window over vec_id); the only exchanges are the cid-keyed self-join (cells ~
     n/k rows; k grows ~sqrt(n) via _ivf_k so per-cell pair work stays
     ~n per cell-batch, AQE splits hot cells) and the final skinny
     anti-join on vec_id. The full vectors cross the wire once per side
     of the cell join — nothing all-pairs, nothing driver-side."""
-    from kafka_stream_faust_deprecated_spark.functions.vectors import (
-        centroid_argmax_pandas,
-    )
     from kafka_stream_faust_deprecated_spark.queries.llm import (
         _SQL_DOT,
         _embeddings_count,
@@ -910,7 +916,7 @@ def semantic_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k = _ivf_k(_embeddings_count(spark, e, sf_dir))
     cents = _ivf_centroids()[:k]
-    cidx = centroid_argmax_pandas(
+    cidx = centroid_argmax(
         [comp for _, comp, _ in cents], [norm for _, _, norm in cents]
     )
     m = e.select(
@@ -950,6 +956,27 @@ def semantic_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: accumulation, so assignments stay bit-identical across iterations.
 KMEANS_TRAIN_ITERS = 3
 KMEANS_MEAN_DECIMALS = 6
+
+
+def _cell_means(vecs: DataFrame, scoring, decimals: int) -> dict[tuple[int, int], list[float]]:
+    """One mean update over a one-column vector relation: assign every
+    row's subvectors under ``scoring`` and return ``{(j, cell): means}``
+    for the non-empty cells, in (j, cell) order, each component
+    ``round(sum/n, decimals)``. The ``partial_sums`` rows are
+    (subspaces x cells x batches), so the posexplode and the
+    (j, cell, pos) aggregate run over a bounded relation, never the
+    corpus."""
+    rows = (
+        vecs.mapInArrow(partial_sums(scoring), PARTIAL_SUMS_SCHEMA)
+        .select("j", "cell", "n", F.posexplode("sums").alias("pos", "x"))
+        .groupBy("j", "cell", "pos")
+        .agg(F.round(F.sum("x") / F.sum("n"), decimals).alias("m"))
+        .collect()
+    )
+    by_cell: dict[tuple[int, int], dict[int, float]] = {}
+    for r in rows:
+        by_cell.setdefault((r["j"], r["cell"]), {})[r["pos"]] = r["m"]
+    return {jc: [d[p] for p in sorted(d)] for jc, d in sorted(by_cell.items())}
 
 
 def _kmeans_train_oracle() -> str:
@@ -1032,21 +1059,14 @@ def kmeans_train_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors keep their cid so the argmax tiebreak stays aligned with
     the oracle's ORDER BY cid.
 
-    r15 means pass (guide §4.2): the first iters-1 iterations (whose
-    ONLY output is the rounded means) fuse assignment and per-cell
-    partial sums into one Arrow pass (``centroid_partial_sums_pandas``)
-    instead of assign-project + 64-way posexplode + a corpus x dim row
-    HashAggregate; the k x partitions partial rows reduce in a tiny
-    (cidx, pos) aggregate and ``mean = round(sum/count, 6)`` — the same
-    value the old ``round(avg, 6)`` produced up to summation order,
-    which the rounding contract absorbs (see
-    centroid_partial_sums_pandas's determinism note; oracle hash-green
-    at 3 SFs). The FINAL iteration keeps the posexplode path unchanged
-    — every value the query RETURNS (mean_cos via the sequential JVM
-    winner dot, new_norm, n_members) still follows the established
-    arithmetic. A/B (interleaved, min of 5): sf0.1 2.38 -> 2.32 s, 8x
-    replica 2.40 -> 2.31 s, identical output — the remaining cost is
-    the inherent 3 sequential collect barriers.
+    The first iters-1 iterations (whose ONLY output is the rounded
+    means) fuse assignment and per-cell partial sums into one Arrow pass
+    (``vectors.partial_sums``, reduced by ``_cell_means``): ``mean =
+    round(sum/n, 6)`` equals ``round(avg, 6)`` up to summation order,
+    which the rounding contract absorbs. The FINAL iteration keeps the
+    posexplode path — every value the query RETURNS (mean_cos via the
+    sequential JVM winner dot, new_norm, n_members) follows the
+    established arithmetic.
 
     The oracle replays the identical three iterations as chained SQL
     CTEs — see KMEANS_TRAIN_ITERS for the rounding contract that keeps
@@ -1060,16 +1080,12 @@ def kmeans_train_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _ivf_centroids()[:k]
 
     def _assign(cents_now):
-        # BLAS-matmul argmax position (centroid_argmax_pandas); cells
-        # that lost all members vanish, so map position -> surviving
-        # cid via a literal lookup, and re-derive the winner's score
-        # with ONE sequential JVM dot (oracle accumulation order — the
-        # BLAS scores never leave the UDF).
-        from kafka_stream_faust_deprecated_spark.functions.vectors import (
-            centroid_argmax_pandas,
-        )
-
-        cidx = centroid_argmax_pandas(
+        # BLAS-matmul argmax position; cells that lost all members
+        # vanish, so map position -> surviving cid via a literal lookup,
+        # and re-derive the winner's score with ONE sequential JVM dot
+        # (oracle accumulation order — the BLAS scores never leave the
+        # UDF).
+        cidx = centroid_argmax(
             [comp for _, comp, _ in cents_now], [norm for _, _, norm in cents_now]
         )
         cids = "array(%s)" % ",".join(str(cid) for cid, _, _ in cents_now)
@@ -1080,38 +1096,22 @@ def kmeans_train_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     for _ in range(KMEANS_TRAIN_ITERS - 1):
-        from kafka_stream_faust_deprecated_spark.functions.vectors import (
-            centroid_partial_sums_pandas,
+        means = _cell_means(
+            e.select("v"),
+            cosine_scoring([comp for _, comp, _ in cents], [norm for _, _, norm in cents]),
+            KMEANS_MEAN_DECIMALS,
         )
-
-        partials = e.select("v").mapInPandas(
-            centroid_partial_sums_pandas(
-                [comp for _, comp, _ in cents], [norm for _, _, norm in cents]
-            ),
-            "cidx int, n long, sums array<double>",
-        )
-        # k x partitions partial rows: the posexplode + (cidx, pos) agg
-        # runs over a bounded relation, never the corpus.
-        means = (
-            partials.select("cidx", "n", F.posexplode("sums").alias("pos", "x"))
-            .groupBy("cidx", "pos")
-            .agg(F.round(F.sum("x") / F.sum("n"), KMEANS_MEAN_DECIMALS).alias("m"))
-            .collect()
-        )
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cid.setdefault(cents[r["cidx"]][0], {})[r["pos"]] = r["m"]
-        if not by_cid:
+        if not means:
             # empty corpus: no assignments, no means. Keep the previous
             # centroids — an empty literal array would not even analyze
             # — and let the final pass return its (empty) result.
             continue
-        cents = []
-        for cid, d in sorted(by_cid.items()):
-            comps = [d[p] for p in sorted(d)]
-            # sequential forward accumulation == the oracle's
-            # sqrt(list_dot_product(c, c))
-            cents.append((cid, comps, sum(c * c for c in comps) ** 0.5))
+        # sequential forward accumulation == the oracle's
+        # sqrt(list_dot_product(c, c))
+        cents = sorted(
+            (cents[cell][0], comps, sum(c * c for c in comps) ** 0.5)
+            for (_, cell), comps in means.items()
+        )
 
     cell = (
         _assign(cents)
@@ -2018,15 +2018,6 @@ PQ_K = 16
 PQ_MEAN_DECIMALS = 6
 
 
-#: Per-(session, sf_dir) memo of the trained PQ codebook — the same
-#: pattern (and eviction) as llm._SIMHASH_PAIRS_MEMO: the codebook is a
-#: deterministic pure function of the corpus, training is the one-time
-#: index-BUILD step, and repeat invocations (bench warm+measured, the
-#: driver suite) should measure the encode+ADC QUERY path, not rebuild
-#: the index. The memoized value is a few KB of Python floats.
-_PQ_BOOK_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def _pq_train(
     spark: SparkSession, e: DataFrame, sf_dir: str
 ) -> tuple[list[list[list[float]]], list[list[float]], list[list[int]]]:
@@ -2038,68 +2029,37 @@ def _pq_train(
     Driver-side state is the m x k x (dim/m) codebook (a few KB,
     independent of corpus size — the spark.ml iterative pattern, same
     as kmeans_train_3iter). Two bounded collects: the PQ_K init rows,
-    then the rounded (j, code, pos, mean) aggregate. At 100 TB the
-    mean update would run on a deterministic hash-sample of the corpus
-    rather than every row; the fixture corpus IS the sample here.
-    Memoized per (session, sf_dir) — see _PQ_BOOK_MEMO."""
-    from kafka_stream_faust_deprecated_spark.queries.llm import (
-        EMBED_DIM,
-        _evict_dead_sessions,
-    )
+    then one Lloyd mean update of all subspaces in one Arrow pass
+    (``_cell_means``). At 100 TB the mean update would run on a
+    deterministic hash-sample of the corpus rather than every row; the
+    fixture corpus IS the sample here. Built once per (session,
+    sf_dir): the codebook is a deterministic function of the corpus and
+    training is the one-time index-BUILD step, so repeat invocations
+    run only the encode+ADC query path."""
+    from kafka_stream_faust_deprecated_spark.queries.llm import EMBED_DIM
 
-    app_id = spark.sparkContext.applicationId
-    _evict_dead_sessions(_PQ_BOOK_MEMO, app_id)
-    memo_key = (app_id, sf_dir)
-    if memo_key in _PQ_BOOK_MEMO:
-        return _PQ_BOOK_MEMO[memo_key]
+    def build():
+        sub = EMBED_DIM // PQ_M
+        init_rows = e.orderBy("vec_id").limit(PQ_K).select("v").collect()
+        if not init_rows:
+            return [], [], []
+        init_books = [
+            [list(r["v"][j * sub : (j + 1) * sub]) for r in init_rows]
+            for j in range(PQ_M)
+        ]
+        init_norms2 = [[sum(x * x for x in c) for c in cb] for cb in init_books]
+        means = _cell_means(
+            e.select("v"), pq_scoring(init_books, init_norms2), PQ_MEAN_DECIMALS
+        )
+        books: list[list[list[float]]] = [[] for _ in range(PQ_M)]
+        kept: list[list[int]] = [[] for _ in range(PQ_M)]
+        for (j, code), comps in means.items():
+            books[j].append(comps)
+            kept[j].append(code)
+        norms2 = [[sum(x * x for x in c) for c in cb] for cb in books]
+        return books, norms2, kept
 
-    sub = EMBED_DIM // PQ_M
-    init_rows = e.orderBy("vec_id").limit(PQ_K).select("v").collect()
-    if not init_rows:
-        _PQ_BOOK_MEMO[memo_key] = ([], [], [])
-        return _PQ_BOOK_MEMO[memo_key]
-    init_books = [
-        [list(r["v"][j * sub : (j + 1) * sub]) for r in init_rows]
-        for j in range(PQ_M)
-    ]
-    init_norms2 = [
-        [sum(x * x for x in c) for c in cb] for cb in init_books
-    ]
-    # One Lloyd mean update, all subspaces in one pass, fused into the
-    # encode UDF (r15, guide §4.2 — the kmeans_train_3iter pattern):
-    # pq_partial_sums_pandas emits per-batch (j, code, n, subvector-sum)
-    # partials, so the old m-way struct explode + subdim posexplode +
-    # corpus x dim HashAggregate collapses to a bounded
-    # (m x k x partitions)-row reduce. round(sum/count, d) equals the
-    # old round(avg, d) up to summation order, absorbed by
-    # PQ_MEAN_DECIMALS (see centroid_partial_sums_pandas; interleaved
-    # A/B at sf0.1: 0.963 -> 0.738 s, identical 1024 rounded means).
-    from kafka_stream_faust_deprecated_spark.functions.vectors import (
-        pq_partial_sums_pandas,
-    )
-
-    partials = e.select("v").mapInPandas(
-        pq_partial_sums_pandas(init_books, init_norms2),
-        "j int, code int, n long, sums array<double>",
-    )
-    means = (
-        partials.select("j", "code", "n", F.posexplode("sums").alias("pos", "x"))
-        .groupBy("j", "code", "pos")
-        .agg(F.round(F.sum("x") / F.sum("n"), PQ_MEAN_DECIMALS).alias("m"))
-        .collect()
-    )
-    by_jc: dict[tuple[int, int], dict[int, float]] = {}
-    for r in means:
-        by_jc.setdefault((r["j"], r["code"]), {})[r["pos"]] = r["m"]
-    books: list[list[list[float]]] = [[] for _ in range(PQ_M)]
-    kept: list[list[int]] = [[] for _ in range(PQ_M)]
-    for (j, code) in sorted(by_jc):
-        d = by_jc[(j, code)]
-        books[j].append([d[p] for p in sorted(d)])
-        kept[j].append(code)
-    norms2 = [[sum(x * x for x in c) for c in cb] for cb in books]
-    _PQ_BOOK_MEMO[memo_key] = (books, norms2, kept)
-    return _PQ_BOOK_MEMO[memo_key]
+    return cached(spark, ("pq_books", sf_dir), build)
 
 
 def _pq_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2286,7 +2246,7 @@ def ann_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     * training state is the m x k x (dim/m) codebook on the driver (a
       few KB, corpus-independent — the spark.ml pattern; see
       _pq_train for the 100 TB sampling note);
-    * encoding is a zero-shuffle Arrow projection (`pq_encode_pandas`:
+    * encoding is a zero-shuffle Arrow projection (`pq_encode`:
       m small BLAS matmuls per batch; only ARGMIN indices leave the
       UDF);
     * the K-row query side computes its own LUT with pure array
@@ -2302,9 +2262,6 @@ def ann_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     In production the codes column is written once (a 100 TB corpus
     compresses to ~3 TB of codes) and every later query scans codes
     only."""
-    from kafka_stream_faust_deprecated_spark.functions.vectors import (
-        pq_encode_pandas,
-    )
     from kafka_stream_faust_deprecated_spark.queries.llm import (
         KNN_K,
         KNN_N_QUERIES,
@@ -2316,7 +2273,7 @@ def ann_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, rnk int, adc_dist double"
         )
-    enc = pq_encode_pandas(books, norms2)
+    enc = pq_encode(books, norms2)
     codes = e.select("vec_id", enc("v").alias("c"))
 
     lut = _pq_lut_df(
@@ -2756,7 +2713,7 @@ def ann_cosine_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape — every piece reuses an already-verified machine:
     * ONE corpus scan computes cell id (BLAS argmax,
-      `centroid_argmax_pandas`) AND PQ codes (`pq_encode_pandas`) in
+      `centroid_argmax`) AND PQ codes (`pq_encode`) in
       the same zero-shuffle projection;
     * probe cells come from the K-row query side's score array (sort +
       slice + explode — no corpus-side rank), each probe row carrying
@@ -2769,10 +2726,6 @@ def ann_cosine_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank is scale-invariant, so cells match ann_cosine_ivf's index
     exactly while the codes stay cosine-faithful (see ann_cosine_pq).
     """
-    from kafka_stream_faust_deprecated_spark.functions.vectors import (
-        centroid_argmax_pandas,
-        pq_encode_pandas,
-    )
     from kafka_stream_faust_deprecated_spark.queries.llm import (
         KNN_K,
         KNN_N_QUERIES,
@@ -2793,10 +2746,10 @@ def ann_cosine_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _ivf_k(_embeddings_count(spark, e, sf_dir))
     nprobe = _ivf_nprobe(k)
     cents = _ivf_centroids()[:k]
-    cidx = centroid_argmax_pandas(
+    cidx = centroid_argmax(
         [comp for _, comp, _ in cents], [norm for _, _, norm in cents]
     )
-    enc = pq_encode_pandas(books, norms2)
+    enc = pq_encode(books, norms2)
     assign = e.select(
         "vec_id", cidx("v").alias("cid"), enc("v").alias("c")
     )

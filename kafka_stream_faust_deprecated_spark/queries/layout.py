@@ -690,89 +690,62 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Single-pass Gram form: because w = X^T(Xv) = (X^T X)v exactly (in
     real arithmetic), the corpus is scanned ONCE to build the dim x dim
-    Gram matrix G — one X^T X BLAS matmul per Arrow batch emitting a
-    per-partition partial Gram, reduced by a (j, k)-keyed aggregate to
-    dim^2 sums (r14: this replaced a posexplode + 64-aggregate JVM
-    HashAggregate whose 4096-multiply row expression ran interpreted;
-    see the inline note) — and all
-    {PCA_ITERS} iterations are O(dim^2) driver-side matvecs over the
-    collected G. (The r7 bench carried an unexplained 1.5x regression on
-    the per-iteration-scan form; isolated re-time confirmed ~0.8 s of
-    fixed per-job launch+exchange overhead x 3 sequential jobs, which
-    this fuses into one.) Cross-engine determinism via the repo's
-    rounding contract, hardened per the r8 advice: G's entries are
-    rounded to {PCA_G_DECIMALS} decimals ON BOTH SIDES (the oracle now
-    builds the same rounded Gram CTE instead of replaying per-iteration
-    row sums), so the iteration chain consumes bit-identical inputs in
-    both engines; the matvec result and the normalized vector are then
-    rounded to 6 decimals each iteration (driver-side with the same
-    floor(x*s+0.5)/s rule — not Python banker's rounding), closing the
-    summation-order flake the old different-spelling oracle carried.
+    Gram matrix G — one X^T X BLAS matmul per Arrow batch
+    (``mapInArrow``) emitting a per-partition partial Gram, reduced by a
+    (j, k)-keyed aggregate to dim^2 sums — and all {PCA_ITERS}
+    iterations are O(dim^2) driver-side matvecs over the collected G.
+    Cross-engine determinism via the repo's rounding contract: G's
+    entries are rounded to {PCA_G_DECIMALS} decimals ON BOTH SIDES (the
+    oracle builds the same rounded Gram CTE), so the iteration chain
+    consumes bit-identical inputs in both engines; the matvec result and
+    the normalized vector are then rounded to 6 decimals each iteration
+    (driver-side with the same floor(x*s+0.5)/s rule — not Python
+    banker's rounding).
 
-    100 TB shape: ONE corpus scan total (previously one per iteration);
+    100 TB shape: ONE corpus scan total;
     driver state is the O(dim^2) Gram matrix (64 KB at dim 64 — bounded
     by the embedding width, not the corpus); the corpus never shuffles
     (the 64-key partial agg moves 64 x 64 sums per partition).
     """
     import math as _math
 
-    from kafka_stream_faust_deprecated_spark.queries.llm import EMBED_DIM
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from kafka_stream_faust_deprecated_spark.functions.vectors import _matrix
+    from kafka_stream_faust_deprecated_spark.queries.llm import EMBED_DIM
 
     e = load_table_parallel(spark, sf_dir, "embeddings").select(
         F.col("embedding").alias("x")
     )
     dim = EMBED_DIM
 
-    # r14 optimization (guide §4.2 "do the heavy lifting in native code"):
-    # the Gram pass previously ran as a posexplode + 64-aggregate JVM
-    # HashAggregate whose row expression tree was dim x dim = 4096
-    # array-index multiplies per input row — far past whole-stage
-    # codegen's limits, i.e. interpreted. One X^T X BLAS matmul per
-    # Arrow batch computes the same partial sums (measured in-session
-    # A/B at sf0.1: 1.89 -> 0.90 s min, identical output), and the
-    # per-partition partials reduce through a (j, k)-keyed aggregate.
-    # Determinism: BLAS accumulation order differs from the sequential
-    # JVM sum by ~1e-12 relative — absorbed by the SAME
-    # PCA_G_DECIMALS=4 rounding that already absorbs the Spark-vs-DuckDB
-    # order difference (the centroid_argmax_pandas contract; the
-    # iteration chain then consumes bit-identical rounded G in both
-    # engines, pinned by the sf0.001/0.01/0.1 oracle hash-matches).
-    # Boundary-flake adjudication (r15 advice): the residual risk is a
-    # true G-cell sum lying within ~1e-12 relative of a .00005
-    # half-step, where the rounded cell — and through the driver-side
-    # power iteration, the whole output — could flip between runs or
-    # partition layouts. This is the SAME half-step class every rounded
-    # float aggregate in the engine carries (kmeans means, ticker
-    # moments); it was not introduced by the BLAS rewrite — the r13
-    # HashAggregate's merge order was already partition-dependent. If a
-    # future fixture ever hash-flakes here, the adjudication is: rerun
-    # at the same SF — a layout-dependent flip (not a logic bug)
-    # reproduces only intermittently; the fix is raising the guard
-    # precision (round partials at 1e-8 before the final 1e-4 round),
-    # NOT loosening the oracle contract.
+    # Determinism: BLAS accumulation order differs from a sequential
+    # sum by ~1e-12 relative, absorbed by the PCA_G_DECIMALS rounding
+    # that already absorbs the Spark-vs-DuckDB order difference. The
+    # residual risk is a true G-cell sum within ~1e-12 relative of a
+    # .00005 half-step, where the rounded cell (and through the power
+    # iteration, the whole output) can flip between partition layouts —
+    # the half-step class every rounded float aggregate in the engine
+    # carries. The fix for such a flip is more guard precision (round
+    # partials at 1e-8 before the final 1e-4 round), never a looser
+    # oracle contract.
     def _gram_parts(batches):
         acc = np.zeros((dim, dim), dtype=np.float64)
         seen = False
-        for pdf in batches:
-            if len(pdf):
-                X = np.array(pdf["x"].tolist(), dtype=np.float64)
+        for b in batches:
+            if b.num_rows:
+                X = _matrix(b.column(0))
                 acc += X.T @ X
                 seen = True
         if seen:
-            j, k = np.meshgrid(np.arange(dim), np.arange(dim), indexing="ij")
-            yield pd.DataFrame(
-                {
-                    "j": j.ravel().astype("int32"),
-                    "k": k.ravel().astype("int32"),
-                    "v": acc.ravel(),
-                }
+            j, k = np.divmod(np.arange(dim * dim, dtype=np.int32), dim)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(j), pa.array(k), pa.array(acc.ravel())], names=["j", "k", "v"]
             )
 
     g_rows = (
-        e.mapInPandas(_gram_parts, schema="j int, k int, v double")
+        e.mapInArrow(_gram_parts, schema="j int, k int, v double")
         .groupBy("j", "k")
         .agg(round_det(F.sum("v"), PCA_G_DECIMALS).alias("g"))
         .collect()

@@ -31,7 +31,7 @@ Scale design (100 TB), per operator family:
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import cache, reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,15 +52,16 @@ from kafka_stream_faust_deprecated_spark.functions.text import (
     word_shingles,
 )
 from kafka_stream_faust_deprecated_spark.functions.vectors import (
-    centroid_argmax_pandas,
+    centroid_argmax,
     cosine,
     dot,
-    lsh_bucket_strings_pandas,
+    lsh_buckets,
     lsh_hyperplanes,
 )
 from kafka_stream_faust_deprecated_spark.functions.rounding import round_det
 from kafka_stream_faust_deprecated_spark.io import load_table, load_table_parallel
 from kafka_stream_faust_deprecated_spark.registry import register
+from kafka_stream_faust_deprecated_spark.session import cached
 
 # ---------------------------------------------------------------------------
 # Shared building blocks (Spark side + the mirrored DuckDB CTE strings)
@@ -827,7 +828,7 @@ KNN_N_QUERIES = 5
 #: Plane layout is bits-INDEPENDENT: table t owns the stride block of
 #: global plane indices [t*ANN_BITS_MAX, (t+1)*ANN_BITS_MAX) and a
 #: width-``bits`` bucket uses the block's first ``bits`` planes
-#: (functions/vectors.py:lsh_bucket_strings_pandas bits_stride). The
+#: (functions/vectors.py:lsh_buckets bits_stride). The
 #: oracle therefore embeds the full ANN_BITS_MAX-wide bucket string as
 #: literals once and truncates with substr(.., 1, bits) where bits is
 #: computed from count(*) IN SQL — one static oracle stays value-exact
@@ -845,36 +846,14 @@ def _ann_bits(n: int) -> int:
     return min(ANN_BITS_MAX, max(ANN_BITS_MIN, math.ceil(math.log2(max(2, n))) + 2))
 
 
-#: Corpus row counts per (session, sf_dir) — one cheap count job each
-#: (a full count unless parquet aggregate pushdown is on; "cheap" means
-#: column-pruned, not free). The plan-build sizing reads them on every
-#: invocation, so repeated calls (bench warm+measured runs, the driver's
-#: suite) shouldn't re-pay the job. Deterministic for a fixed sf_dir:
-#: the fixture tables are immutable inputs.
-_COUNT_MEMO: dict[tuple[str, str], int] = {}
-
-
-def _evict_dead_sessions(memo: dict, app_id: str) -> None:
-    """Drop memo entries from other Spark applications. In a long-lived
-    process spanning several sessions (pytest, notebooks) stale entries
-    would otherwise accumulate forever — and for the pair memo each one
-    pins a dead session's localCheckpoint DataFrame reference."""
-    for k in [k for k in memo if k[0] != app_id]:
-        del memo[k]
-
-
 def _table_count(
     spark: SparkSession, df: DataFrame, sf_dir: str, table: str
 ) -> int:
-    """Session-memoized row count of a fixture table — index sizing
-    (ANN bits, IVF k, boilerplate thresholds) reads it once per
-    (session, sf_dir, table), not once per query construction."""
-    app_id = spark.sparkContext.applicationId
-    _evict_dead_sessions(_COUNT_MEMO, app_id)
-    key = (app_id, f"{sf_dir}::{table}")
-    if key not in _COUNT_MEMO:
-        _COUNT_MEMO[key] = df.count()
-    return _COUNT_MEMO[key]
+    """Row count of a fixture table, one count job per (session, sf_dir,
+    table): index sizing (ANN bits, IVF k, boilerplate thresholds) reads
+    it on every query construction, and the fixture tables are
+    immutable inputs."""
+    return cached(spark, ("count", sf_dir, table), df.count)
 
 
 def _embeddings_count(spark: SparkSession, df: DataFrame, sf_dir: str) -> int:
@@ -944,7 +923,7 @@ def _bucket_sql() -> str:
     md5-literal hyperplanes).
 
     Emits the FULL ANN_BITS_MAX-wide bucket per table (stride plane
-    layout, matching lsh_bucket_strings_pandas(bits_stride=ANN_BITS_MAX))
+    layout, matching lsh_buckets(bits_stride=ANN_BITS_MAX))
     and truncates to the corpus-derived width via the ``nb`` CTE the
     caller must provide (``nb(bits)``) — so one static SQL string is
     bit-identical to the auto-sized Spark plan at any scale factor."""
@@ -1027,7 +1006,7 @@ def ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ``count(*)`` in SQL.
 
     Scale shape (100 TB): bucket assignment is ONE Arrow-batched numpy
-    matmul per partition (functions/vectors.py:lsh_bucket_strings_pandas)
+    matmul per partition (functions/vectors.py:lsh_buckets)
     — the per-row O(tables x bits x dim) flops live in BLAS, not in an
     interpreted lambda; (t, bucket) is the shuffle key and the probe
     expansion happens on the tiny broadcast query side, so candidate
@@ -1041,7 +1020,7 @@ def ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").alias("v")
     )
     bits = _ann_bits(_embeddings_count(spark, e, sf_dir))
-    bucket_udf = lsh_bucket_strings_pandas(
+    bucket_udf = lsh_buckets(
         ANN_TABLES, bits, EMBED_DIM, bits_stride=ANN_BITS_MAX
     )
     b = e.select(
@@ -1189,21 +1168,15 @@ _SQL_DOT = (
     " 0.0D, (acc, x) -> acc + x)"
 )
 
-#: Parsed-Column memo for the SQL-text expressions below. Two reasons,
-#: both measured: (1) building these expressions with the Column API
-#: costs ~1500 py4j round-trips per query construction (each lambda /
-#: arithmetic op is a gateway call; ~1.4 s on a loaded box — more than
-#: the query's execution); one ``F.expr`` parse is a single call.
-#: (2) The parsed Column is an unbound Catalyst expression, safe to
-#: share across plans and sessions in the same JVM, so repeat
-#: invocations (bench warm+measured, the driver suite) pay zero calls.
-_EXPR_MEMO: dict[str, Column] = {}
-
-
+@cache
 def _memo_expr(sql: str) -> Column:
-    if sql not in _EXPR_MEMO:
-        _EXPR_MEMO[sql] = F.expr(sql)
-    return _EXPR_MEMO[sql]
+    """``F.expr(sql)``, parsed once per process. Building these
+    expressions with the Column API costs ~1500 py4j round-trips per
+    query construction (each lambda / arithmetic op is a gateway call);
+    one ``F.expr`` parse is a single call, and the parsed Column is an
+    unbound Catalyst expression, safe to share across plans and
+    sessions in the same JVM."""
+    return F.expr(sql)
 
 
 def _sql_norm_of(vname: str) -> str:
@@ -1251,7 +1224,7 @@ def _winner_score_sql(
     """SQL text for the WINNING centroid's cosine, recomputed with the
     sequential JVM dot against the literal centroid matrix indexed by
     ``idx_col`` (the 0-based position returned by
-    ``centroid_argmax_pandas``).
+    ``centroid_argmax``).
 
     Output score values must match the oracle's sequential
     ``list_dot_product`` accumulation bit-for-bit, so the BLAS path can
@@ -1318,12 +1291,9 @@ def ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys an exchange:
     * cell assignment is a zero-shuffle argmax projection: one Arrow
       batch -> one (batch x dim) @ (dim x k) BLAS matmul
-      (`centroid_argmax_pandas`, the centroid matrix a closure
-      constant) — round 5's interpreted `transform` HOF had the same
-      plan shape but paid k x dim interpreter steps per row (the
-      round-4 plan before it broadcast-joined centroids into an n*k
-      fan-out ranked by a `row_number over partitionBy(vec_id)`
-      shuffle); only the argmax leaves the UDF, so every EMITTED
+      (`centroid_argmax`, the centroid matrix a closure constant)
+      instead of k x dim interpreter steps per row in a `transform`
+      HOF; only the argmax leaves the UDF, so every EMITTED
       cosine still uses the oracle's sequential accumulation;
     * the top-nprobe probe cells are computed only on the K-row query
       side with pure array ops (score array -> sort_array of
@@ -1348,7 +1318,7 @@ def ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Corpus-side cell assignment: BLAS matmul argmax (cid == position,
     # centroid cids are 0..k-1). The per-vector norm is hoisted here so
     # candidate scoring later costs ONE sequential dot per pair.
-    cidx = centroid_argmax_pandas(
+    cidx = centroid_argmax(
         [comp for _, comp, _ in cents], [norm for _, _, norm in cents]
     )
     assign = e.select(
@@ -1438,7 +1408,7 @@ def neardup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table_parallel(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").alias("v")
     )
-    bucket_udf = lsh_bucket_strings_pandas(
+    bucket_udf = lsh_buckets(
         ANN_TABLES,
         _ann_bits(_embeddings_count(spark, e, sf_dir)),
         EMBED_DIM,
@@ -2090,17 +2060,12 @@ def kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape — the iterated kernel of IVF index builds and embedding-
     space dedup/diversity analysis at 100 TB:
     * assignment: one (batch x dim) @ (dim x k) BLAS matmul per Arrow
-      batch (`centroid_argmax_pandas`; centroid matrix is a closure
+      batch (`centroid_argmax`; centroid matrix is a closure
       constant) — zero shuffle, zero per-row fan-out; only the argmax
       leaves the UDF, and the winner's cosine `s` (which feeds the
       EMITTED mean_cos) is re-derived with ONE sequential JVM dot
       against the literal centroid matrix, so values keep the oracle's
-      accumulation order (the round-4 plan broadcast-joined the
-      centroids into n*k rows carrying the full vector and ranked them
-      with a `row_number() over partitionBy(vec_id)` shuffle, executed
-      twice — O(n*k*dim) bytes over the wire at 1B vectors; round 5's
-      interpreted `transform` HOF fixed the shape but paid k x dim
-      interpreter steps per row);
+      accumulation order;
     * recompute: ONE pass — posexplode to (cid, pos, x) carrying the
       assignment cosine, partial->final agg keyed on (cid, pos) (the
       shuffle carries O(k * dim) pre-combined rows per map task, NOT
@@ -2115,7 +2080,7 @@ def kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k = _ivf_k(_embeddings_count(spark, e, sf_dir))
     cents = _ivf_centroids()[:k]
-    cidx = centroid_argmax_pandas(
+    cidx = centroid_argmax(
         [comp for _, comp, _ in cents], [norm for _, _, norm in cents]
     )
     assign = e.select(
@@ -2173,28 +2138,19 @@ FROM comp
 """
 
 
-#: Per-(session, sf_dir) memo of the SimHash candidate-pair list.
-#: ``neardup_simhash`` and ``dedup_connected_components`` both consume
-#: the same deterministic pair set; without sharing, a suite that runs
-#: both (the bench, the driver) pays for fingerprint+banding twice and
-#: the CC timing measures simhash, not clustering. The memoized value is
-#: an EAGER localCheckpoint (materialized, lineage-free, a few KB of
-#: (da, db) longs), so reuse is a cache hit, not a recompute; keyed by
-#: applicationId so a new session can never see a dead session's RDD.
-_SIMHASH_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    _evict_dead_sessions(_SIMHASH_PAIRS_MEMO, app_id)
-    key = (app_id, sf_dir)
-    if key not in _SIMHASH_PAIRS_MEMO:
-        _SIMHASH_PAIRS_MEMO[key] = (
-            neardup_simhash(spark, sf_dir)
-            .select("da", "db")
-            .localCheckpoint(eager=True)
-        )
-    return _SIMHASH_PAIRS_MEMO[key]
+    """The SimHash candidate-pair list, built once per (session,
+    sf_dir). ``neardup_simhash`` and ``dedup_connected_components`` (and
+    the curation queries) consume the same deterministic pair set;
+    without sharing, a suite that runs both pays for fingerprint+banding
+    twice. The value is an EAGER localCheckpoint (materialized,
+    lineage-free, a few KB of (da, db) longs), so reuse is a cache hit,
+    not a recompute."""
+    return cached(
+        spark,
+        ("simhash_pairs", sf_dir),
+        lambda: neardup_simhash(spark, sf_dir).select("da", "db").localCheckpoint(eager=True),
+    )
 
 
 @register("dedup_connected_components", oracle=_cc_oracle(), tags=("E23",))

@@ -205,3 +205,19 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: ``cached``'s entries, keyed by ((id(session), applicationId), key).
+_CACHE: dict[tuple, object] = {}
+
+
+def cached(spark: SparkSession, key: tuple, build):
+    """``build()``, computed once per session and ``key``. A
+    ``spark.newSession()`` builds its own entries, and entries from any
+    other session (a stopped one included) are dropped on access."""
+    owner = (id(spark), spark.sparkContext.applicationId)
+    for k in [k for k in _CACHE if k[0] != owner]:
+        del _CACHE[k]
+    if (owner, key) not in _CACHE:
+        _CACHE[owner, key] = build()
+    return _CACHE[owner, key]

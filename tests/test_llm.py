@@ -743,81 +743,94 @@ def test_kmeans_training_improves_objective(spark):
     assert three > one + 0.05, (one, three)
 
 
-def test_centroid_partial_sums_match_naive_assignment():
-    """The fused Arrow assign+partial-sums kernel (r15 kmeans means
-    pass) must produce exactly the per-cell counts and element-wise
-    member sums of a naive per-row nearest-centroid assignment — the
-    quantity the old posexplode + avg aggregate computed."""
+@pytest.mark.parametrize("scoring", ["centroid", "pq"])
+def test_partial_sums_match_naive_assignment(scoring):
+    """The fused Arrow assign + partial-sums kernel must produce exactly
+    the per-(subspace, cell) counts and element-wise member sums of a
+    naive per-row assignment — under k-means' cosine scoring (one
+    subspace) and PQ's codebook scoring (m subspaces) — and skip an
+    empty Arrow batch."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from kafka_stream_faust_deprecated_spark.functions.vectors import (
-        centroid_partial_sums_pandas,
+        cosine_scoring,
+        partial_sums,
+        pq_scoring,
     )
 
-    rng = np.random.default_rng(7)
-    dim, k, n = 5, 3, 64
-    cents = rng.normal(size=(k, dim)).tolist()
-    norms = [float(np.linalg.norm(c)) for c in cents]
-    vecs = rng.normal(size=(n, dim))
+    if scoring == "centroid":
+        rng = np.random.default_rng(7)
+        dim, k, n = 5, 3, 64
+        cents = rng.normal(size=(k, dim)).tolist()
+        norms = [float(np.linalg.norm(c)) for c in cents]
+        vecs = rng.normal(size=(n, dim))
+        m, sub, split = 1, dim, 40
+        fn = partial_sums(cosine_scoring(cents, norms))
+        want_idx = [np.argmax((vecs @ np.array(cents).T) / np.array(norms), axis=1)]
+    else:
+        rng = np.random.default_rng(11)
+        m, k, sub, n = 4, 5, 3, 48
+        books = rng.normal(size=(m, k, sub)).tolist()
+        norms2 = [[float(np.dot(c, c)) for c in cb] for cb in books]
+        vecs = rng.normal(size=(n, m * sub))
+        split = 30
+        fn = partial_sums(pq_scoring(books, norms2))
+        want_idx = [
+            np.argmax(
+                vecs[:, j * sub : (j + 1) * sub] @ np.array(books[j]).T
+                - 0.5 * np.array(norms2[j]),
+                axis=1,
+            )
+            for j in range(m)
+        ]
 
-    fn = centroid_partial_sums_pandas(cents, norms)
-    batches = [
-        pd.DataFrame({"v": list(vecs[:40])}),
-        pd.DataFrame({"v": list(vecs[40:])}),
-        pd.DataFrame({"v": []}),  # empty Arrow batch must not crash
-    ]
-    got_n = np.zeros(k)
-    got_sums = np.zeros((k, dim))
-    for out in fn(iter(batches)):
-        for _, r in out.iterrows():
-            got_n[r["cidx"]] += r["n"]
-            got_sums[r["cidx"]] += np.array(r["sums"])
+    def batch(rows):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(list(rows), type=pa.list_(pa.float64()))], ["v"]
+        )
 
-    mat_c = np.array(cents).T
-    idx = np.argmax((vecs @ mat_c) / np.array(norms), axis=1)
-    want_n = np.bincount(idx, minlength=k)
-    want_sums = np.zeros((k, dim))
-    np.add.at(want_sums, idx, vecs)
-
-    assert (got_n == want_n).all(), (got_n, want_n)
-    assert np.allclose(got_sums, want_sums, rtol=0, atol=1e-12)
-
-
-def test_pq_partial_sums_match_naive_encoding():
-    """The fused PQ encode+partial-sums kernel (r15 _pq_train means
-    pass) must produce exactly the per-(subspace, codeword) counts and
-    subvector sums of a naive pq_encode_pandas assignment."""
-    import numpy as np
-    import pandas as pd
-
-    from kafka_stream_faust_deprecated_spark.functions.vectors import (
-        pq_partial_sums_pandas,
-    )
-
-    rng = np.random.default_rng(11)
-    m, k, sub, n = 4, 5, 3, 48
-    books = rng.normal(size=(m, k, sub)).tolist()
-    norms2 = [[float(np.dot(c, c)) for c in cb] for cb in books]
-    vecs = rng.normal(size=(n, m * sub))
-
-    fn = pq_partial_sums_pandas(books, norms2)
     got_n = np.zeros((m, k))
     got_sums = np.zeros((m, k, sub))
-    batches = [pd.DataFrame({"v": list(vecs[:30])}), pd.DataFrame({"v": list(vecs[30:])})]
-    for out in fn(iter(batches)):
-        for _, r in out.iterrows():
-            got_n[r["j"], r["code"]] += r["n"]
-            got_sums[r["j"], r["code"]] += np.array(r["sums"])
+    for out in fn(iter([batch(vecs[:split]), batch(vecs[split:]), batch([])])):
+        for r in out.to_pylist():
+            got_n[r["j"], r["cell"]] += r["n"]
+            got_sums[r["j"], r["cell"]] += np.array(r["sums"])
 
     for j in range(m):
         s = vecs[:, j * sub : (j + 1) * sub]
-        idx = np.argmax(s @ np.array(books[j]).T - 0.5 * np.array(norms2[j]), axis=1)
-        want_n = np.bincount(idx, minlength=k)
+        want_n = np.bincount(want_idx[j], minlength=k)
         want_sums = np.zeros((k, sub))
-        np.add.at(want_sums, idx, s)
-        assert (got_n[j] == want_n).all(), j
+        np.add.at(want_sums, want_idx[j], s)
+        assert (got_n[j] == want_n).all(), (j, got_n[j], want_n)
         assert np.allclose(got_sums[j], want_sums, rtol=0, atol=1e-12), j
+
+
+def test_matrix_reads_arrow_vectors_and_rejects_bad_rows():
+    """``vectors._matrix``: a sliced array (offset != 0, where
+    ``.values`` would start at the parent's first row) reads as exactly
+    its own rows; an empty array reads as a (0, 0) matrix; a null row
+    or a ragged row is a ValueError, not a numpy error deep in a
+    matmul."""
+    import numpy as np
+    import pyarrow as pa
+
+    from kafka_stream_faust_deprecated_spark.functions.vectors import _matrix
+
+    vecs = np.arange(12, dtype=np.float32).reshape(4, 3)
+    sliced = pa.array(list(vecs), type=pa.list_(pa.float32())).slice(1, 2)
+    assert sliced.offset == 1
+    assert sliced.values.to_numpy()[:3].tolist() == vecs[0].tolist()
+    got = _matrix(sliced)
+    assert got.dtype == np.float64 and got.flags["C_CONTIGUOUS"]
+    assert np.array_equal(got, vecs[1:3].astype(np.float64))
+
+    assert _matrix(pa.array([], type=pa.list_(pa.float64()))).shape == (0, 0)
+
+    with pytest.raises(ValueError, match="null"):
+        _matrix(pa.array([[1.0, 2.0], None]))
+    with pytest.raises(ValueError, match="ragged"):
+        _matrix(pa.array([[1.0, 2.0], [3.0]]))
 
 
 def test_source_overlap_surfaces_planted_redundancy(spark):
