@@ -52,19 +52,25 @@ def _local_cpus() -> int:
         return 32
 
 
-#: Spark's two built-in streaming state store backends (SURVEY.md M6).
-#: The HDFS-backed default keeps every key in executor heap — fine for the
-#: reference's 3-symbol state, a hard cap at 100 TB keyspaces. RocksDB
-#: spills state to local SSD with an off-heap block cache and changelog
-#: checkpointing, so state scales with disk, not heap. RocksDB ships in
-#: the Spark distribution (rocksdbjni is bundled); no extra jars needed.
+#: Spark's two built-in streaming state store backends (SURVEY.md M6),
+#: each as the confs that select it. The HDFS-backed provider keeps every
+#: key in executor heap — fine for the reference's 3-symbol state, a hard
+#: cap at 100 TB keyspaces. RocksDB spills state to local SSD with an
+#: off-heap block cache, and changelog checkpointing makes a batch's
+#: checkpoint the delta, not a full SST upload; it ships in the Spark
+#: distribution (rocksdbjni is bundled). ``get_spark`` starts every session
+#: on ``rocksdb``; ``configure_state_store`` or ``extra_conf`` selects
+#: ``hdfs``.
 STATE_STORE_PROVIDERS = {
-    "hdfs": (
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    ),
-    "rocksdb": (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    ),
+    "hdfs": {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    },
+    "rocksdb": {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    },
 }
 
 
@@ -76,10 +82,9 @@ def configure_state_store(
     so already-running queries are unaffected — and a query restarted from
     an existing checkpoint must keep the backend it was created with).
 
-    ``backend`` is ``"hdfs"`` (executor-heap state, Spark's default) or
-    ``"rocksdb"`` (disk-backed state, the 100 TB choice). RocksDB also gets
-    changelog checkpointing so per-batch checkpoint cost is the delta, not
-    a full SST upload.
+    ``backend`` is a key of ``STATE_STORE_PROVIDERS``: ``"hdfs"``
+    (executor-heap state, Spark's default) or ``"rocksdb"`` (disk-backed
+    state, the 100 TB choice and the engine's default).
 
     ``track_rows=False`` additionally disables RocksDB's
     ``trackTotalNumberOfRows`` — Spark's documented write-path perf knob
@@ -89,13 +94,9 @@ def configure_state_store(
     the state-eviction tests read; flip it per deployment when no
     dashboard consumes state row counts.
     """
-    provider = STATE_STORE_PROVIDERS[backend]
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
+    for k, v in STATE_STORE_PROVIDERS[backend].items():
+        spark.conf.set(k, v)
     if backend == "rocksdb":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
         spark.conf.set(
             "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
             "true" if track_rows else "false",
@@ -146,20 +147,10 @@ def get_spark(
         # even at 100 TB fact scale; 64 MB keeps them broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
-        # Streaming state backend (SURVEY.md M6): default to RocksDB so
-        # streaming state scales with executor disk instead of heap; set
-        # SPARK_GRAFT_STATE_STORE=hdfs to fall back to Spark's in-heap
-        # default. Both variants are golden-tested (tests/test_streaming_sma.py).
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            STATE_STORE_PROVIDERS[
-                os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb")
-            ],
-        )
-        .config(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
+        # Streaming state backend (SURVEY.md M6): RocksDB, so streaming
+        # state scales with executor disk instead of heap. Both providers
+        # are golden-tested (tests/test_streaming_sma.py).
+        .config(map=STATE_STORE_PROVIDERS["rocksdb"])
     )
 
     if "SPARK_LOCAL_MASTER" not in os.environ and not os.environ.get("MASTER"):

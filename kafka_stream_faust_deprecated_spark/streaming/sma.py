@@ -18,6 +18,12 @@ aggregation replaces the incremental-combiner variants (S24/S25); and
 per-key incremental state replaces the reference's O(all symbols) scan
 per tick (SURVEY §4) — per-batch cost is O(keys with new data).
 
+This is the engine's one SMA path: the Kafka job (``build_kafka_sma_job``),
+the file job (``build_file_sma_query``), ``bench.py`` and perfbench's
+``sma_stream`` all run ``sma_aggregate``. Its output is pinned against a
+plain-Python golden (tests/test_streaming_sma.py), and its checkpoint
+restart and state eviction by tests/test_streaming_stateful.py.
+
 Deliberate, documented deviations from the reference (SURVEY §7 watchlist):
 * event-time watermark *finalization* instead of the reference's hybrid
   processing-time-vs-event-time eviction (ma_agg.py:51-55). The
@@ -51,15 +57,18 @@ from kafka_stream_faust_deprecated_spark.io import file_tick_source, kafka_sink,
 #: The literal output tag (faust_app/ma_agg.py:66).
 MA_TYPE_TAG = "5_MA_data"
 
+#: The reference's window (ma_agg.py:54-57): 5 one-second slots, sliding
+#: by one second, emitted only when all 5 are present. The four values are
+#: coupled: ``REQUIRED_COUNT`` means "every second present" only while it
+#: equals ``WINDOW_SIZE / SLIDE`` (dedup keeps one row per second).
+WINDOW_SIZE = "5 seconds"
+SLIDE = "1 second"
+REQUIRED_COUNT = 5
+#: Event-time delay before a window finalizes and its state is evicted.
+WATERMARK = "5 seconds"
 
-def sma_aggregate(
-    ticks: DataFrame,
-    window_size: str = "5 seconds",
-    slide: str = "1 second",
-    watermark: str = "5 seconds",
-    required_count: int = 5,
-    current_time_col: Column | None = None,
-) -> DataFrame:
+
+def sma_aggregate(ticks: DataFrame, current_time_col: Column | None = None) -> DataFrame:
     """S3-S21 as one declarative transformation; works on streaming AND
     batch tick DataFrames (column ``ts`` must be a timestamp).
 
@@ -71,7 +80,7 @@ def sma_aggregate(
     # metadata). S5 — at most one record per (symbol, second).
     ticks = ticks.withColumn("sec", F.date_trunc("second", F.col("ts")))
     if ticks.isStreaming:
-        ticks = ticks.withWatermark("sec", watermark)  # S21 state eviction
+        ticks = ticks.withWatermark("sec", WATERMARK)  # S21 state eviction
     deduped = ticks.dropDuplicates(["symbol", "sec"])
 
     size_ok = F.col("size_per_sec") != 0  # S9/S10 filter (ma_agg.py:58-59)
@@ -79,7 +88,7 @@ def sma_aggregate(
 
     agg = (
         deduped.groupBy(
-            F.window(F.col("sec"), window_size, slide).alias("win"),  # S6/S22
+            F.window(F.col("sec"), WINDOW_SIZE, SLIDE).alias("win"),  # S6/S22
             F.col("symbol"),  # S3 — the only shuffle key
         )
         .agg(
@@ -92,7 +101,7 @@ def sma_aggregate(
             F.max("sec").alias("end_ts"),  # not the aligned boundary
             F.first("type").alias("type"),  # S14 (ma_agg.py:65)
         )
-        .where(F.col("window_data_count") == required_count)  # S8 (ma_agg.py:57)
+        .where(F.col("window_data_count") == REQUIRED_COUNT)  # S8 (ma_agg.py:57)
     )
 
     iso = "yyyy-MM-dd'T'HH:mm:ssXXX"  # S19 — the reference's isoformat edge
@@ -144,19 +153,17 @@ def build_file_sma_query(
     src_dir: str,
     checkpoint_dir: str,
     query_name: str = "sma_test",
-    available_now: bool = True,
 ):
     """Deterministic test path: NDJSON files -> SMA -> memory sink.
     ``availableNow`` drains all files (respecting maxFilesPerTrigger=1,
     oldest mtime first) then stops."""
     ticks = file_tick_source(spark, src_dir, max_files_per_trigger=1)
-    out = sma_aggregate(ticks)
-    writer = (
-        out.writeStream.format("memory")
+    return (
+        sma_aggregate(ticks)
+        .writeStream.format("memory")
         .queryName(query_name)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

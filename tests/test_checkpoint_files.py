@@ -12,12 +12,25 @@ from __future__ import annotations
 
 import os
 
-from kafka_stream_faust_deprecated_spark.io import decode_ticks
-from kafka_stream_faust_deprecated_spark.streaming import sma_aggregate
-from tests.test_streaming_stateful import _checkpoint_manager_class
-from tests.tick_fixture import build_fixture, write_ndjson
+from tests.test_streaming_sma import _run_file_job
+from tests.tick_fixture import build_fixture
 
 CHECKSUM_KEY = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+
+
+def _checkpoint_manager_class(spark, path) -> str:
+    """The checkpoint file manager a query started now would use for
+    ``path``."""
+    jvm = spark._jvm
+    return (
+        jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+        .create(
+            jvm.org.apache.hadoop.fs.Path(str(path)),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+        .getClass()
+        .getName()
+    )
 
 
 def test_local_session_uses_filesystem_checkpoint_manager(spark, tmp_path):
@@ -31,21 +44,9 @@ def test_local_session_uses_filesystem_checkpoint_manager(spark, tmp_path):
 
 
 def test_state_changelogs_keep_crc_files(spark, tmp_path, state_backend):
-    src = tmp_path / "src"
-    src.mkdir()
-    write_ndjson(build_fixture(), str(src / "f1.json"))
-    q = (
-        sma_aggregate(decode_ticks(
-            spark.readStream.format("text").load(str(src)).selectExpr("value AS json")
-        ))
-        .writeStream.format("memory")
-        .queryName(f"ckpt_crc_{state_backend}")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    _run_file_job(
+        spark, tmp_path, [("f1.json", build_fixture())], f"ckpt_crc_{state_backend}"
     )
-    q.awaitTermination(300)
     suffix = ".changelog" if state_backend == "rocksdb" else ".delta"
     changelogs = [
         (d, f)

@@ -2,48 +2,23 @@
 
 Local mirror of the driver's correctness gate (__spark_entry__.py):
 row count, column-name set, and an order-insensitive comparison of
-normalized values. Runs at sf0.001 for speed; the driver runs sf0.01.
+values normalized as ``scripts/driver_sim.py`` normalizes them. Runs at
+sf0.001 for speed; the driver runs sf0.01.
 """
 
 from __future__ import annotations
 
-import math
-from datetime import date, datetime
-from decimal import Decimal
+import os
+import sys
 
 import pytest
 
 from kafka_stream_faust_deprecated_spark.registry import all_specs
 from tests.conftest import SF_DIR
 
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "scripts"))
 
-def _norm(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return v
-    if isinstance(v, Decimal):
-        v = float(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # kill last-bit float noise from differing summation orders
-        return round(v, 6)
-    if isinstance(v, datetime):
-        return v.replace(tzinfo=None).isoformat(sep=" ", timespec="seconds")
-    if isinstance(v, date):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm(x) for x in v)
-    return v
-
-
-def _rows_to_multiset(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    return sorted(
-        (tuple(_norm(r[i]) for i in order) for r in rows),
-        key=lambda t: tuple((x is None, str(x)) for x in t),
-    )
+from driver_sim import _multiset  # noqa: E402
 
 
 SPECS = all_specs()
@@ -68,8 +43,8 @@ def test_query_matches_oracle(spec, spark, duck):
         f"{spec.name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
     )
 
-    s_ms = _rows_to_multiset(spark_rows, spark_cols)
-    d_ms = _rows_to_multiset(duck_rows, duck_cols)
+    s_ms = _multiset(spark_rows, spark_cols)
+    d_ms = _multiset(duck_rows, duck_cols)
     if s_ms != d_ms:
         diffs = [(a, b) for a, b in zip(s_ms, d_ms) if a != b][:5]
         pytest.fail(f"{spec.name}: value mismatch; first diffs (spark, duck): {diffs}")

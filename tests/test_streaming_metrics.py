@@ -9,41 +9,18 @@ SMA pipeline and exposes them as a queryable DataFrame.
 
 from __future__ import annotations
 
-import os
 import time
 
-from kafka_stream_faust_deprecated_spark.io import decode_ticks
-from kafka_stream_faust_deprecated_spark.streaming import sma_aggregate
 from kafka_stream_faust_deprecated_spark.streaming.metrics import ProgressRecorder
-from tests.tick_fixture import build_fixture, make_tick, write_ndjson
+from tests.test_streaming_sma import _run_file_job
+from tests.tick_fixture import build_fixture, make_tick
 
 
 def test_progress_recorder_captures_sma_batches(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
     files = [("f1.json", build_fixture()), ("f2.json", [make_tick("ZZZ", 100_000, 1.0, 1, True)])]
-    for i, (fname, ticks) in enumerate(files):
-        p = src / fname
-        write_ndjson(ticks, str(p))
-        t = time.time() - 100 + i * 10
-        os.utime(p, (t, t))
     rec = ProgressRecorder().attach(spark)
     try:
-        q = (
-            sma_aggregate(decode_ticks(
-                spark.readStream.format("text")
-                .option("maxFilesPerTrigger", "1")
-                .load(str(src))
-                .selectExpr("value AS json")
-            ))
-            .writeStream.format("memory")
-            .queryName("sma_metrics_test")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        _run_file_job(spark, tmp_path, files, "sma_metrics_test")
         # The listener bus delivers asynchronously; give it a moment.
         deadline = time.time() + 30
         while time.time() < deadline:
@@ -110,35 +87,17 @@ def test_state_eviction_visible_in_progress(spark, tmp_path):
     evicted, so the final progress event reports a fraction of the peak
     state instead of the sum of everything ever created (the
     reference's defaultdict grows forever, faust_app/ma_agg.py:42)."""
-    src = tmp_path / "src"
-    src.mkdir()
-    for fi, base in enumerate((0, 1000, 2000)):
-        ticks = [
+    files = [
+        (f"f{fi}.json", [
             make_tick(s, base + i, 10.0, 1, True)
             for s in ("AAA", "BBB")
             for i in range(60)
-        ]
-        p = src / f"f{fi}.json"
-        write_ndjson(ticks, str(p))
-        t = time.time() - 100 + fi * 10
-        os.utime(p, (t, t))
+        ])
+        for fi, base in enumerate((0, 1000, 2000))
+    ]
     rec = ProgressRecorder().attach(spark)
     try:
-        q = (
-            sma_aggregate(decode_ticks(
-                spark.readStream.format("text")
-                .option("maxFilesPerTrigger", "1")
-                .load(str(src))
-                .selectExpr("value AS json")
-            ))
-            .writeStream.format("memory")
-            .queryName("sma_evict_test")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        _run_file_job(spark, tmp_path, files, "sma_evict_test")
         deadline = time.time() + 30
         while time.time() < deadline and len(rec.batches("sma_evict_test")) < 4:
             time.sleep(0.5)

@@ -18,8 +18,8 @@ from datetime import datetime
 
 import pytest
 
-from kafka_stream_faust_deprecated_spark.io import decode_ticks
-from kafka_stream_faust_deprecated_spark.streaming import sma_aggregate
+from kafka_stream_faust_deprecated_spark.io import decode_ticks, file_tick_source
+from kafka_stream_faust_deprecated_spark.streaming import build_file_sma_query, sma_aggregate
 from tests.tick_fixture import build_fixture, golden_sma, make_tick, write_ndjson
 
 
@@ -66,29 +66,30 @@ def test_sma_batch_matches_golden(spark):
     assert all(r["count_of_vwap"] >= 4 for r in ccc)
 
 
-def _run_stream(spark, tmp_path, files, name):
-    src = tmp_path / "src"
+def _write_files(src, files):
+    """Write each ``(file name, ticks)`` as NDJSON under ``src``, with
+    mtimes in list order: the file source drains oldest mtime first."""
     src.mkdir()
     for i, (fname, ticks) in enumerate(files):
         p = src / fname
         write_ndjson(ticks, str(p))
         t = time.time() - 100 + i * 10
-        os.utime(p, (t, t))  # file source drains oldest mtime first
-    q = (
-        sma_aggregate(decode_ticks(
-            spark.readStream.format("text")
-            .option("maxFilesPerTrigger", "1")
-            .load(str(src))
-            .selectExpr("value AS json")
-        ))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        os.utime(p, (t, t))
+
+
+def _run_file_job(spark, tmp_path, files, name):
+    """The file job (``build_file_sma_query``) over ``files``, run to the
+    end of its input; returns the finished query."""
+    _write_files(tmp_path / "src", files)
+    q = build_file_sma_query(
+        spark, str(tmp_path / "src"), str(tmp_path / "ckpt"), query_name=name
     )
     q.awaitTermination(300)
+    return q
+
+
+def _run_stream(spark, tmp_path, files, name):
+    _run_file_job(spark, tmp_path, files, name)
     return spark.sql(f"SELECT * FROM {name}").collect()
 
 
@@ -162,20 +163,8 @@ def test_sma_streaming_update_mode_converges_to_golden(spark, tmp_path):
     ticks = build_fixture()
     half = len(ticks) // 2
     src = tmp_path / "src"
-    src.mkdir()
-    for i, (fname, batch) in enumerate(
-        [("f1.json", ticks[:half]), ("f2.json", ticks[half:])]
-    ):
-        p = src / fname
-        write_ndjson(batch, str(p))
-        t = time.time() - 100 + i * 10
-        os.utime(p, (t, t))
-    out = sma_aggregate(decode_ticks(
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(src))
-        .selectExpr("value AS json")
-    ))
+    _write_files(src, [("f1.json", ticks[:half]), ("f2.json", ticks[half:])])
+    out = sma_aggregate(file_tick_source(spark, str(src)))
     batches: list[tuple[int, list]] = []
 
     def sink(batch_df, epoch_id):
