@@ -2137,15 +2137,14 @@ def _pq_adc_expr() -> str:
     return " + ".join(f"l{j}[c[{j}]]" for j in range(PQ_M))
 
 
-def _pq_oracle() -> str:
-    """Chained-CTE replay of the trained-PQ pipeline (the
-    kmeans_train_3iter oracle pattern): normalize -> init codebooks
-    from the PQ_K lowest vec_ids -> assign -> rounded mean update ->
-    re-assign against the trained books -> per-query ADC lookup tables
-    -> fixed-order ADC sum -> top-K."""
+def _pq_sql_ctes() -> str:
+    """The trained-PQ CTE chain both PQ oracles share (the
+    kmeans_train_3iter oracle pattern): normalize (``e``) -> init
+    codebooks from the PQ_K lowest vec_ids -> assign -> rounded mean
+    update (``cb``) -> re-assign against the trained books (``codes``)
+    -> per-query ADC lookup tables (``lut``)."""
     from kafka_stream_faust_deprecated_spark.queries.llm import (
         EMBED_DIM,
-        KNN_K,
         KNN_N_QUERIES,
     )
 
@@ -2153,11 +2152,8 @@ def _pq_oracle() -> str:
     score0 = "list_dot_product(sv.s, i.c) - 0.5*list_dot_product(i.c, i.c)"
     score1 = "list_dot_product(sv.s, b.c) - 0.5*list_dot_product(b.c, b.c)"
     qsl = "list_slice(q.qv, b.j*%d+1, (b.j+1)*%d)" % (sub, sub)
-    adc_sum = " + ".join(
-        f"max(CASE WHEN cd.j = {j} THEN l.t END)" for j in range(PQ_M)
-    )
     return f"""
-WITH e AS (
+e AS (
     SELECT vec_id,
            list_transform(embedding::DOUBLE[],
                x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
@@ -2208,10 +2204,26 @@ lut AS (
              - 2*list_dot_product({qsl}, b.c)
              + list_dot_product(b.c, b.c) AS t
     FROM q CROSS JOIN cb b
-),
+)"""
+
+
+#: The fixed-order ADC sum over a (codes cd, lut l) join — the oracle
+#: twin of ``_pq_adc_expr``.
+_PQ_ADC_SUM_SQL = " + ".join(
+    f"max(CASE WHEN cd.j = {j} THEN l.t END)" for j in range(PQ_M)
+)
+
+
+def _pq_oracle() -> str:
+    """Chained-CTE replay of the trained-PQ pipeline: the shared
+    ``_pq_sql_ctes`` chain, then the fixed-order ADC sum -> top-K."""
+    from kafka_stream_faust_deprecated_spark.queries.llm import KNN_K
+
+    return f"""
+WITH {_pq_sql_ctes()},
 adc AS (
     SELECT l.qid, cd.vec_id,
-           {adc_sum} AS adc
+           {_PQ_ADC_SUM_SQL} AS adc
     FROM codes cd JOIN lut l ON l.j = cd.j AND l.code = cd.code
     WHERE cd.vec_id <> l.qid
     GROUP BY 1, 2
@@ -2589,10 +2601,9 @@ def _ivfpq_oracle() -> str:
     """IVF probes x PQ ADC — the _ivf_oracle cell/probe CTEs (over the
     NORMALIZED vectors; cosine rank per vector is scale-invariant, so
     cell assignment matches the raw-vector IVF index) composed with the
-    _pq_oracle codebook/code/LUT CTEs, candidates scored by the
+    ``_pq_sql_ctes`` codebook/code/LUT CTEs, candidates scored by the
     fixed-order ADC sum."""
     from kafka_stream_faust_deprecated_spark.queries.llm import (
-        EMBED_DIM,
         KNN_K,
         KNN_N_QUERIES,
         _ANN_BITS_SQL,
@@ -2600,25 +2611,12 @@ def _ivfpq_oracle() -> str:
         _ivf_centroids,
     )
 
-    sub = EMBED_DIM // PQ_M
     ivf_values = ",\n      ".join(
         f"({cid}, [{', '.join(repr(c) for c in comp)}]::DOUBLE[], {norm!r})"
         for cid, comp, norm in _ivf_centroids()
     )
-    score0 = "list_dot_product(sv.s, i.c) - 0.5*list_dot_product(i.c, i.c)"
-    score1 = "list_dot_product(sv.s, b.c) - 0.5*list_dot_product(b.c, b.c)"
-    qsl = "list_slice(q.qv, b.j*%d+1, (b.j+1)*%d)" % (sub, sub)
-    adc_sum = " + ".join(
-        f"max(CASE WHEN cd.j = {j} THEN l.t END)" for j in range(PQ_M)
-    )
     return f"""
-WITH e AS (
-    SELECT vec_id,
-           list_transform(embedding::DOUBLE[],
-               x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
-                                              embedding::DOUBLE[]))) AS v
-    FROM embeddings
-),
+WITH {_pq_sql_ctes()},
 nb AS (SELECT {_ANN_BITS_SQL} AS bits),
 nk AS (SELECT k, greatest(2, k // 8) AS np FROM (SELECT {_IVF_K_SQL} AS k) t),
 cents_all(cid, c, cn) AS (VALUES
@@ -2636,57 +2634,12 @@ probes AS (
     SELECT vec_id AS qid, cid FROM ivfs
     WHERE rn <= (SELECT np FROM nk) AND vec_id < {KNN_N_QUERIES}
 ),
-js AS (SELECT unnest(range({PQ_M})) AS j),
-sv AS (
-    SELECT vec_id, js.j, list_slice(v, js.j*{sub}+1, (js.j+1)*{sub}) AS s
-    FROM e CROSS JOIN js
-),
-init AS (
-    SELECT sv.j,
-           row_number() OVER (PARTITION BY sv.j ORDER BY sv.vec_id) - 1 AS code,
-           sv.s AS c
-    FROM sv
-    WHERE sv.vec_id IN (SELECT vec_id FROM e ORDER BY vec_id LIMIT {PQ_K})
-),
-a0 AS (
-    SELECT vec_id, j, code FROM (
-        SELECT sv.vec_id, sv.j, i.code,
-               row_number() OVER (PARTITION BY sv.vec_id, sv.j
-                                  ORDER BY {score0} DESC, i.code) AS rn
-        FROM sv JOIN init i ON i.j = sv.j
-    ) WHERE rn = 1
-),
-cb AS (
-    SELECT j, code, list(m ORDER BY pos) AS c FROM (
-        SELECT j, code, pos, round(avg(x), {PQ_MEAN_DECIMALS}) AS m FROM (
-            SELECT a0.j, a0.code,
-                   generate_subscripts(sv.s, 1) AS pos, unnest(sv.s) AS x
-            FROM a0 JOIN sv ON sv.vec_id = a0.vec_id AND sv.j = a0.j
-        ) GROUP BY 1, 2, 3
-    ) GROUP BY 1, 2
-),
-codes AS (
-    SELECT vec_id, j, code FROM (
-        SELECT sv.vec_id, sv.j, b.code,
-               row_number() OVER (PARTITION BY sv.vec_id, sv.j
-                                  ORDER BY {score1} DESC, b.code) AS rn
-        FROM sv JOIN cb b ON b.j = sv.j
-    ) WHERE rn = 1
-),
-q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < {KNN_N_QUERIES}),
-lut AS (
-    SELECT q.qid, b.j, b.code,
-           list_dot_product({qsl}, {qsl})
-             - 2*list_dot_product({qsl}, b.c)
-             + list_dot_product(b.c, b.c) AS t
-    FROM q CROSS JOIN cb b
-),
 cand AS (
     SELECT p.qid, a.vec_id AS nid
     FROM probes p JOIN assign a ON a.cid = p.cid AND a.vec_id <> p.qid
 ),
 adc AS (
-    SELECT c.qid, c.nid, {adc_sum} AS adc
+    SELECT c.qid, c.nid, {_PQ_ADC_SUM_SQL} AS adc
     FROM cand c
     JOIN codes cd ON cd.vec_id = c.nid
     JOIN lut l ON l.qid = c.qid AND l.j = cd.j AND l.code = cd.code

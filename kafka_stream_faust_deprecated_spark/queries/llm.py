@@ -86,6 +86,27 @@ MINHASH_R = 3  # rows per band
 MINHASH_B = MINHASH_K // MINHASH_R  # bands
 
 
+def sql_minhash_cand(pair: str = "a.doc_id < b.doc_id") -> str:
+    """DuckDB twin of the MinHash signature (``mh``), band table
+    (``bands``) and LSH candidate pairs (``cand``: (da, db) band-hash
+    collisions with ``pair`` holding) as CTEs over ``sh``."""
+    return f"""
+mh AS (
+    SELECT doc_id, t.i, min(md5(t.i::VARCHAR || '|' || s)) AS h
+    FROM sh CROSS JOIN range({MINHASH_K}) t(i)
+    GROUP BY doc_id, t.i
+),
+bands AS (
+    SELECT doc_id, i // {MINHASH_R} AS band, md5(string_agg(h, '' ORDER BY i)) AS bh
+    FROM mh GROUP BY doc_id, i // {MINHASH_R}
+),
+cand AS (
+    SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
+    FROM bands a JOIN bands b
+      ON a.band = b.band AND a.bh = b.bh AND {pair}
+)"""
+
+
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, s): the distinct 3-word shingles of each document.
 
@@ -299,24 +320,26 @@ def _minhash_bands(sets: DataFrame) -> DataFrame:
     ).select("doc_id", "bb.band", "bb.bh")
 
 
+def _lsh_candidates(bands: DataFrame) -> DataFrame:
+    """(da, db), da < db: the distinct document pairs that share a band
+    hash — one self-join of the band table on (band, bh)."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bh") == F.col("b.bh"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
+        .distinct()
+    )
+
+
 @register(
     "neardup_minhash_lsh",
     oracle=f"""
-WITH {SQL_SHINGLES},
-mh AS (
-    SELECT doc_id, t.i, min(md5(t.i::VARCHAR || '|' || s)) AS h
-    FROM sh CROSS JOIN range({MINHASH_K}) t(i)
-    GROUP BY doc_id, t.i
-),
-bands AS (
-    SELECT doc_id, i // {MINHASH_R} AS band, md5(string_agg(h, '' ORDER BY i)) AS bh
-    FROM mh GROUP BY doc_id, i // {MINHASH_R}
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-),
+WITH {SQL_SHINGLES},{sql_minhash_cand()},
 n AS (SELECT doc_id, count(*) AS ns FROM sh GROUP BY doc_id),
 c AS (
     SELECT da, db, count(*) AS common
@@ -364,17 +387,7 @@ def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = cached.where(F.size("sh") > 0)
     bands = _minhash_bands(sets).persist()
     try:
-        a, b = bands.alias("a"), bands.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bh") == F.col("b.bh"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-            .distinct()
-        )
+        cand = _lsh_candidates(bands)
         verified = _verified_jaccard(sets, cand)
         result = verified.where(F.col("jac") >= JACCARD_THRESHOLD).select(
             "da", "db", round_det(F.col("jac"), 4).alias("jac")
@@ -391,21 +404,7 @@ def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "minhash_estimate_calibration",
     oracle=f"""
-WITH {SQL_SHINGLES},
-mh AS (
-    SELECT doc_id, t.i, min(md5(t.i::VARCHAR || '|' || s)) AS h
-    FROM sh CROSS JOIN range({MINHASH_K}) t(i)
-    GROUP BY doc_id, t.i
-),
-bands AS (
-    SELECT doc_id, i // {MINHASH_R} AS band, md5(string_agg(h, '' ORDER BY i)) AS bh
-    FROM mh GROUP BY doc_id, i // {MINHASH_R}
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-),
+WITH {SQL_SHINGLES},{sql_minhash_cand()},
 est AS (
     SELECT c.da, c.db,
            sum(CASE WHEN x.h = y.h THEN 1 ELSE 0 END) * 1.0 / {MINHASH_K} AS e
@@ -462,17 +461,7 @@ def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bands = _minhash_bands(cached).persist()
     try:
-        a, b = bands.alias("a"), bands.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bh") == F.col("b.bh"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-            .distinct()
-        )
+        cand = _lsh_candidates(bands)
         da = cached.select(
             F.col("doc_id").alias("da"), F.col("sh").alias("sa"), F.col("sig").alias("ga")
         )
@@ -514,6 +503,12 @@ def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: any SF with no extra fixture.
 INGEST_MOD = 10
 INGEST_INC_MIN = 8
+#: LSH candidates of an ingest: an incoming doc that is not an exact
+#: duplicate against an existing doc.
+_SQL_INGEST_PAIR = (
+    f"a.doc_id IN (SELECT doc_id FROM rest)"
+    f" AND b.doc_id % {INGEST_MOD} < {INGEST_INC_MIN}"
+)
 
 
 @register(
@@ -527,22 +522,7 @@ hx AS (
 ),
 exh AS (SELECT h, min(doc_id) AS m FROM hx WHERE NOT inc GROUP BY h),
 exact AS (SELECT i.doc_id, e.m FROM hx i LEFT JOIN exh e USING (h) WHERE i.inc),
-rest AS (SELECT doc_id FROM exact WHERE m IS NULL),
-mh AS (
-    SELECT doc_id, t.i, min(md5(t.i::VARCHAR || '|' || s)) AS h
-    FROM sh CROSS JOIN range({MINHASH_K}) t(i)
-    GROUP BY doc_id, t.i
-),
-bands AS (
-    SELECT doc_id, i // {MINHASH_R} AS band, md5(string_agg(h, '' ORDER BY i)) AS bh
-    FROM mh GROUP BY doc_id, i // {MINHASH_R}
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-    FROM bands a JOIN rest r ON a.doc_id = r.doc_id
-    JOIN bands b ON a.band = b.band AND a.bh = b.bh
-              AND b.doc_id % {INGEST_MOD} < {INGEST_INC_MIN}
-),
+rest AS (SELECT doc_id FROM exact WHERE m IS NULL),{sql_minhash_cand(_SQL_INGEST_PAIR)},
 n AS (SELECT doc_id, count(*) AS ns FROM sh GROUP BY doc_id),
 c AS (
     SELECT da, db, count(*) AS common

@@ -9,7 +9,10 @@ The capabilities this module adds, each as an oracle-checked query:
 * ``psi_value_drift``            — Population Stability Index of the
   event value distribution between the first half of the month and the
   rest, bucketed by reference-window deciles: the standard
-  feature-drift monitor in ML scoring pipelines.
+  feature-drift monitor in ML scoring pipelines. Its pieces (cuts,
+  bucket, share, term) also build ``psi_reference_profile``, the
+  frozen profile DataFrame, and the streaming monitor
+  ``streaming/drift.py::psi_drift``.
 * ``twap_daily``                 — per-symbol daily time-weighted
   average price (each tick weighted by its holding time to the next
   tick, last tick to day end) next to the tick count: the execution
@@ -27,8 +30,10 @@ for the large-scale analytics mandate (SURVEY.md §2b/§2c).
 from __future__ import annotations
 
 import math
+import operator
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -147,6 +152,65 @@ PSI_SPLIT = "2024-01-16"
 PSI_EPS = 1e-06
 
 _PSI_DECILES = tuple(k / 10.0 for k in range(1, 10))
+#: The cut columns and the bucket numbers the PSI pieces below share.
+PSI_CUTS = tuple(f"c{i + 1}" for i in range(len(_PSI_DECILES)))
+PSI_BUCKETS = range(1, len(_PSI_DECILES) + 2)
+
+
+def _psi_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table_parallel(spark, sf_dir, "events").select(
+        F.col("event_type").alias("et"), F.col("value").alias("v"), "ts"
+    )
+
+
+def psi_cuts(ref: DataFrame) -> DataFrame:
+    """(et, c1..c9): the reference window's decile cuts, rounded to 4 dp."""
+    return ref.groupBy("et").agg(
+        *[
+            round_det(F.percentile("v", F.lit(q)), 4).alias(c)
+            for q, c in zip(_PSI_DECILES, PSI_CUTS)
+        ]
+    )
+
+
+def psi_bucket() -> Column:
+    """Bucket 1..10 of value ``v`` against the cuts ``c1..c9`` (NULL for
+    a NULL value)."""
+    bucket = F.lit(1)
+    for c in PSI_CUTS:
+        bucket = bucket + (F.col("v") > F.col(c)).cast("int")
+    return bucket
+
+
+def psi_bucket_counts(bucketed: DataFrame, *carry: str) -> DataFrame:
+    """One row per ``et``: ``n1..n10``, the rows in each bucket, plus the
+    ``carry`` columns, constant per ``et``, kept with ``max``."""
+    return bucketed.groupBy("et").agg(
+        *[F.count(F.when(F.col("bucket") == k, 1)).alias(f"n{k}") for k in PSI_BUCKETS],
+        *[F.max(c).alias(c) for c in carry],
+    )
+
+
+def psi_total() -> Column:
+    """The bucketed rows of a ``psi_bucket_counts`` row."""
+    return reduce(operator.add, [F.col(f"n{k}") for k in PSI_BUCKETS])
+
+
+def psi_share(count: Column, total: Column) -> Column:
+    """A bucket's share of its window, rounded to 6 dp (NULL for an
+    empty window)."""
+    return round_det(
+        count.cast("double") / F.nullif(total.cast("double"), F.lit(0.0)), 6
+    )
+
+
+def psi_term(p: Column, q: Column) -> Column:
+    """One bucket's (p - q) * ln(p/q) with both shares floored at
+    ``PSI_EPS``, fixed to 6 dp as DECIMAL(18,6) so the sum over buckets
+    is exact."""
+    p = F.greatest(p, F.lit(PSI_EPS))
+    q = F.greatest(q, F.lit(PSI_EPS))
+    return round_det((p - q) * F.log(p / q), 6).cast("decimal(18,6)")
 
 
 @register(
@@ -232,26 +296,12 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — bounded at |types| x 10 — and windows/terms over that
     bounded relation. The drift monitor costs two scans at any SF.
     """
-    ev = load_table_parallel(spark, sf_dir, "events").select(
-        F.col("event_type").alias("et"), F.col("value").alias("v"), "ts"
-    )
+    ev = _psi_events(spark, sf_dir)
     split = F.lit(f"{PSI_SPLIT} 00:00:00").cast("timestamp")
-    cuts = (
-        ev.where(F.col("ts") < split)
-        .groupBy("et")
-        .agg(
-            *[
-                round_det(F.percentile("v", F.lit(q)), 4).alias(f"c{i+1}")
-                for i, q in enumerate(_PSI_DECILES)
-            ]
-        )
-    )
-    bucket = F.lit(1)
-    for i in range(len(_PSI_DECILES)):
-        bucket = bucket + (F.col("v") > F.col(f"c{i+1}")).cast("int")
+    cuts = psi_cuts(ev.where(F.col("ts") < split))
     b = ev.join(F.broadcast(cuts), "et").select(
         "et",
-        bucket.alias("bucket"),
+        psi_bucket().alias("bucket"),
         F.when(F.col("ts") < split, 1).otherwise(0).alias("is_ref"),
     )
     counts = b.groupBy("et", "bucket").agg(
@@ -273,29 +323,14 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("rn").over(byt).alias("n_ref"),
         F.sum("cn").over(byt).alias("n_cmp"),
     )
-    p = F.greatest(
-        round_det(
-            F.col("rn").cast("double")
-            / F.nullif(F.col("n_ref").cast("double"), F.lit(0.0)),
-            6,
-        ),
-        F.lit(PSI_EPS),
-    )
-    q = F.greatest(
-        round_det(
-            F.col("cn").cast("double")
-            / F.nullif(F.col("n_cmp").cast("double"), F.lit(0.0)),
-            6,
-        ),
-        F.lit(PSI_EPS),
-    )
     terms = tot.select(
         "et",
         "n_ref",
         "n_cmp",
-        round_det((p - q) * F.log(p / q), 6)
-        .cast("decimal(18,6)")
-        .alias("term"),
+        psi_term(
+            psi_share(F.col("rn"), F.col("n_ref")),
+            psi_share(F.col("cn"), F.col("n_cmp")),
+        ).alias("term"),
     )
     return terms.groupBy(F.col("et").alias("event_type")).agg(
         F.max("n_ref").cast("bigint").alias("n_ref"),
@@ -304,60 +339,32 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def psi_reference_profile(
-    spark: SparkSession, sf_dir: str
-) -> tuple[dict[str, list[float]], dict[str, list[float]]]:
-    """The OFFLINE half of the streaming drift deployment: freeze the
-    reference profile (per-type 4-dp decile cuts + 6-dp bucket shares)
-    with the SAME Spark expressions ``psi_value_drift`` uses, collected
-    to the driver as closure constants for
-    ``streaming/drift.py::psi_drift_stateful``. Bounded driver state:
-    |types| x (9 cuts + 10 shares). Not a registered query — it is the
-    profile exporter; its correctness is pinned transitively by the
-    cross-implementation test that feeds its output into the streaming
-    monitor and demands bit-for-bit equality with the batch query."""
-    ev = load_table_parallel(spark, sf_dir, "events").select(
-        F.col("event_type").alias("et"), F.col("value").alias("v"), "ts"
-    )
+def psi_reference_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The frozen reference profile the streaming drift monitor
+    (``streaming/drift.py::psi_drift``) compares against: one row per
+    type ``et`` with its decile cuts ``c1..c9`` and reference bucket
+    shares ``p1..p10``, built from the same pieces as
+    ``psi_value_drift``, so the monitor's PSI over the comparison
+    window equals the batch query's bit-for-bit
+    (tests/test_streaming_drift.py). NULL values carry no bucket, as
+    in the batch query. |types| rows: small enough to broadcast into
+    every micro-batch."""
+    ev = _psi_events(spark, sf_dir)
     split = F.lit(f"{PSI_SPLIT} 00:00:00").cast("timestamp")
-    # NULL values carry no bucket (batch psi_value_drift drops them via
-    # the grid join; a null comparison here would yield a null bucket
-    # key and raw[et][None] below) — filter explicitly so the frozen
-    # profile matches batch semantics on inputs WITH nulls too.
     ref = ev.where(F.col("ts") < split).where(F.col("v").isNotNull())
-    cuts_df = ref.groupBy("et").agg(
+    cuts = psi_cuts(ref)
+    bucketed = ref.join(F.broadcast(cuts), "et").select(
+        "et", *PSI_CUTS, psi_bucket().alias("bucket")
+    )
+    counts = psi_bucket_counts(bucketed, *PSI_CUTS)
+    return counts.select(
+        "et",
+        *PSI_CUTS,
         *[
-            round_det(F.percentile("v", F.lit(q)), 4).alias(f"c{i+1}")
-            for i, q in enumerate(_PSI_DECILES)
-        ]
+            psi_share(F.col(f"n{k}"), psi_total()).alias(f"p{k}")
+            for k in PSI_BUCKETS
+        ],
     )
-    cuts = {
-        r["et"]: [r[f"c{i+1}"] for i in range(len(_PSI_DECILES))]
-        for r in cuts_df.collect()
-    }
-    bucket = F.lit(0)
-    for i in range(len(_PSI_DECILES)):
-        bucket = bucket + (F.col("v") > F.col(f"c{i+1}")).cast("int")
-    counts = (
-        ref.join(F.broadcast(cuts_df), "et")
-        .groupBy("et", bucket.alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("rn"))
-        .collect()
-    )
-    n_ref: dict[str, int] = {}
-    raw: dict[str, list[int]] = {et: [0] * 10 for et in cuts}
-    for r in counts:
-        raw[r["et"]][r["bucket"]] = r["rn"]
-        n_ref[r["et"]] = n_ref.get(r["et"], 0) + r["rn"]
-    import math
-
-    shares = {
-        et: [
-            math.floor(c / n_ref[et] * 1e6 + 0.5) / 1e6 for c in raw[et]
-        ]
-        for et in raw
-    }
-    return cuts, shares
 
 
 # --------------------------------------------------------------------------

@@ -105,7 +105,6 @@ def configure_state_store(
 
 def get_spark(
     app_name: str = "ksfd-spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
@@ -115,8 +114,6 @@ def get_spark(
     adaptive behavior that scales with the cluster.
     """
     cpus = _local_cpus()
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -137,7 +134,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Shuffle sizing: on a 1000-executor cluster this is overridden to
         # ~2-3x total cores via spark-submit; locally match the thread pool.
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         # Arrow for Pandas-UDF / toPandas interchange (vectorized transfer).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Parquet: push filters + prune columns at the scan.

@@ -1,29 +1,17 @@
-"""Streaming PSI drift monitor (S4/E22): the batch
-``psi_value_drift`` screen run CONTINUOUSLY against a frozen
-reference profile.
+"""Streaming PSI drift monitor (S4/E22): the batch ``psi_value_drift``
+screen run continuously against a frozen reference profile.
 
-Deployment shape this models: a scoring pipeline freezes a reference
-feature profile (per-key decile cuts + bucket shares, a few hundred
-bytes — computed offline by the batch query and shipped as a closure
-constant), then every micro-batch updates per-key cumulative bucket
-counts and re-emits the current Population Stability Index. The state
-is O(|keys| x 10 buckets) — independent of stream length — and the
-emitted PSI after the last batch is a pure function of the event set
-(cumulative counts are order/batch-boundary independent), so the
-monitor is replay-deterministic even though intermediate emissions
-track micro-batch progress.
-
-Formula parity: bucket membership (value > 4-dp-rounded cut), the
-6-dp share rounding, the epsilon floor, the 6-dp DECIMAL term fixing
-(emulated with exact integer micro-units), and the final 4-dp rounding
-are copied from ``queries/monitor.py::psi_value_drift`` so a frozen
-reference computed there yields a streaming PSI whose final value the
-batch query reproduces bit-for-bit. Pinned by
-tests/test_streaming_drift.py across 1-file and 2-file splits of the
-same stream AND directly against the batch query's own output over the
-same events table (the profile comes from
-``queries/monitor.py::psi_reference_profile``, the offline half of the
-deployment).
+The profile (``queries/monitor.py::psi_reference_profile``: per-type
+decile cuts ``c1..c9`` and reference shares ``p1..p10``) is a small
+static DataFrame joined into every micro-batch. The monitor is one
+declarative streaming aggregation: per-type cumulative bucket counts,
+emitted in ``update`` mode with the current PSI. Its state is
+O(|types| x 10), independent of stream length, and the last row per
+type is a pure function of the event set, whatever the micro-batch
+boundaries. Bucketing, shares and terms are the batch query's own
+expressions (``psi_bucket``, ``psi_share``, ``psi_term``), so the final
+PSI equals ``psi_value_drift``'s bit-for-bit
+(tests/test_streaming_drift.py).
 
 Reference parity note: the reference app (faust_app/ma_agg.py, 308
 lines) has no drift surface; this extends the streaming engine for the
@@ -32,124 +20,49 @@ monitoring mandate (SURVEY.md §2c wave 10).
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Tuple
+import operator
+from functools import reduce
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from kafka_stream_faust_deprecated_spark.queries.monitor import PSI_EPS
-
-OUTPUT_SCHEMA = "event_type STRING, n_cmp LONG, psi DOUBLE"
-
-#: Ten cumulative bucket counts plus the total — nothing else.
-STATE_SCHEMA = (
-    "b1 LONG, b2 LONG, b3 LONG, b4 LONG, b5 LONG, "
-    "b6 LONG, b7 LONG, b8 LONG, b9 LONG, b10 LONG, n LONG"
+from kafka_stream_faust_deprecated_spark.functions.rounding import round_det
+from kafka_stream_faust_deprecated_spark.queries.monitor import (
+    PSI_BUCKETS,
+    psi_bucket,
+    psi_bucket_counts,
+    psi_share,
+    psi_term,
+    psi_total,
 )
+from kafka_stream_faust_deprecated_spark.streaming.windows import stream_static_join
 
 
-def _round_det(x: float, digits: int) -> float:
-    """Python twin of functions/rounding.round_det (floor(x*s+0.5)/s)."""
-    s = float(10**digits)
-    import math
+def psi_drift(events: DataFrame, profile: DataFrame) -> DataFrame:
+    """Per-type cumulative PSI of ``value`` against ``profile``.
 
-    return math.floor(x * s + 0.5) / s
-
-
-def _psi(counts: list[int], n: int, ref_shares: list[float]) -> float:
-    """The batch query's PSI, reproduced step for step: 6-dp-floored
-    shares, per-bucket terms fixed to 6-dp DECIMAL (emulated here as
-    exact integer micro-units so the cross-bucket sum is the same
-    exact decimal sum the batch computes — a float accumulation of the
-    rounded terms could drift a last bit and flip the final rounding),
-    and the FINAL value rounded to 4 dp exactly like
-    ``queries/monitor.py::psi_value_drift`` (round 7 fix: this used to
-    round to 6 dp, so the docstring's bit-for-bit batch-parity claim
-    only held when the term sum happened to be 4-dp exact — now pinned
-    by a true cross-implementation test against the batch query's own
-    output, tests/test_streaming_drift.py)."""
-    import math
-
-    micro = 0  # sum of DECIMAL(18,6) terms, in exact 1e-6 units
-    for k in range(10):
-        p = max(ref_shares[k], PSI_EPS)
-        q = max(_round_det(counts[k] / n, 6), PSI_EPS) if n else PSI_EPS
-        micro += int(math.floor((p - q) * math.log(p / q) * 1e6 + 0.5))
-    return _round_det(micro / 1e6, 4)
-
-
-def _drift_fn(cuts: dict[str, list[float]], ref_shares: dict[str, list[float]]):
-    def fn(
-        key: Tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        et = str(key[0])
-        if state.exists:
-            *bs, n = state.get
-            counts = list(bs)
-        else:
-            counts, n = [0] * 10, 0
-        kcuts = cuts.get(et)
-        if kcuts is None:
-            # unknown key: no reference profile — contribute nothing
-            # (a real deployment alerts on this out-of-band)
-            return
-        for pdf in pdfs:
-            for v in pdf["value"]:
-                # NULL/NaN values carry no bucket — the batch
-                # psi_value_drift drops them via its grid join, so the
-                # streaming half must too (parity on null-bearing
-                # inputs; pandas surfaces SQL NULL as NaN here).
-                if v is None:
-                    continue
-                x = float(v)
-                if x != x:  # NaN (pandas' NULL representation)
-                    continue
-                b = 0
-                for c in kcuts:  # 9 rounded cuts -> bucket 1..10
-                    if x > c:
-                        b += 1
-                counts[b] += 1
-                n += 1
-        state.update((*counts, n))
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": et,
-                    "n_cmp": n,
-                    "psi": _psi(counts, n, ref_shares[et]),
-                }
-            ]
-        )
-
-    return fn
-
-
-def psi_drift_stateful(
-    events: DataFrame,
-    cuts: dict[str, list[float]],
-    ref_shares: dict[str, list[float]],
-) -> DataFrame:
-    """Streaming-only: per-key cumulative PSI of ``value`` against a
-    frozen reference profile. ``events`` must be a streaming DataFrame
-    with (event_type, value); ``cuts`` maps each key to its 9
-    4-dp-rounded reference decile cuts and ``ref_shares`` to its 10
-    6-dp-rounded reference bucket shares (both produced by the batch
-    ``psi_value_drift`` computation). Update-mode emission: one row per
-    active key per micro-batch carrying the cumulative n and current
-    PSI; the final row per key is batch-split invariant.
-
-    Scale shape: one keyed exchange (the groupBy), per-key state of 11
-    longs; the reference profile rides the closure (KBs), never a
-    join. The Python step is Arrow-batched and touches only (key,
-    value) pairs.
+    ``events`` is a streaming DataFrame with (event_type, value);
+    ``profile`` has one row per type: ``et``, ``c1..c9``, ``p1..p10``.
+    Run in ``update`` mode: one (event_type, n_cmp, psi) row per type
+    per micro-batch that saw the type, with the cumulative count of
+    bucketed values. Types without a profile row and NULL values
+    contribute nothing. Like any static side of a stream-static join,
+    ``profile`` is evaluated again in every micro-batch: pass a
+    materialized one (a table read, or ``localCheckpoint()``) where
+    computing it is costly.
     """
-    ev = events.select("event_type", "value")
-    return ev.groupBy("event_type").applyInPandasWithState(
-        _drift_fn(cuts, ref_shares),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    shares = [f"p{k}" for k in PSI_BUCKETS]
+    ev = events.select(F.col("event_type").alias("et"), F.col("value").alias("v"))
+    bucketed = stream_static_join(ev, profile, "et").select(
+        "et", *shares, psi_bucket().alias("bucket")
+    )
+    counts = psi_bucket_counts(bucketed, *shares)
+    terms = [
+        psi_term(F.col(f"p{k}"), psi_share(F.col(f"n{k}"), psi_total()))
+        for k in PSI_BUCKETS
+    ]
+    return counts.select(
+        F.col("et").alias("event_type"),
+        psi_total().alias("n_cmp"),
+        round_det(reduce(operator.add, terms), 4).alias("psi"),
     )

@@ -129,16 +129,13 @@ def stream_static_join(
     static: DataFrame,
     on: str | list[str],
     how: str = "inner",
-    broadcast_static: bool = True,
 ) -> DataFrame:
     """E20 — stream-static enrichment join: each micro-batch joins
     against the (slowly-changing or fixed) dimension. The static side is
-    broadcast by default — at 100 TB stream scale the dim is re-read per
+    broadcast — at 100 TB stream scale the dim is re-read per
     micro-batch and shipped once per executor, so the stream never
-    shuffles; set ``broadcast_static=False`` for dims too large to
-    broadcast (falls back to a shuffled join of the batch)."""
-    s = F.broadcast(static) if broadcast_static else static
-    return stream.join(s, on, how)
+    shuffles."""
+    return stream.join(F.broadcast(static), on, how)
 
 
 def stream_stream_join(

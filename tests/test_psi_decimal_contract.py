@@ -1,9 +1,10 @@
 """Property test for the PSI rounding contract (round 7).
 
-``streaming/drift.py::_psi`` claims to reproduce the batch
+``tests/test_streaming_drift.py::_psi``, the Python oracle the streaming
+drift tests compare against, claims to reproduce the batch
 ``psi_value_drift`` pipeline bit-for-bit: 6-dp-floored shares, per-term
 6-dp DECIMAL(18,6) fixing, EXACT decimal cross-bucket sum, 4-dp final
-rounding. The streaming side emulates the decimal sum with integer
+rounding. The oracle emulates the decimal sum with integer
 micro-units; this test replays the batch query's own term/sum/round SQL
 in DuckDB over randomized bucket-count vectors and demands equality —
 pinning the emulation across the whole input space, not just the one
@@ -25,10 +26,8 @@ from kafka_stream_faust_deprecated_spark.functions.rounding import (
     sql_round_det,
 )
 from kafka_stream_faust_deprecated_spark.queries.monitor import PSI_EPS
-from kafka_stream_faust_deprecated_spark.streaming.drift import (
-    _psi,
-    _round_det,
-)
+from tests.test_streaming_drift import _psi
+from tests.test_ticker_queries import _round_det
 
 #: DuckDB replay of the batch query's terms/sum/round tail, over a
 #: 10-row (rn, cn) VALUES relation — the exact SQL idioms of the

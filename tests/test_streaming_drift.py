@@ -2,12 +2,14 @@
 
 Pins: (1) the final per-key PSI is IDENTICAL whether the comparison
 stream arrives as one file or split across two (cumulative counts are
-batch-boundary invariant); (2) that final value equals a pure-Python
-replay of the batch psi_value_drift formula over the same reference
-profile; (3) a comparison window drawn from the reference itself
-converges to PSI ~ 0; (4) update-mode emission produces one row per
-key per micro-batch that saw the key, with monotonically nondecreasing
-n_cmp.
+batch-boundary invariant); (2) that final value equals ``_psi``, a
+pure-Python replay of the batch psi_value_drift formula over the same
+reference profile; (3) a comparison window drawn from the reference
+itself gives PSI 0; (4) update-mode emission produces one row per key
+per micro-batch that saw the key, with monotonically nondecreasing
+n_cmp; (5) against the real events table, the monitor reproduces the
+batch query's own psi and n_cmp; (6) the counts survive a restart from
+the checkpoint.
 """
 
 from __future__ import annotations
@@ -20,12 +22,11 @@ from datetime import datetime, timedelta, timezone
 
 import numpy as np
 
+from kafka_stream_faust_deprecated_spark.io import file_event_source
 from kafka_stream_faust_deprecated_spark.queries.monitor import PSI_EPS
-from kafka_stream_faust_deprecated_spark.streaming.drift import (
-    _psi,
-    _round_det,
-    psi_drift_stateful,
-)
+from kafka_stream_faust_deprecated_spark.streaming.drift import psi_drift
+from tests.conftest import SF_DIR
+from tests.test_ticker_queries import _round_det
 
 T0 = datetime(2024, 3, 1, tzinfo=timezone.utc)
 
@@ -42,6 +43,19 @@ CMP_VALUES = {
 }
 
 
+def _psi(counts: list[int], n: int, ref_shares: list[float]) -> float:
+    """The batch query's PSI, step for step: 6-dp shares floored at
+    PSI_EPS, each term fixed to 6 dp (as exact integer micro-units, the
+    Python spelling of the batch's DECIMAL(18,6) sum), and the sum
+    rounded to 4 dp."""
+    micro = 0
+    for k in range(10):
+        p = max(ref_shares[k], PSI_EPS)
+        q = max(_round_det(counts[k] / n, 6), PSI_EPS) if n else PSI_EPS
+        micro += int(math.floor((p - q) * math.log(p / q) * 1e6 + 0.5))
+    return _round_det(micro / 1e6, 4)
+
+
 def _profile(values):
     """Reference profile exactly as the batch query derives it:
     4-dp-rounded decile cuts + 6-dp-rounded bucket shares."""
@@ -49,15 +63,25 @@ def _profile(values):
         _round_det(float(np.percentile(values, q * 10, method="linear")), 4)
         for q in range(1, 10)
     ]
-
-    def bucket(v):
-        return sum(1 for c in cuts if v > c)
-
     counts = [0] * 10
     for v in values:
-        counts[bucket(v)] += 1
+        counts[sum(1 for c in cuts if v > c)] += 1
     shares = [_round_det(c / len(values), 6) for c in counts]
     return cuts, shares
+
+
+PROFILES = {et: _profile(vals) for et, vals in REF_VALUES.items()}
+
+
+def _profile_df(spark):
+    """PROFILES as the DataFrame ``psi_drift`` joins against."""
+    schema = ", ".join(
+        ["et STRING"]
+        + [f"c{i} DOUBLE" for i in range(1, 10)]
+        + [f"p{k} DOUBLE" for k in range(1, 11)]
+    )
+    rows = [(et, *cuts, *shares) for et, (cuts, shares) in PROFILES.items()]
+    return spark.createDataFrame(rows, schema)
 
 
 def _write(rows, path):
@@ -67,20 +91,7 @@ def _write(rows, path):
             fh.write(json.dumps({"event_type": et, "value": v, "ts": ts}) + "\n")
 
 
-def _stream_df(spark, src):
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(src))
-        .selectExpr("value AS json")
-    )
-    return raw.selectExpr(
-        "get_json_object(json, '$.event_type') AS event_type",
-        "CAST(get_json_object(json, '$.value') AS DOUBLE) AS value",
-    )
-
-
-def _run(spark, tmp_path, name, files, cuts, shares):
+def _run(spark, tmp_path, name, files, profile=None):
     src = tmp_path / "src"
     src.mkdir(parents=True)
     for i, (fname, rows) in enumerate(files):
@@ -89,7 +100,10 @@ def _run(spark, tmp_path, name, files, cuts, shares):
         t = time.time() - 100 + i * 10
         os.utime(p, (t, t))
     q = (
-        psi_drift_stateful(_stream_df(spark, src), cuts, shares)
+        psi_drift(
+            file_event_source(spark, str(src)),
+            _profile_df(spark) if profile is None else profile,
+        )
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
@@ -109,7 +123,8 @@ def _final_per_key(rows):
     return out
 
 
-def _python_psi(values, cuts, shares):
+def _python_psi(values, et):
+    cuts, shares = PROFILES[et]
     counts = [0] * 10
     for v in values:
         counts[sum(1 for c in cuts if v > c)] += 1
@@ -117,37 +132,29 @@ def _python_psi(values, cuts, shares):
 
 
 def test_final_psi_is_split_invariant_and_matches_replay(spark, tmp_path):
-    cuts, shares = {}, {}
-    for et, vals in REF_VALUES.items():
-        cuts[et], shares[et] = _profile(vals)
-
     interleaved = [
         (et, v)
         for pair in zip(CMP_VALUES["click"], CMP_VALUES["purchase"])
         for et, v in zip(("click", "purchase"), pair)
     ] + [("click", v) for v in CMP_VALUES["click"][len(CMP_VALUES["purchase"]):]]
 
-    one = _run(
-        spark, tmp_path / "one", "drift_one",
-        [("all.json", interleaved)], cuts, shares,
-    )
+    one = _run(spark, tmp_path / "one", "drift_one", [("all.json", interleaved)])
     half = len(interleaved) // 2
     two = _run(
         spark, tmp_path / "two", "drift_two",
         [("a.json", interleaved[:half]), ("b.json", interleaved[half:])],
-        cuts, shares,
     )
     f1, f2 = _final_per_key(one), _final_per_key(two)
     assert set(f1) == set(f2) == {"click", "purchase"}
     for et in f1:
         assert f1[et].n_cmp == f2[et].n_cmp == len(CMP_VALUES[et])
         assert f1[et].psi == f2[et].psi
-        expect = _python_psi(CMP_VALUES[et], cuts[et], shares[et])
-        assert f1[et].psi == expect
+        assert f1[et].psi == _python_psi(CMP_VALUES[et], et)
     # the shifted key drifts hard, the same-recipe key barely moves
     assert f1["purchase"].psi > 1.0
     assert f1["click"].psi < 0.25
-    # two-file run: n_cmp nondecreasing per key across emissions
+    # two-file run: one row per key per batch, n_cmp nondecreasing
+    assert len(two) == 4
     seen = {}
     for r in two:
         assert r.n_cmp >= seen.get(r.event_type, 0)
@@ -155,95 +162,95 @@ def test_final_psi_is_split_invariant_and_matches_replay(spark, tmp_path):
 
 
 def test_null_values_carry_no_bucket(spark, tmp_path):
-    """Parity on null-bearing input (ADVICE r7): batch psi_value_drift
-    drops NULL values via its grid join, so the streaming monitor must
-    neither count them in n_cmp nor bucket them (pandas surfaces the
-    SQL NULL as NaN, which would otherwise land in bucket 0)."""
-    cuts, shares = {}, {}
-    for et, vals in REF_VALUES.items():
-        cuts[et], shares[et] = _profile(vals)
+    """Parity on null-bearing input: batch psi_value_drift drops NULL
+    values via its grid join, so the streaming monitor must neither
+    count them in n_cmp nor bucket them."""
     vals = CMP_VALUES["click"]
     rows = []
     for i, v in enumerate(vals):
         rows.append(("click", v))
         if i % 10 == 0:
             rows.append(("click", None))
-    out = _run(
-        spark, tmp_path / "nulls", "drift_nulls", [("n.json", rows)], cuts, shares
-    )
+    out = _run(spark, tmp_path / "nulls", "drift_nulls", [("n.json", rows)])
     fin = _final_per_key(out)
     assert fin["click"].n_cmp == len(vals)
-    assert fin["click"].psi == _python_psi(vals, cuts["click"], shares["click"])
+    assert fin["click"].psi == _python_psi(vals, "click")
 
 
 def test_reference_against_itself_is_near_zero(spark, tmp_path):
-    cuts, shares = {}, {}
-    for et, vals in REF_VALUES.items():
-        cuts[et], shares[et] = _profile(vals)
     rows = [(et, v) for et, vals in REF_VALUES.items() for v in vals]
-    out = _run(
-        spark, tmp_path / "self", "drift_self", [("ref.json", rows)], cuts, shares
-    )
+    out = _run(spark, tmp_path / "self", "drift_self", [("ref.json", rows)])
     fin = _final_per_key(out)
     for et, vals in REF_VALUES.items():
         # same data, same buckets -> every (p - q) ln(p/q) term is 0
-        assert fin[et].psi == _python_psi(vals, cuts[et], shares[et])
+        assert fin[et].psi == _python_psi(vals, et)
         assert abs(fin[et].psi) < 1e-9
 
 
+#: Comparison-window lengths at which the 4-dp PSI of REF_VALUES vs
+#: CMP_VALUES depends on the 6th decimal of the comparison shares (a
+#: replay of ``_psi`` with 5-dp shares flips both). No key of the events
+#: fixture has that property at any SF, so the parity test adds this
+#: drifted table to pin the share rounding too.
+DRIFTED_CMP = {"click": 157, "purchase": 114}
+
+
+def _write_drifted_events(spark, sf_dir):
+    """An events table: REF_VALUES before PSI_SPLIT, the DRIFTED_CMP
+    prefixes of CMP_VALUES after it."""
+    ref0, cmp0 = datetime(2024, 1, 2), datetime(2024, 1, 20)
+    rows = [
+        (et, v, ref0 + timedelta(minutes=i))
+        for et, vals in REF_VALUES.items()
+        for i, v in enumerate(vals)
+    ] + [
+        (et, v, cmp0 + timedelta(minutes=i))
+        for et, n in DRIFTED_CMP.items()
+        for i, v in enumerate(CMP_VALUES[et][:n])
+    ]
+    spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)],
+        "event_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP",
+    ).write.parquet(os.path.join(sf_dir, "events.parquet"))
+
+
 def test_final_psi_matches_batch_query_output(spark, tmp_path):
-    """TRUE cross-implementation parity (round 7): the streaming
-    monitor, fed the real events table's comparison window and the
-    profile exported by ``psi_reference_profile`` (the offline half of
-    the deployment), must reproduce the batch ``psi_value_drift``
-    query's published psi and n_cmp bit-for-bit. The earlier replay
-    test compares the stream against a Python re-run of ``_psi``
-    itself, which is circular with respect to the final-rounding
-    contract — this one is not (it caught the 6-dp-vs-4-dp final
-    rounding mismatch this round)."""
+    """Cross-implementation parity: the streaming monitor, fed an
+    events table's comparison window and the profile from
+    ``psi_reference_profile``, must reproduce the batch
+    ``psi_value_drift`` query's psi and n_cmp bit-for-bit, on the
+    events fixture and on a drifted table. Unlike the replay tests,
+    this one does not go through ``_psi``."""
+    from kafka_stream_faust_deprecated_spark.io import load_table
     from kafka_stream_faust_deprecated_spark.queries.monitor import (
         PSI_SPLIT,
         psi_reference_profile,
         psi_value_drift,
     )
 
-    sf_dir = "/root/testdata/sf0.001"
-    cuts, shares = psi_reference_profile(spark, sf_dir)
-    batch = {
-        r.event_type: r for r in psi_value_drift(spark, sf_dir).collect()
-    }
-
-    from kafka_stream_faust_deprecated_spark.io import load_table
-
-    cmp_rows = (
-        load_table(spark, sf_dir, "events")
-        .where(f"ts >= timestamp'{PSI_SPLIT} 00:00:00'")
-        .select("event_type", "value")
-        .collect()
-    )
-    src = tmp_path / "src"
-    src.mkdir(parents=True)
-    with open(src / "cmp.json", "w") as fh:
-        for r in cmp_rows:
-            fh.write(
-                json.dumps({"event_type": r.event_type, "value": r.value})
-                + "\n"
-            )
-    q = (
-        psi_drift_stateful(_stream_df(spark, src), cuts, shares)
-        .writeStream.format("memory")
-        .queryName("drift_vs_batch")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    fin = _final_per_key(spark.sql("SELECT * FROM drift_vs_batch").collect())
-    assert set(fin) == set(batch)
-    for et, b in batch.items():
-        assert fin[et].n_cmp == b.n_cmp, et
-        assert fin[et].psi == b.psi, (et, fin[et].psi, b.psi)
+    drifted = str(tmp_path / "drifted")
+    _write_drifted_events(spark, drifted)
+    for i, sf_dir in enumerate([SF_DIR, drifted]):
+        batch = {
+            r.event_type: r for r in psi_value_drift(spark, sf_dir).collect()
+        }
+        cmp_rows = (
+            load_table(spark, sf_dir, "events")
+            .where(f"ts >= timestamp'{PSI_SPLIT} 00:00:00'")
+            .select("event_type", "value")
+            .collect()
+        )
+        out = _run(
+            spark, tmp_path / f"run{i}", f"drift_vs_batch{i}",
+            [("cmp.json", [(r.event_type, r.value) for r in cmp_rows])],
+            psi_reference_profile(spark, sf_dir),
+        )
+        fin = _final_per_key(out)
+        assert set(fin) == set(batch)
+        for et, b in batch.items():
+            assert fin[et].n_cmp == b.n_cmp, (sf_dir, et)
+            assert fin[et].psi == b.psi, (sf_dir, et, fin[et].psi, b.psi)
+    assert {et: r.n_cmp for et, r in batch.items()} == DRIFTED_CMP
 
 
 def test_drift_checkpoint_restart_resumes_counts(spark, tmp_path, state_backend):
@@ -252,9 +259,6 @@ def test_drift_checkpoint_restart_resumes_counts(spark, tmp_path, state_backend)
     must come back from the state store, so the final PSI equals the
     uninterrupted single-run value (which the split-invariance test
     already ties to the batch formula)."""
-    cuts, shares = {}, {}
-    for et, vals in REF_VALUES.items():
-        cuts[et], shares[et] = _profile(vals)
     rows = [("click", v) for v in CMP_VALUES["click"]]
     half = len(rows) // 2
 
@@ -269,7 +273,7 @@ def test_drift_checkpoint_restart_resumes_counts(spark, tmp_path, state_backend)
         # foreachBatch, not the memory sink — memory-sink queries
         # refuse checkpoint recovery by design.
         return (
-            psi_drift_stateful(_stream_df(spark, src), cuts, shares)
+            psi_drift(file_event_source(spark, str(src)), _profile_df(spark))
             .writeStream.foreachBatch(
                 lambda df, _epoch: collected.extend(df.collect())
             )
@@ -281,18 +285,19 @@ def test_drift_checkpoint_restart_resumes_counts(spark, tmp_path, state_backend)
 
     q1 = _start()
     q1.awaitTermination(300)
+    first_run = len(collected)
     _write(rows[half:], str(src / "b.json"))
     os.utime(src / "b.json", (time.time() - 50, time.time() - 50))
     q2 = _start()
     q2.awaitTermination(300)
 
-    fin = _final_per_key(collected)
-    assert fin["click"].n_cmp == len(CMP_VALUES["click"]), (
+    # the resumed run reads only b.json, so its one row counts a.json's
+    # values only if the state came back from the checkpoint
+    assert [r.n_cmp for r in collected[first_run:]] == [len(rows)], (
         "state lost across restart"
     )
-    assert fin["click"].psi == _python_psi(
-        CMP_VALUES["click"], cuts["click"], shares["click"]
-    )
+    fin = _final_per_key(collected)
+    assert fin["click"].psi == _python_psi(CMP_VALUES["click"], "click")
 
 
 def test_psi_formula_parity_with_monitor_constants():
