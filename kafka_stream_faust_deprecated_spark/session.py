@@ -12,6 +12,11 @@ The config choices are the ones that matter at 100 TB on a real cluster:
 * local sessions fork Python workers from the engine's ``pydaemon``,
   so a Python task no longer re-reads ``pyspark.zip`` and the
   spark-core jar when pyspark invalidates its import caches
+* a local session's driver JVM maps a class-data-sharing archive of
+  Spark's classes, recorded once per install at the exit of the first
+  session and kept in ``${XDG_CACHE_HOME:-~/.cache}/spark-graft/``
+  (``cds.py``): it skips most of the class loading and verification that
+  dominate a cold start
 
 Local-fixture caveat: the testdata parquet files are written as a SINGLE
 row group, so ``spark.sql.files.maxPartitionBytes``/``openCostInBytes``
@@ -28,6 +33,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from kafka_stream_faust_deprecated_spark import cds
 
 
 #: The directory holding the engine package, which workers need on
@@ -150,11 +157,11 @@ def get_spark(
         .config(map=STATE_STORE_PROVIDERS["rocksdb"])
     )
 
+    launch = None
     if "SPARK_LOCAL_MASTER" not in os.environ and not os.environ.get("MASTER"):
         builder = builder.master(f"local[{cpus}]")
-        builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-        )
+        heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+        builder = builder.config("spark.driver.memory", heap)
         # Local checkpoints go through the FileSystem API. Spark's default
         # for file: paths, the FileContext manager, makes about ten
         # permission calls per checkpoint file, and without libhadoop
@@ -185,12 +192,19 @@ def get_spark(
         extra_conf[_WORKER_PATH_KEY] = _with_engine_path(
             extra_conf.get(_WORKER_PATH_KEY)
         )
+        # The driver JVM maps (or records) a class-data-sharing archive
+        # (see cds.py). The flags go after any default options the caller
+        # gave; the caller's extraJavaOptions are left as they are.
+        launch = cds.prepare(extra_conf.get("spark.driver.memory", heap), extra_conf)
+        if launch is not None:
+            key = "spark.driver.defaultJavaOptions"
+            extra_conf[key] = " ".join(filter(None, (extra_conf.get(key), launch.java_options)))
 
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
 
-    spark = builder.getOrCreate()
+    spark = cds.start(launch, builder.getOrCreate)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

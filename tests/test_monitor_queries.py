@@ -2,10 +2,10 @@
 (queries/monitor.py) — value equivalence is the oracle harness's job;
 these pin what the oracle comparison cannot see: the Benford audit's
 digits/counts match a Python replay and its expected shares are the
-true log10 law, the PSI matches a NumPy replay of the bucketing and is
-zero for identical windows, TWAP matches a per-day holding-time replay
-and sits inside the day's price range, and the seasonal screen matches
-a NumPy deseasonalized z-score replay.
+true log10 law, the PSI matches a NumPy replay of the bucketing, is
+zero for identical windows and keeps 6-dp shares, TWAP matches a
+per-day holding-time replay and sits inside the day's price range, and
+the seasonal screen matches a NumPy deseasonalized z-score replay.
 """
 
 from __future__ import annotations
@@ -17,6 +17,7 @@ import numpy as np
 from kafka_stream_faust_deprecated_spark.io import load_table_parallel
 from kafka_stream_faust_deprecated_spark.queries import monitor as M
 from tests.conftest import SF_DIR
+from tests.test_streaming_drift import CMP_VALUES, DRIFTED_CMP, REF_VALUES, _write_events
 from tests.test_ticker_queries import _round_det, _ticks
 
 
@@ -51,9 +52,32 @@ def test_benford_matches_python_replay(spark):
 # -------------------------------------------------------------- PSI
 
 
+def _replay_psi(ref, cmp_, share_dp=6):
+    """NumPy replay of ``psi_value_drift`` for one type: 4-dp decile cuts
+    of ``ref``, shares rounded to ``share_dp`` decimals and floored at
+    PSI_EPS, terms fixed to 6 dp and summed exactly (integer
+    micro-units). Returns the sum before its 4-dp rounding."""
+    cuts = [
+        _round_det(float(np.percentile(ref, q * 100, method="linear")), 4)
+        for q in M._PSI_DECILES
+    ]
+
+    def buckets(values):
+        return np.array([1 + sum(1 for c in cuts if v > c) for v in values])
+
+    rb, cb = buckets(ref), buckets(cmp_)
+    micro = 0
+    for k in range(1, 11):
+        p = max(_round_det(float(np.sum(rb == k)) / len(ref), share_dp), M.PSI_EPS)
+        q = max(_round_det(float(np.sum(cb == k)) / len(cmp_), share_dp), M.PSI_EPS)
+        micro += round(_round_det((p - q) * math.log(p / q), 6) * 1e6)
+    return micro / 1e6
+
+
 def test_psi_matches_numpy_replay(spark):
     """PSI per type matches a NumPy replay of the decile bucketing +
-    epsilon-floored term sum, and is non-negative."""
+    epsilon-floored term sum within its 4-dp rounding, and is
+    non-negative."""
     rows = (
         load_table_parallel(spark, SF_DIR, "events")
         .select("event_type", "value", "ts")
@@ -67,33 +91,41 @@ def test_psi_matches_numpy_replay(spark):
     out = {r.event_type: r for r in M.psi_value_drift(spark, SF_DIR).collect()}
     assert set(out) == set(byt)
     for et, (ref, cmp_) in byt.items():
-        cuts = [
-            _round_det(float(np.percentile(ref, q * 100, method="linear")), 4)
-            for q in M._PSI_DECILES
-        ]
-
-        def bucket(v):
-            return 1 + sum(1 for c in cuts if v > c)
-
-        rb = np.array([bucket(v) for v in ref])
-        cb = np.array([bucket(v) for v in cmp_])
-        psi = 0.0
-        for k in range(1, 11):
-            p = max(_round_det(float(np.sum(rb == k)) / len(ref), 6), M.PSI_EPS)
-            q = max(_round_det(float(np.sum(cb == k)) / len(cmp_), 6), M.PSI_EPS)
-            psi += _round_det((p - q) * math.log(p / q), 6)
         r = out[et]
         assert r.n_ref == len(ref) and r.n_cmp == len(cmp_)
-        assert abs(r.psi - psi) < 1e-3
+        # the 4-dp contract: within half a unit of the 4th decimal (plus
+        # the float error of the 6-dp sum)
+        assert abs(r.psi - _replay_psi(ref, cmp_)) <= 5e-5 + 1e-12, et
         assert r.psi >= -1e-9  # each (p-q)ln(p/q) term is non-negative
 
 
-def test_psi_zero_for_identical_windows(spark):
-    """Sanity: bucketing a window against itself gives PSI ~ 0 (replay
-    of the same formula with p == q)."""
-    p = 0.1
-    term = (p - p) * math.log(p / p)
-    assert term == 0.0
+def test_psi_zero_for_identical_windows(spark, tmp_path):
+    """A comparison window holding exactly the reference window's values
+    has every share equal to its profile's, so ``psi_value_drift``
+    returns 0.0."""
+    _write_events(spark, str(tmp_path), REF_VALUES)
+    out = {r.event_type: r for r in M.psi_value_drift(spark, str(tmp_path)).collect()}
+    assert set(out) == set(REF_VALUES)
+    for et, vals in REF_VALUES.items():
+        assert out[et].n_ref == out[et].n_cmp == len(vals)
+        assert out[et].psi == 0.0
+
+
+def test_psi_keeps_six_dp_shares(spark, tmp_path):
+    """On a table where shares rounded to 5 dp change the 4-dp PSI of
+    every type (the events fixture has no such key at any SF),
+    ``psi_value_drift`` equals the replay with 6-dp shares."""
+    _write_events(spark, str(tmp_path),
+                  {et: CMP_VALUES[et][:n] for et, n in DRIFTED_CMP.items()})
+    out = {r.event_type: r.psi for r in M.psi_value_drift(spark, str(tmp_path)).collect()}
+    assert set(out) == set(DRIFTED_CMP)
+    for et, n in DRIFTED_CMP.items():
+        six, five = (
+            _round_det(_replay_psi(REF_VALUES[et], CMP_VALUES[et][:n], dp), 4)
+            for dp in (6, 5)
+        )
+        assert six != five, et  # the table sees the 6th decimal
+        assert out[et] == six, (et, out[et], six)
 
 
 # ------------------------------------------------------------- TWAP

@@ -73,14 +73,15 @@ def _profile(values):
 PROFILES = {et: _profile(vals) for et, vals in REF_VALUES.items()}
 
 
-def _profile_df(spark):
-    """PROFILES as the DataFrame ``psi_drift`` joins against."""
+def _profile_df(spark, profiles=PROFILES):
+    """``profiles`` ({et: (cuts, shares)}) as the DataFrame ``psi_drift``
+    joins against."""
     schema = ", ".join(
         ["et STRING"]
         + [f"c{i} DOUBLE" for i in range(1, 10)]
         + [f"p{k} DOUBLE" for k in range(1, 11)]
     )
-    rows = [(et, *cuts, *shares) for et, (cuts, shares) in PROFILES.items()]
+    rows = [(et, *cuts, *shares) for et, (cuts, shares) in profiles.items()]
     return spark.createDataFrame(rows, schema)
 
 
@@ -195,18 +196,15 @@ def test_reference_against_itself_is_near_zero(spark, tmp_path):
 DRIFTED_CMP = {"click": 157, "purchase": 114}
 
 
-def _write_drifted_events(spark, sf_dir):
-    """An events table: REF_VALUES before PSI_SPLIT, the DRIFTED_CMP
-    prefixes of CMP_VALUES after it."""
+def _write_events(spark, sf_dir, cmp_values):
+    """An events table: REF_VALUES before PSI_SPLIT, ``cmp_values``
+    ({event_type: values}) after it."""
     ref0, cmp0 = datetime(2024, 1, 2), datetime(2024, 1, 20)
     rows = [
-        (et, v, ref0 + timedelta(minutes=i))
-        for et, vals in REF_VALUES.items()
+        (et, v, t0 + timedelta(minutes=i))
+        for t0, window in ((ref0, REF_VALUES), (cmp0, cmp_values))
+        for et, vals in window.items()
         for i, v in enumerate(vals)
-    ] + [
-        (et, v, cmp0 + timedelta(minutes=i))
-        for et, n in DRIFTED_CMP.items()
-        for i, v in enumerate(CMP_VALUES[et][:n])
     ]
     spark.createDataFrame(
         [(i, *r) for i, r in enumerate(rows)],
@@ -229,7 +227,7 @@ def test_final_psi_matches_batch_query_output(spark, tmp_path):
     )
 
     drifted = str(tmp_path / "drifted")
-    _write_drifted_events(spark, drifted)
+    _write_events(spark, drifted, {et: CMP_VALUES[et][:n] for et, n in DRIFTED_CMP.items()})
     for i, sf_dir in enumerate([SF_DIR, drifted]):
         batch = {
             r.event_type: r for r in psi_value_drift(spark, sf_dir).collect()
@@ -300,10 +298,21 @@ def test_drift_checkpoint_restart_resumes_counts(spark, tmp_path, state_backend)
     assert fin["click"].psi == _python_psi(CMP_VALUES["click"], "click")
 
 
-def test_psi_formula_parity_with_monitor_constants():
-    """The module's epsilon floor is the batch query's (one constant,
-    imported not copied) and the term formula is non-negative."""
-    assert PSI_EPS == 1e-06
-    p, q = 0.3, 0.1
-    term = (p - q) * math.log(p / q)
-    assert term > 0.0
+def test_psi_formula_parity_with_monitor_constants(spark):
+    """``_psi``, the replay the tests above compare against, computes
+    the engine's own formula: its constants (the PSI_EPS floor, 6-dp
+    shares and terms, the 4-dp sum) give ``psi_drift``'s PSI on counts
+    that reach the floor on both sides (an empty reference bucket and
+    empty comparison buckets) and shares that need all 6 decimals."""
+    cuts = [float(c) for c in range(1, 10)]
+    ref_shares = [0.0, 0.142857, 0.285714, 0.1, 0.05, 0.2, 0.021429, 0.1, 0.05, 0.05]
+    counts = [3, 0, 11, 1, 0, 2, 5, 0, 7, 13]
+    # bucket k (0-based) holds values in (k, k + 1]: value k + 0.5
+    events = spark.createDataFrame(
+        [("k", k + 0.5) for k, c in enumerate(counts) for _ in range(c)],
+        "event_type STRING, value DOUBLE",
+    )
+    (row,) = psi_drift(events, _profile_df(spark, {"k": (cuts, ref_shares)})).collect()
+    assert row.n_cmp == sum(counts)
+    assert row.psi == _psi(counts, sum(counts), ref_shares)
+    assert row.psi > 0.0
