@@ -1,5 +1,6 @@
 """Plan introspection — the exchange census behind the plan-hygiene
-guards and perfbench's ``plans.exchanges_*`` metrics, as an engine API.
+guards and perfbench's ``plans.exchanges_*`` metrics, and the JVM's
+codegen compile counters, as an engine API.
 
 A 100 TB deployment treats "how many times does data move, keyed on
 what" as a deployable property: CI diffs the census of each production
@@ -12,7 +13,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _EXCHANGE = re.compile(
     r"Exchange (hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)\(?([^)]*)"
@@ -110,3 +111,17 @@ def assert_census(df: DataFrame, *, max_data: int | None = None,
             if bad in [k.strip() for k in keys.split(",")]:
                 raise AssertionError(f"plan partitions on forbidden key {bad!r}: {keys}")
     return c
+
+
+def codegen_totals(spark: SparkSession) -> tuple[int, float]:
+    """``(classes, seconds)``: the generated classes this JVM has
+    compiled with Janino since it started, driver and executor side, and
+    the time spent compiling them. Only a miss in Spark's codegen cache
+    compiles, so the delta around a warm run should be about 0; a warm
+    run that compiles means the cache overflowed
+    (``spark.sql.codegen.cache.maxEntries``) or the run generated code
+    it had not generated before."""
+    jvm = spark._jvm
+    metric = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return metric.getCount(), nanos / 1e9

@@ -9,6 +9,10 @@ The config choices are the ones that matter at 100 TB on a real cluster:
 * UTC session timezone — the reference container ran TZ=Asia/Taipei and
   normalized to UTC by hand (``faust_app/ma_agg.py:46-47``); we make UTC
   the engine-wide invariant instead.
+* a codegen cache that holds every generated class the registered
+  queries need (``spark.sql.codegen.cache.maxEntries``), so a query
+  compiles its whole-stage classes once per JVM, not again on each run
+  after other queries have pushed them out of Spark's 100-entry default
 * local sessions fork Python workers from the engine's ``pydaemon``,
   so a Python task no longer re-reads ``pyspark.zip`` and the
   spark-core jar when pyspark invalidates its import caches
@@ -151,6 +155,17 @@ def get_spark(
         # even at 100 TB fact scale; 64 MB keeps them broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # Generated classes stay compiled for the life of the JVM. Spark's
+        # 100-entry codegen cache is smaller than the engine's working set:
+        # one registration-order pass over the registry at sf0.001 fills
+        # ~2,720 entries (most whole-stage classes twice in a local
+        # session, driver and executor side) and each later pass adds
+        # ~45-120 that differ only in AQE's stage numbering. The 8
+        # llm_curation queries alone need ~270: at 100 every warm pass
+        # recompiled ~240 of them with Janino, at 4096 it compiles 0-10.
+        # Costs ~8 MB more metaspace on a whole-registry session. Static:
+        # read once, when the JVM's code generator builds its cache.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Streaming state backend (SURVEY.md M6): RocksDB, so streaming
         # state scales with executor disk instead of heap. Both providers
         # are golden-tested (tests/test_streaming_sma.py).

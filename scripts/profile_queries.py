@@ -14,11 +14,16 @@ For each named query (default: the slowest bench entries), reports
 * ``jobs`` / ``stages`` / ``tasks`` — scheduler work triggered by the
   noop write (status-tracker job-group diff), the fixed-overhead
   multiplier at small scale and the barrier count at large scale.
+* ``compiles`` / ``compile_ms`` — generated classes Janino compiled
+  during the measured build, plan and exec, and the time it took
+  (``plans.codegen_totals`` deltas).
 
 Each query is warmed once (codegen caches, broadcast threads, Python
 workers, page cache) before the measured run, matching bench.py's
-warm-then-measure discipline. Output: one JSON line per query plus a
-sorted summary table on stderr.
+warm-then-measure discipline. ``get_spark`` sizes the codegen cache to
+hold every query's classes, so a measured run that still compiles has
+generated code the warm-up did not (or the cache overflowed). Output:
+one JSON line per query plus a sorted summary table on stderr.
 
 Usage: python scripts/profile_queries.py [sf_dir] [query ...]
 """
@@ -34,6 +39,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 from kafka_stream_faust_deprecated_spark import get_spark  # noqa: E402
 from kafka_stream_faust_deprecated_spark.io import load_table  # noqa: E402
+from kafka_stream_faust_deprecated_spark.plans import codegen_totals  # noqa: E402
 from kafka_stream_faust_deprecated_spark.registry import get_query  # noqa: E402
 
 #: Default profile set: every bench entry whose r16 in-suite min
@@ -79,6 +85,7 @@ def profile_one(spark, name: str, sf_dir: str) -> dict:
     fn = get_query(name).fn
     _noop(fn(spark, sf_dir))  # warm: codegen/broadcast/pagecache
 
+    compiles0, compile_s0 = codegen_totals(spark)
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
     t1 = time.perf_counter()
@@ -96,6 +103,7 @@ def profile_one(spark, name: str, sf_dir: str) -> dict:
         t4 = time.perf_counter()
     finally:
         sc.setJobGroup(None, None)
+    compiles1, compile_s1 = codegen_totals(spark)
     st = sc.statusTracker()
     job_ids = st.getJobIdsForGroup(group)
     stages = 0
@@ -117,6 +125,8 @@ def profile_one(spark, name: str, sf_dir: str) -> dict:
         "jobs": len(job_ids),
         "stages": stages,
         "tasks": tasks,
+        "compiles": compiles1 - compiles0,
+        "compile_ms": round((compile_s1 - compile_s0) * 1e3, 1),
     }
 
 
@@ -136,13 +146,14 @@ def main() -> None:
     recs.sort(key=lambda r: -r["exec_s"])
     print(
         f"{'query':<34}{'build':>7}{'plan':>7}{'exec':>7}"
-        f"{'jobs':>6}{'stages':>8}{'tasks':>7}",
+        f"{'jobs':>6}{'stages':>8}{'tasks':>7}{'compiles':>10}{'cmp_ms':>8}",
         file=sys.stderr,
     )
     for r in recs:
         print(
             f"{r['query']:<34}{r['build_s']:>7.2f}{r['plan_s']:>7.2f}"
-            f"{r['exec_s']:>7.2f}{r['jobs']:>6}{r['stages']:>8}{r['tasks']:>7}",
+            f"{r['exec_s']:>7.2f}{r['jobs']:>6}{r['stages']:>8}{r['tasks']:>7}"
+            f"{r['compiles']:>10}{r['compile_ms']:>8.0f}",
             file=sys.stderr,
         )
 
