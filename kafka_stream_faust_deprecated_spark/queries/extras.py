@@ -1819,6 +1819,25 @@ def sessionize_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def with_episode(events: DataFrame, gap: int) -> DataFrame:
+    """``events`` (user_id, event_id, ts, ...) plus ``sec``, its epoch
+    second, and ``episode``: the per-user 1-based count of idle gaps of
+    more than ``gap`` seconds, in (sec, event_id) order. Every row of
+    one second gets the same count, so ordering by ``ts`` instead gives
+    the same numbers. The streaming twins in ``streaming/episodes.py``
+    apply the same rule."""
+    ev = events.withColumn("sec", F.unix_timestamp("ts"))
+    w = Window.partitionBy("user_id").orderBy("sec", "event_id")
+    prev = F.lag("sec").over(w)
+    brk = F.when(prev.isNull() | (F.col("sec") - prev > gap), 1).otherwise(0)
+    return ev.withColumn(
+        "episode",
+        F.sum(brk)
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .cast("long"),
+    )
+
+
 def sessionize_capped_df(
     events: DataFrame,
     gap: int = SESSION_GAP_SEC,
@@ -1828,34 +1847,19 @@ def sessionize_capped_df(
     DataFrame — factored out so the streaming twin's golden test
     (tests/test_streaming_sessions.py) can run the batch contract on
     the stream's own fixture."""
-    ev = events.select(
-        "user_id", "event_id", "ts", F.unix_timestamp("ts").alias("ep")
+    gi = with_episode(events.select("user_id", "event_id", "ts"), gap)
+    wg = Window.partitionBy("user_id", "episode")
+    sub = gi.withColumn("ep0", F.min("sec").over(wg)).withColumn(
+        "sub_id", F.expr(f"(sec - ep0) div {cap}")
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    brk = (
-        F.when(
-            F.lag("ep").over(w).isNull()
-            | ((F.col("ep") - F.lag("ep").over(w)) > gap),
-            1,
-        )
-        .otherwise(0)
-    )
-    gi = ev.withColumn(
-        "gid",
-        F.sum(brk).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-    wg = Window.partitionBy("user_id", "gid")
-    sub = gi.withColumn("ep0", F.min("ep").over(wg)).withColumn(
-        "sub_id", F.expr(f"(ep - ep0) div {cap}")
-    )
-    return sub.groupBy("user_id", "gid", "sub_id").agg(
+    return sub.groupBy("user_id", "episode", "sub_id").agg(
         F.count("*").alias("n_events"),
         F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
         F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-        (F.max("ep") - F.min("ep")).alias("duration_sec"),
+        (F.max("sec") - F.min("sec")).alias("duration_sec"),
     ).select(
         "user_id",
-        F.col("gid").alias("gap_session"),
+        F.col("episode").alias("gap_session"),
         F.col("sub_id").alias("sub_session"),
         "n_events",
         "session_start",
@@ -3676,7 +3680,7 @@ WHERE rn <= {HH_K}
 @register("heavy_hitters_exact", oracle=_hh_oracle(), tags=("E7", "E12"))
 def heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the streaming Space-Saving heavy hitters
-    (streaming/heavy_hitters.py): exact per-(user, episode)
+    (streaming/episodes.py): exact per-(user, episode)
     top-{HH_K} event types with the sketch's deterministic tie-break
     (count desc, value asc) and err = 0, episodes derived from the
     stream's own rule (new episode after a >{HH_HORIZON}s idle gap) —
@@ -3688,14 +3692,46 @@ def heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     window) that the (user, episode)-keyed count aggregates, rank
     window, and totals join all reuse via the ClusteredDistribution
     subset rule — the sessionize_capped shape; nothing is global."""
-    from kafka_stream_faust_deprecated_spark.streaming.heavy_hitters import (
-        heavy_hitters_exact_df,
-    )
-
     ev = load_table_parallel(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type"
     )
-    return heavy_hitters_exact_df(ev, k=HH_K, horizon=HH_HORIZON)
+    return heavy_hitters_exact_df(ev, horizon=HH_HORIZON)
+
+
+def heavy_hitters_exact_df(events: DataFrame, horizon: int) -> DataFrame:
+    """Batch twin: EXACT per-(user, episode) top-``HH_K`` event types with
+    the sketch's tie-break (count desc, value asc) and err = 0 — equals
+    the streaming output whenever no episode exceeds the counter
+    budget. Episodes come from ``with_episode``: a new one starts after
+    a >``horizon``-second idle gap.
+
+    ``events`` needs columns (user_id, event_id, ts, event_type); the
+    only exchange is the user-keyed sort the episode window needs,
+    which the count aggregates and rank window then reuse."""
+    ep = with_episode(events, horizon)
+    cnt = ep.groupBy("user_id", "episode", "event_type").agg(
+        F.count(F.lit(1)).alias("est_count")
+    )
+    tot = ep.groupBy("user_id", "episode").agg(
+        F.count(F.lit(1)).alias("n_events")
+    )
+    w = Window.partitionBy("user_id", "episode").orderBy(
+        F.col("est_count").desc(), "event_type"
+    )
+    return (
+        cnt.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= HH_K)
+        .join(tot, ["user_id", "episode"])
+        .select(
+            "user_id",
+            "episode",
+            "event_type",
+            "est_count",
+            F.lit(0).cast("long").alias("max_err"),
+            "n_events",
+            "rnk",
+        )
+    )
 
 
 def _lang_confusion_oracle() -> str:

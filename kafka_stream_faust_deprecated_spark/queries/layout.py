@@ -463,7 +463,7 @@ def heavy_hitters_cms_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     of corpus size — it rides one tiny exchange and broadcasts to the
     probe side; the width is deliberately small so the OVERFLOW regime
     (collisions) is exercised at test scale, mirroring
-    streaming/heavy_hitters.py's bounded-budget Space-Saving twin.
+    streaming/episodes.py's bounded-budget Space-Saving twin.
     """
     events = load_table(spark, sf_dir, "events")
     rows_r = F.explode(F.array(*[F.lit(r) for r in range(CMS_DEPTH)])).alias("r")

@@ -125,9 +125,7 @@ def stream_stream_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase")
     clicks = ev.where(F.col("event_type") == "click")
-    j = stream_stream_join(
-        purchases, clicks, key="user_id", max_delay="1 hour", watermark="1 hour"
-    )
+    j = stream_stream_join(purchases, clicks, key="user_id")
     return j.select(
         F.col("l.event_id").alias("purchase_id"),
         F.col("r.event_id").alias("click_id"),

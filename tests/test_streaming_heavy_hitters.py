@@ -16,13 +16,16 @@ import time
 from collections import Counter
 from datetime import datetime, timedelta, timezone
 
-from kafka_stream_faust_deprecated_spark.streaming.heavy_hitters import (
+from kafka_stream_faust_deprecated_spark.io import file_event_source
+from kafka_stream_faust_deprecated_spark.queries.extras import (
+    HH_CAPACITY as CAPACITY,
+    HH_K as K,
     heavy_hitters_exact_df,
+)
+from kafka_stream_faust_deprecated_spark.streaming.episodes import (
     heavy_hitters_stateful,
 )
 
-CAPACITY = 8
-K = 5
 HORIZON = 60
 
 T0 = datetime(2024, 3, 1, tzinfo=timezone.utc)
@@ -40,21 +43,6 @@ def _write(rows, path):
             )
 
 
-def _stream_df(spark, src):
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(src))
-        .selectExpr("value AS json")
-    )
-    return raw.selectExpr(
-        "CAST(get_json_object(json, '$.user_id') AS LONG) AS user_id",
-        "CAST(get_json_object(json, '$.event_id') AS LONG) AS event_id",
-        "to_timestamp(get_json_object(json, '$.ts')) AS ts",
-        "get_json_object(json, '$.event_type') AS event_type",
-    )
-
-
 def _run(spark, tmp_path, name, files):
     src = tmp_path / "src"
     src.mkdir()
@@ -65,7 +53,7 @@ def _run(spark, tmp_path, name, files):
         os.utime(p, (t, t))
     q = (
         heavy_hitters_stateful(
-            _stream_df(spark, src), capacity=CAPACITY, k=K, horizon=HORIZON
+            file_event_source(spark, str(src)), horizon=HORIZON
         )
         .writeStream.format("memory")
         .queryName(name)
@@ -106,16 +94,14 @@ def _batch_twin(spark, fixture):
         ],
         "user_id long, event_id long, ts timestamp, event_type string",
     )
-    return heavy_hitters_exact_df(ev, k=K, horizon=HORIZON)
+    return heavy_hitters_exact_df(ev, horizon=HORIZON)
 
 
 def test_sketch_state_is_capacity_bounded():
     """The whole point of the sketch: state NEVER exceeds the counter
     budget, no matter how many distinct values stream past (pure
     Python — exercises _update directly with 10k distinct values)."""
-    from kafka_stream_faust_deprecated_spark.streaming.heavy_hitters import (
-        _update,
-    )
+    from kafka_stream_faust_deprecated_spark.streaming.episodes import _update
 
     sketch = {"c": {}, "n": 0}
     for i in range(10_000):
@@ -168,7 +154,7 @@ def test_heavy_hitters_checkpoint_restart(spark, tmp_path, state_backend):
     def _start():
         return (
             heavy_hitters_stateful(
-                _stream_df(spark, src), capacity=CAPACITY, k=K, horizon=HORIZON
+                file_event_source(spark, str(src)), horizon=HORIZON
             )
             .writeStream.foreachBatch(
                 lambda df, _epoch: collected.extend(df.collect())
@@ -226,9 +212,10 @@ def test_two_bursts_split_into_numbered_episodes(spark, tmp_path):
     assert all(r[5] == 3 for r in ep1), "episode 1 counts only burst 1"
 
 
-def test_overflow_regime_space_saving_guarantees(spark, tmp_path):
+def _overflow_fixture(step):
     """User 3 sees 12 distinct types under an 8-counter budget: 'hot'
-    x30 (> n/capacity) plus 11 cold types x2."""
+    x30 (> n/capacity) plus 11 cold types x2, one event every ``step``
+    seconds."""
     rows, eid = [], 0
     colds = [f"cold{i:02d}" for i in range(11)]
     seq: list[str] = []
@@ -243,7 +230,14 @@ def test_overflow_regime_space_saving_guarantees(spark, tmp_path):
     seq += ["hot"] * (30 - seq.count("hot"))
     for i, et in enumerate(seq):
         eid += 1
-        rows.append((3, eid, i * 5, et))
+        rows.append((3, eid, i * step, et))
+    return rows
+
+
+def test_overflow_regime_space_saving_guarantees(spark, tmp_path):
+    """User 3 sees 12 distinct types under an 8-counter budget: 'hot'
+    x30 (> n/capacity) plus 11 cold types x2."""
+    rows = _overflow_fixture(5)
     true = Counter(et for _u, _e, _o, et in rows)
     n = len(rows)
 
@@ -265,3 +259,28 @@ def test_overflow_regime_space_saving_guarantees(spark, tmp_path):
         f"a value with count 30 > n/capacity={n / CAPACITY:.1f} must surface"
     )
     assert hot_rows[0]["est_count"] >= 30
+
+
+def test_overflow_rows_do_not_depend_on_batch_boundaries(spark, tmp_path):
+    """In the overflow regime eviction depends on fold order, so the
+    rows pin it: the same on-time events fed as one file, and split
+    across two micro-batches with four events arriving after later
+    ones (yet within the 10 s watermark), must give identical rows."""
+    rows = _overflow_fixture(1)
+    early = [r for r in rows if r[2] <= 30 and r[2] not in (22, 24, 26, 28)]
+    late = [r for r in rows if r not in early]
+    runs = []
+    for name, files in (
+        ("hh_one_file", [("f1.json", rows)]),
+        ("hh_two_files", [("f1.json", early), ("f2.json", late)]),
+    ):
+        (tmp_path / name).mkdir()
+        got = _run(
+            spark,
+            tmp_path / name,
+            name,
+            files + [("f9.json", _flush(200_000))],
+        )
+        runs.append(sorted(tuple(r) for r in got if r["user_id"] == 3))
+    assert runs[0], "the overflow episode never closed"
+    assert runs[0] == runs[1]

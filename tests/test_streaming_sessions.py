@@ -14,10 +14,11 @@ import os
 import time
 from datetime import datetime, timedelta, timezone
 
+from kafka_stream_faust_deprecated_spark.io import file_event_source
 from kafka_stream_faust_deprecated_spark.queries.extras import (
     sessionize_capped_df,
 )
-from kafka_stream_faust_deprecated_spark.streaming.sessions import (
+from kafka_stream_faust_deprecated_spark.streaming.episodes import (
     sessionize_capped_stateful,
 )
 
@@ -64,24 +65,6 @@ def _write(rows, path):
             fh.write(json.dumps({"user_id": u, "event_id": eid, "ts": ts}) + "\n")
 
 
-def _stream_df(spark, src):
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(src))
-        .selectExpr("value AS json")
-    )
-    return raw.selectExpr(
-        "get_json_object(json, '$.user_id') AS user_id",
-        "get_json_object(json, '$.event_id') AS event_id",
-        "get_json_object(json, '$.ts') AS ts",
-    ).selectExpr(
-        "CAST(user_id AS LONG) AS user_id",
-        "CAST(event_id AS LONG) AS event_id",
-        "to_timestamp(ts) AS ts",
-    )
-
-
 def _run(spark, tmp_path, name, files):
     src = tmp_path / "src"
     src.mkdir()
@@ -91,7 +74,9 @@ def _run(spark, tmp_path, name, files):
         t = time.time() - 100 + i * 10
         os.utime(p, (t, t))
     q = (
-        sessionize_capped_stateful(_stream_df(spark, src), gap=GAP, cap=CAP)
+        sessionize_capped_stateful(
+            file_event_source(spark, str(src)), gap=GAP, cap=CAP
+        )
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
@@ -186,7 +171,9 @@ def test_streaming_sessions_checkpoint_restart(spark, tmp_path, state_backend):
 
     def _start():
         return (
-            sessionize_capped_stateful(_stream_df(spark, src), gap=GAP, cap=CAP)
+            sessionize_capped_stateful(
+                file_event_source(spark, str(src)), gap=GAP, cap=CAP
+            )
             .writeStream.foreachBatch(
                 lambda df, _epoch: collected.extend(df.collect())
             )
@@ -243,3 +230,28 @@ def test_streaming_sessions_timeout_closes_idle(spark, tmp_path):
     }
     assert (2, 0) in u2, f"idle user's last session not closed: {sorted(u2)}"
     assert u2[(2, 0)]["n_events"] == 2
+
+
+def test_streaming_sessions_out_of_order_on_time_events(spark, tmp_path):
+    """On-time events that arrive out of order must not change the
+    sessions. Batch 2 brings user 1's seconds 95 and 400, behind batch
+    1's 405 yet on time, so Spark keeps them. Folded after 405 they
+    would give a negative sub-session, split gap-session 3 and emit a
+    phantom gap-session 4; the closed sessions must equal the batch
+    transform over all five events, each once."""
+    first = [(1, 1, 0), (1, 2, 100), (1, 3, 405)]
+    second = [(1, 4, 95), (1, 5, 400)]
+    got = _run(
+        spark,
+        tmp_path,
+        "sess_ooo",
+        [("f1.json", first), ("f2.json", second), ("f3.json", _flush(100_000))],
+    )
+    flush_day = (T0 + timedelta(seconds=100_000)).strftime("%Y-%m-%d")
+    closed = [r for r in got if not r["session_start"].startswith(flush_day)]
+    keys = [_key(r) for r in closed]
+    assert len(keys) == len(set(keys)), sorted(keys)
+    exp = _expected(spark, first + second)
+    assert {k: r.asDict() for k, r in zip(keys, closed)} == {
+        k: r.asDict() for k, r in exp.items()
+    }

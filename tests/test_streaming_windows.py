@@ -123,8 +123,6 @@ def _join_pairs(spark, tmp_path, purchase_files, click_files, name):
         file_event_source(spark, dirs["purchases"]),
         file_event_source(spark, dirs["clicks"]),
         key="user_id",
-        max_delay="1 hour",
-        watermark="1 hour",
     ).select(
         F.col("l.event_id").alias("purchase_id"),
         F.col("r.event_id").alias("click_id"),
@@ -148,7 +146,6 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
         _batch_events_df(spark, PURCHASES),
         _batch_events_df(spark, CLICKS),
         key="user_id",
-        max_delay="1 hour",
     )
     batch_pairs = {
         (r["purchase_id"], r["click_id"])
@@ -344,8 +341,6 @@ def test_stream_stream_left_outer_emits_null_after_watermark(spark, tmp_path):
         file_event_source(spark, dirs["purchases"]),
         file_event_source(spark, dirs["clicks"]),
         key="user_id",
-        max_delay="1 hour",
-        watermark="1 hour",
         how="left_outer",
     ).select(
         F.col("l.event_id").alias("purchase_id"),
