@@ -7,7 +7,7 @@ ONE compact JSON line:
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ...,
      "calibration_sec": ..., "calibration_stages_sec": ...,
-     "streaming": {provider: {...}, ...}}
+     "streaming": {"rocksdb": {...}}}
 
 The line is consumed from a bounded 2000-char stdout tail, so
 ``queries`` on it is the frozen ``WIRE`` subset (+ the tpch suite
@@ -257,14 +257,13 @@ def _run_once(name: str, spark, sf_dir: str) -> float:
 STREAM_SYMBOLS = 200
 STREAM_SECONDS = 300
 
-#: Measured drains per state-store provider; the reported figure is the
-#: minimum, with max/min as ``sec_spread``. Drains are INTERLEAVED
-#: across providers so machine-state drift lands on both equally.
+#: Measured streaming drains; the reported figure is the minimum, with
+#: max/min as ``sec_spread``.
 STREAM_REPS = 3
 
 #: (symbols, seconds) -> (src_dir, tick_count). The NDJSON fixture is
 #: a pure function of its size, and the min-of-N drain treatment runs
-#: 8 drains per bench (2 warm + 3x2 measured) — serializing the same
+#: 4 drains per bench (1 warm + 3 measured) — serializing the same
 #: 60k-line file per drain would add untimed minutes for nothing.
 #: Dirs are removed at process exit.
 _STREAM_FIXTURES: dict = {}
@@ -318,10 +317,7 @@ def _stream_fixture(symbols: int, seconds: int) -> tuple:
 
 
 def _streaming_throughput(
-    spark,
-    backend: str = "rocksdb",
-    symbols: int = STREAM_SYMBOLS,
-    seconds: int = STREAM_SECONDS,
+    spark, symbols: int = STREAM_SYMBOLS, seconds: int = STREAM_SECONDS
 ) -> dict:
     """Drain a {STREAM_SYMBOLS}x{STREAM_SECONDS}-tick batch through the
     REAL streaming SMA pipeline (file twin of the Kafka path: JSON
@@ -335,10 +331,8 @@ def _streaming_throughput(
     including stream startup, so engine-vs-reference reads as
     ticks_per_sec vs N.
 
-    ``backend`` selects the state-store provider (``rocksdb`` — the
-    engine default, disk-backed — or ``hdfs`` — executor heap) so the
-    backend choice is perf-justified in the committed record, not just
-    golden-tested."""
+    The drain runs on the session's one state store, RocksDB
+    (``session.STATE_STORE_CONF``)."""
     import shutil
     import tempfile
 
@@ -348,11 +342,8 @@ def _streaming_throughput(
 
     src, n = _stream_fixture(symbols, seconds)
     root = tempfile.mkdtemp(prefix="bench_stream_")
-    from kafka_stream_faust_deprecated_spark.session import configure_state_store
-
-    qname = f"bench_sma_{backend}"
+    qname = "bench_sma"
     try:
-        configure_state_store(spark, backend)
         t_start = time.perf_counter()
         q = build_file_sma_query(
             spark, src, os.path.join(root, "ckpt"), query_name=qname
@@ -367,7 +358,6 @@ def _streaming_throughput(
             "ticks_per_sec": round(n / wall),
         }
     finally:
-        configure_state_store(spark, "rocksdb")  # restore engine default
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -456,30 +446,23 @@ def main() -> None:
         max(stage_samples) / max(min(stage_samples), 1e-9), 2
     )
 
-    # One streaming entry per state-store provider (rocksdb is the
-    # engine default; hdfs the heap-backed alternative). Each backend
-    # gets a tiny warmup drain first: the first streaming query of a
-    # session pays stream-machinery startup (source listing threads,
-    # state-store provider init) that would otherwise land on whichever
-    # backend runs first. Each provider reports the MIN over STREAM_REPS
-    # interleaved drains; sec_spread = max/min over the drains, and the
-    # raw per-drain seconds go to BENCH_SELF under streaming_drains.
-    streaming = {}
-    providers = ("rocksdb", "hdfs")
-    drains: dict[str, list[dict]] = {b: [] for b in providers}
-    for b in providers:
-        _streaming_throughput(spark, b, symbols=10, seconds=20)  # warm
-    for _ in range(STREAM_REPS):
-        for b in providers:
-            drains[b].append(_streaming_throughput(spark, b))
-    drain_secs = {b: [r["sec"] for r in runs] for b, runs in drains.items()}
-    for b in providers:
-        best = min(drains[b], key=lambda r: r["sec"])
-        secs = drain_secs[b]
-        streaming[b] = {
-            **best,
+    # One streaming entry, keyed by its state store (rocksdb, the one
+    # provider every session runs). A tiny warmup drain goes first: the
+    # first streaming query of a session pays stream-machinery startup
+    # (source listing threads, state-store provider init). The entry
+    # reports the MIN over STREAM_REPS drains; sec_spread = max/min over
+    # the drains, and the raw per-drain seconds go to BENCH_SELF under
+    # streaming_drains.
+    _streaming_throughput(spark, symbols=10, seconds=20)  # warm
+    drains = [_streaming_throughput(spark) for _ in range(STREAM_REPS)]
+    secs = [r["sec"] for r in drains]
+    streaming = {
+        "rocksdb": {
+            **min(drains, key=lambda r: r["sec"]),
             "sec_spread": round(max(secs) / max(min(secs), 1e-9), 2),
         }
+    }
+    drain_secs = {"rocksdb": secs}
 
     # The printed line carries ONLY the frozen WIRE subset (see WIRE).
     # Everything else — full 3-dp times for all entries, the calibration

@@ -23,11 +23,7 @@ Design principles (see SURVEY.md §4, §7):
   driver's differential harness can verify it (``__spark_entry__.py``).
 """
 
-from kafka_stream_faust_deprecated_spark.session import (
-    STATE_STORE_PROVIDERS,
-    configure_state_store,
-    get_spark,
-)
+from kafka_stream_faust_deprecated_spark.session import get_spark
 from kafka_stream_faust_deprecated_spark.io import (
     TABLES,
     compact_parquet,
@@ -44,8 +40,6 @@ from kafka_stream_faust_deprecated_spark.registry import (
 
 __all__ = [
     "get_spark",
-    "configure_state_store",
-    "STATE_STORE_PROVIDERS",
     "TABLES",
     "load_table",
     "register_views",

@@ -21,6 +21,8 @@ make it the shared idiom.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -35,3 +37,10 @@ def sql_round_det(expr: str, digits: int) -> str:
     """DuckDB twin of :func:`round_det` for oracle SQL strings."""
     s = float(10**digits)
     return f"(floor(({expr}) * {s} + 0.5) / {s})"
+
+
+def round_det_py(x: float, digits: int) -> float:
+    """Python twin of :func:`round_det` for driver-side arithmetic (not
+    Python's banker's ``round``)."""
+    s = float(10**digits)
+    return math.floor(x * s + 0.5) / s

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from kafka_stream_faust_deprecated_spark.functions.rounding import (
     round_det,
+    round_det_py,
     sql_round_det,
 )
 from kafka_stream_faust_deprecated_spark.functions.vectors import cosine, dot
@@ -609,20 +610,10 @@ def interval_coverage_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 PCA_ITERS = 3
 
 
-def _round_det_py(x: float, digits: int) -> float:
-    """Python twin of round_det/sql_round_det (floor(x*s+0.5)/s) so the
-    driver-side normalization step uses the exact same rounding the two
-    engines apply — NOT Python's banker's ``round``."""
-    import math as _math
-
-    s = float(10**digits)
-    return _math.floor(x * s + 0.5) / s
-
-
 def _pca_v0(dim: int) -> list[float]:
     import math as _math
 
-    return [_round_det_py(1.0 / _math.sqrt(dim), 6)] * dim
+    return [round_det_py(1.0 / _math.sqrt(dim), 6)] * dim
 
 
 #: Decimals the dim x dim Gram matrix is rounded to ON BOTH SIDES
@@ -757,12 +748,12 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     norm = 1.0
     for _ in range(PCA_ITERS):
         w = [
-            _round_det_py(sum(G[j][k] * v[k] for k in range(EMBED_DIM)), 6)
+            round_det_py(sum(G[j][k] * v[k] for k in range(EMBED_DIM)), 6)
             for j in range(EMBED_DIM)
         ]
         norm = _math.sqrt(sum(c * c for c in w))
-        v = [_round_det_py(c / norm, 6) for c in w] if norm > 0 else v
-    out = [(j, _round_det_py(v[j], 4), _round_det_py(norm, 4)) for j in range(EMBED_DIM)]
+        v = [round_det_py(c / norm, 6) for c in w] if norm > 0 else v
+    out = [(j, round_det_py(v[j], 4), round_det_py(norm, 4)) for j in range(EMBED_DIM)]
     return spark.createDataFrame(out, "component bigint, loading double, eigval double")
 
 

@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 
 from kafka_stream_faust_deprecated_spark.functions.rounding import (
     round_det,
+    round_det_py,
     sql_round_det,
 )
 from kafka_stream_faust_deprecated_spark.io import load_table_parallel
@@ -416,12 +417,10 @@ def basket_copurchase_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     That aggregate is CATALOG-bounded (|brands|^2/2 + |brands| + 1
     rows), so it collects to the driver like the PCA Gram / decile-cut
     relations, and the support cut + rule arithmetic run driver-side
-    under the shared rounding contract (_round_det_py == round_det,
+    under the shared rounding contract (round_det_py == round_det,
     IEEE-identical double division). Pair fan-out stays bounded by
     basket size squared — never a corpus self-join.
     """
-    from kafka_stream_faust_deprecated_spark.queries.layout import _round_det_py
-
     li = load_table_parallel(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -471,10 +470,10 @@ def basket_copurchase_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
                     n_a,
                     n_b,
                     n_orders,
-                    _round_det_py(f_ab / n_orders, 4),
-                    _round_det_py(f_ab / n_a, 4),
-                    _round_det_py(f_ab / n_b, 4),
-                    _round_det_py((f_ab * n_orders) / (float(n_a) * n_b), 4),
+                    round_det_py(f_ab / n_orders, 4),
+                    round_det_py(f_ab / n_a, 4),
+                    round_det_py(f_ab / n_b, 4),
+                    round_det_py((f_ab * n_orders) / (float(n_a) * n_b), 4),
                 )
             )
     return spark.createDataFrame(

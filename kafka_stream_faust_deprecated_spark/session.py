@@ -6,6 +6,9 @@ The config choices are the ones that matter at 100 TB on a real cluster:
 * AQE on (runtime re-planning, skew-join splitting, partition coalescing)
 * shuffle partitions sized to the parallelism at hand, not the 200 default
 * Arrow-batched Python interchange for the few Pandas-UDF paths
+* one streaming state store for every query: RocksDB with changelog
+  checkpointing (``STATE_STORE_CONF``), so keyed state lives on executor
+  disk, not heap
 * UTC session timezone — the reference container ran TZ=Asia/Taipei and
   normalized to UTC by hand (``faust_app/ma_agg.py:46-47``); we make UTC
   the engine-wide invariant instead.
@@ -63,55 +66,19 @@ def _local_cpus() -> int:
         return 32
 
 
-#: Spark's two built-in streaming state store backends (SURVEY.md M6),
-#: each as the confs that select it. The HDFS-backed provider keeps every
-#: key in executor heap — fine for the reference's 3-symbol state, a hard
-#: cap at 100 TB keyspaces. RocksDB spills state to local SSD with an
-#: off-heap block cache, and changelog checkpointing makes a batch's
-#: checkpoint the delta, not a full SST upload; it ships in the Spark
-#: distribution (rocksdbjni is bundled). ``get_spark`` starts every session
-#: on ``rocksdb``; ``configure_state_store`` or ``extra_conf`` selects
-#: ``hdfs``.
-STATE_STORE_PROVIDERS = {
-    "hdfs": {
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    },
-    "rocksdb": {
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-    },
+#: The streaming state store (SURVEY.md M6): RocksDB, the one provider
+#: every engine session runs. It spills state to local SSD with an
+#: off-heap block cache, so state scales with executor disk, not heap,
+#: as 100 TB keyspaces need; changelog checkpointing makes a batch's
+#: checkpoint the delta, not a full SST upload. It ships in the Spark
+#: distribution (rocksdbjni is bundled). ``trackTotalNumberOfRows`` stays
+#: at Spark's default (on): the ``numRowsTotal`` progress metric that
+#: ``streaming/metrics.py`` and the state-eviction tests read needs it.
+STATE_STORE_CONF = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
 }
-
-
-def configure_state_store(
-    spark: SparkSession, backend: str, track_rows: bool = True
-) -> None:
-    """Select the streaming state store backend for subsequently *started*
-    queries (the provider class is captured when a streaming query starts,
-    so already-running queries are unaffected — and a query restarted from
-    an existing checkpoint must keep the backend it was created with).
-
-    ``backend`` is a key of ``STATE_STORE_PROVIDERS``: ``"hdfs"``
-    (executor-heap state, Spark's default) or ``"rocksdb"`` (disk-backed
-    state, the 100 TB choice and the engine's default).
-
-    ``track_rows=False`` additionally disables RocksDB's
-    ``trackTotalNumberOfRows`` — Spark's documented write-path perf knob
-    (maintaining the count costs an extra lookup per put/delete). It
-    stays ON by default because turning it off zeroes the
-    ``numRowsTotal`` progress metric that ``streaming/metrics.py`` and
-    the state-eviction tests read; flip it per deployment when no
-    dashboard consumes state row counts.
-    """
-    for k, v in STATE_STORE_PROVIDERS[backend].items():
-        spark.conf.set(k, v)
-    if backend == "rocksdb":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-            "true" if track_rows else "false",
-        )
 
 
 def get_spark(
@@ -154,7 +121,8 @@ def get_spark(
         # Broadcast threshold: dims like region/nation/supplier are tiny
         # even at 100 TB fact scale; 64 MB keeps them broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # No UI: a caller that wants it sets it through extra_conf.
+        .config("spark.ui.enabled", "false")
         # Generated classes stay compiled for the life of the JVM. Spark's
         # 100-entry codegen cache is smaller than the engine's working set:
         # one registration-order pass over the registry at sf0.001 fills
@@ -166,10 +134,7 @@ def get_spark(
         # Costs ~8 MB more metaspace on a whole-registry session. Static:
         # read once, when the JVM's code generator builds its cache.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
-        # Streaming state backend (SURVEY.md M6): RocksDB, so streaming
-        # state scales with executor disk instead of heap. Both providers
-        # are golden-tested (tests/test_streaming_sma.py).
-        .config(map=STATE_STORE_PROVIDERS["rocksdb"])
+        .config(map=STATE_STORE_CONF)
     )
 
     launch = None

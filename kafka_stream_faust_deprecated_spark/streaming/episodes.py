@@ -136,8 +136,9 @@ def gap_episodes(
     """Per-user gap episodes of a streaming (user_id, event_id, ts)
     DataFrame: ``fold`` sees each sealed event's second and ``value``
     in order, and ``emit`` makes ``schema`` rows of each closed
-    accumulator."""
-    ev = events.select(
+    accumulator. An event with a null ``ts`` (a time that did not
+    parse) has no place in an episode and is dropped."""
+    ev = events.where(F.col("ts").isNotNull()).select(
         "user_id",
         "event_id",
         F.date_trunc("second", "ts").alias("ts"),

@@ -21,34 +21,6 @@ def spark():
     yield s
 
 
-@pytest.fixture(params=["rocksdb", "hdfs"])
-def state_backend(spark, request):
-    """Run a stateful-streaming test under BOTH state-store providers
-    (r8 verdict #6: the checkpoint-restart goldens pinned only the
-    rocksdb default; durability must hold for the heap-backed provider
-    too). Teardown restores whatever provider was ACTIVE before the
-    fixture ran — not a hard-coded default — so a changed engine
-    default or an outer fixture's choice survives this one (r9 advice:
-    restoring the literal 'rocksdb' would silently rebind later tests
-    if the session conf ever differed)."""
-    from kafka_stream_faust_deprecated_spark.session import configure_state_store
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior_class = spark.conf.get(key, None)
-    configure_state_store(spark, request.param)
-    yield request.param
-    # Restore the RAW prior conf string — a name round-trip through
-    # STATE_STORE_PROVIDERS would silently map an unknown provider
-    # class back to the default, the exact rebind hazard this fixture
-    # exists to avoid. (configure_state_store's rocksdb extras are
-    # provider-scoped confs; leaving them set is inert for any other
-    # provider.)
-    if prior_class is None:
-        spark.conf.unset(key)
-    else:
-        spark.conf.set(key, prior_class)
-
-
 @pytest.fixture(scope="session")
 def duck():
     """DuckDB connection with the fixture tables pre-registered as views,

@@ -40,14 +40,13 @@ def _worst_case_line() -> str:
         "calibration_sec": 99999.999,
         "calibration_stages_sec": 99999.999,
         "streaming": {
-            b: {
+            "rocksdb": {
                 "ticks_in": 99999999,
                 "rows_out": 99999999,
                 "sec": 99999.999,
                 "ticks_per_sec": 99999999,
                 "sec_spread": 99999.99,
             }
-            for b in ("rocksdb", "hdfs")
         },
     }
     return json.dumps(compact, separators=(",", ":"))
@@ -89,15 +88,15 @@ def test_streaming_noise_treatment_pins():
     treatment as every headline entry. Pin the knob so a refactor can't
     silently drop back to a single warm drain."""
     assert bench.STREAM_REPS >= 3
-    # The wire worst-case above must mirror what main() emits per
-    # provider — sec_spread is part of the frozen streaming shape now.
+    # The wire worst-case above must mirror what main() emits —
+    # sec_spread is part of the frozen streaming shape.
     assert '"sec_spread"' in _worst_case_line()
 
 
 def test_stream_fixture_is_cached_and_sized():
     """The tick fixture is a pure function of (symbols, seconds); the
-    min-of-N treatment drains it 8 times per bench run, so it must be
-    built once and reused, not re-serialized per drain."""
+    min-of-N treatment drains it STREAM_REPS times per bench run, so it
+    must be built once and reused, not re-serialized per drain."""
     a_dir, a_n = bench._stream_fixture(3, 4)
     b_dir, b_n = bench._stream_fixture(3, 4)
     assert a_dir == b_dir and a_n == b_n == 12

@@ -5,7 +5,7 @@ checkpoint file manager (see ``session.get_spark``). These tests pin
 that the setting resolves, and that the integrity checks it must not
 touch stay on: Spark's checkpoint checksums keep their default, and
 Hadoop's ``.crc`` files are still written next to every state-store
-changelog, on both state-store providers.
+changelog of the RocksDB state store.
 """
 
 from __future__ import annotations
@@ -43,18 +43,15 @@ def test_local_session_uses_filesystem_checkpoint_manager(spark, tmp_path):
     assert spark.conf.get(CHECKSUM_KEY) == "true"
 
 
-def test_state_changelogs_keep_crc_files(spark, tmp_path, state_backend):
-    _run_file_job(
-        spark, tmp_path, [("f1.json", build_fixture())], f"ckpt_crc_{state_backend}"
-    )
-    suffix = ".changelog" if state_backend == "rocksdb" else ".delta"
+def test_state_changelogs_keep_crc_files(spark, tmp_path):
+    _run_file_job(spark, tmp_path, [("f1.json", build_fixture())], "ckpt_crc")
     changelogs = [
         (d, f)
         for d, _, files in os.walk(tmp_path / "ckpt" / "state")
         for f in files
-        if f.endswith(suffix)
+        if f.endswith(".changelog")
     ]
-    assert changelogs, f"no {suffix} files under the state checkpoint"
+    assert changelogs, "no .changelog files under the state checkpoint"
     for d, f in changelogs:
         # Hadoop's .crc of the file, and Spark's checkpoint checksum.
         assert os.path.exists(os.path.join(d, f".{f}.crc")), (d, f)

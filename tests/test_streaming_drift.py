@@ -14,10 +14,8 @@ the checkpoint.
 
 from __future__ import annotations
 
-import json
 import math
 import os
-import time
 from datetime import datetime, timedelta, timezone
 
 import numpy as np
@@ -26,6 +24,7 @@ from kafka_stream_faust_deprecated_spark.io import file_event_source
 from kafka_stream_faust_deprecated_spark.queries.monitor import PSI_EPS
 from kafka_stream_faust_deprecated_spark.streaming.drift import psi_drift
 from tests.conftest import SF_DIR
+from tests.stream_drain import drain, write_files
 from tests.test_ticker_queries import _round_det
 
 T0 = datetime(2024, 3, 1, tzinfo=timezone.utc)
@@ -85,35 +84,26 @@ def _profile_df(spark, profiles=PROFILES):
     return spark.createDataFrame(rows, schema)
 
 
-def _write(rows, path):
-    with open(path, "w") as fh:
-        for i, (et, v) in enumerate(rows):
-            ts = (T0 + timedelta(seconds=i)).strftime("%Y-%m-%d %H:%M:%S")
-            fh.write(json.dumps({"event_type": et, "value": v, "ts": ts}) + "\n")
+def _line(item):
+    """``(i, (event_type, value))``: the file's i-th line, at second i."""
+    i, (et, v) = item
+    ts = (T0 + timedelta(seconds=i)).strftime("%Y-%m-%d %H:%M:%S")
+    return {"event_type": et, "value": v, "ts": ts}
 
 
 def _run(spark, tmp_path, name, files, profile=None):
-    src = tmp_path / "src"
-    src.mkdir(parents=True)
-    for i, (fname, rows) in enumerate(files):
-        p = src / fname
-        _write(rows, str(p))
-        t = time.time() - 100 + i * 10
-        os.utime(p, (t, t))
-    q = (
-        psi_drift(
-            file_event_source(spark, str(src)),
-            _profile_df(spark) if profile is None else profile,
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    src = write_files(
+        tmp_path / "src", [(f, enumerate(rows)) for f, rows in files], _line
     )
-    q.awaitTermination(300)
-    return spark.sql(f"SELECT * FROM {name}").collect()
+    return drain(
+        psi_drift(
+            file_event_source(spark, src),
+            _profile_df(spark) if profile is None else profile,
+        ),
+        tmp_path / "ckpt",
+        name,
+        output_mode="update",
+    )
 
 
 def _final_per_key(rows):
@@ -251,7 +241,7 @@ def test_final_psi_matches_batch_query_output(spark, tmp_path):
     assert {et: r.n_cmp for et, r in batch.items()} == DRIFTED_CMP
 
 
-def test_drift_checkpoint_restart_resumes_counts(spark, tmp_path, state_backend):
+def test_drift_checkpoint_restart_resumes_counts(spark, tmp_path):
     """Durability: stop the monitor mid-stream, start a NEW query on
     the same checkpoint, feed the rest — the cumulative bucket counts
     must come back from the state store, so the final PSI equals the
@@ -261,9 +251,7 @@ def test_drift_checkpoint_restart_resumes_counts(spark, tmp_path, state_backend)
     half = len(rows) // 2
 
     src = tmp_path / "src"
-    src.mkdir(parents=True)
-    _write(rows[:half], str(src / "a.json"))
-    os.utime(src / "a.json", (time.time() - 100, time.time() - 100))
+    write_files(src, [("a.json", enumerate(rows[:half]))], _line)
 
     collected: list = []
 
@@ -284,8 +272,7 @@ def test_drift_checkpoint_restart_resumes_counts(spark, tmp_path, state_backend)
     q1 = _start()
     q1.awaitTermination(300)
     first_run = len(collected)
-    _write(rows[half:], str(src / "b.json"))
-    os.utime(src / "b.json", (time.time() - 50, time.time() - 50))
+    write_files(src, [("b.json", enumerate(rows[half:]))], _line)
     q2 = _start()
     q2.awaitTermination(300)
 

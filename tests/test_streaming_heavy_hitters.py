@@ -10,9 +10,6 @@ true counts.
 
 from __future__ import annotations
 
-import json
-import os
-import time
 from collections import Counter
 from datetime import datetime, timedelta, timezone
 
@@ -25,45 +22,26 @@ from kafka_stream_faust_deprecated_spark.queries.extras import (
 from kafka_stream_faust_deprecated_spark.streaming.episodes import (
     heavy_hitters_stateful,
 )
+from tests.stream_drain import drain, write_files
 
 HORIZON = 60
 
 T0 = datetime(2024, 3, 1, tzinfo=timezone.utc)
 
 
-def _write(rows, path):
-    with open(path, "w") as fh:
-        for u, eid, off, et in rows:
-            ts = (T0 + timedelta(seconds=off)).strftime("%Y-%m-%d %H:%M:%S")
-            fh.write(
-                json.dumps(
-                    {"user_id": u, "event_id": eid, "ts": ts, "event_type": et}
-                )
-                + "\n"
-            )
+def _line(row):
+    u, eid, off, et = row
+    ts = (T0 + timedelta(seconds=off)).strftime("%Y-%m-%d %H:%M:%S")
+    return {"user_id": u, "event_id": eid, "ts": ts, "event_type": et}
 
 
 def _run(spark, tmp_path, name, files):
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, (fname, rows) in enumerate(files):
-        p = src / fname
-        _write(rows, str(p))
-        t = time.time() - 100 + i * 10
-        os.utime(p, (t, t))
-    q = (
-        heavy_hitters_stateful(
-            file_event_source(spark, str(src)), horizon=HORIZON
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    src = write_files(tmp_path / "src", files, _line)
+    return drain(
+        heavy_hitters_stateful(file_event_source(spark, src), horizon=HORIZON),
+        tmp_path / "ckpt",
+        name,
     )
-    q.awaitTermination(300)
-    return spark.sql(f"SELECT * FROM {name}").collect()
 
 
 def _flush(off):
@@ -131,7 +109,7 @@ def test_exact_regime_matches_batch_twin(spark, tmp_path):
     assert all(r[1] == 1 for r in got_rows), "single burst => episode 1"
 
 
-def test_heavy_hitters_checkpoint_restart(spark, tmp_path, state_backend):
+def test_heavy_hitters_checkpoint_restart(spark, tmp_path):
     """Durability: stop mid-burst (each user's counters half-built),
     restart a new query on the same checkpoint, feed the rest + flush —
     the emitted summaries must still be IDENTICAL to the batch twin
@@ -148,7 +126,6 @@ def test_heavy_hitters_checkpoint_restart(spark, tmp_path, state_backend):
     rest = [r for r in fixture if r[2] > 50]
     assert first and rest
     src = tmp_path / "src"
-    src.mkdir()
     collected: list = []
 
     def _start():
@@ -165,18 +142,11 @@ def test_heavy_hitters_checkpoint_restart(spark, tmp_path, state_backend):
             .start()
         )
 
-    p1 = src / "f1.json"
-    _write(first, str(p1))
-    os.utime(p1, (time.time() - 100, time.time() - 100))
+    write_files(src, [("f1.json", first)], _line)
     q1 = _start()
     q1.awaitTermination(300)
 
-    p2 = src / "f2.json"
-    _write(rest, str(p2))
-    os.utime(p2, (time.time() - 50, time.time() - 50))
-    p3 = src / "f3.json"
-    _write(_flush(100_000), str(p3))
-    os.utime(p3, (time.time() - 40, time.time() - 40))
+    write_files(src, [("f2.json", rest), ("f3.json", _flush(100_000))], _line)
     q2 = _start()
     q2.awaitTermination(300)
 

@@ -9,9 +9,6 @@ mid-gap-session, multi-event sub-sessions, and a single-event session.
 
 from __future__ import annotations
 
-import json
-import os
-import time
 from datetime import datetime, timedelta, timezone
 
 from kafka_stream_faust_deprecated_spark.io import file_event_source
@@ -21,6 +18,7 @@ from kafka_stream_faust_deprecated_spark.queries.extras import (
 from kafka_stream_faust_deprecated_spark.streaming.episodes import (
     sessionize_capped_stateful,
 )
+from tests.stream_drain import drain, write_files
 
 GAP = 60  # test-sized: new session after >60 s idle
 CAP = 300  # split a gap-session every 300 s from its first event
@@ -58,34 +56,19 @@ def _flush(off: int):
     return [(1, 9001, off), (2, 9002, off)]
 
 
-def _write(rows, path):
-    with open(path, "w") as fh:
-        for u, eid, off in rows:
-            ts = (T0 + timedelta(seconds=off)).strftime("%Y-%m-%d %H:%M:%S")
-            fh.write(json.dumps({"user_id": u, "event_id": eid, "ts": ts}) + "\n")
+def _line(row):
+    u, eid, off = row
+    ts = (T0 + timedelta(seconds=off)).strftime("%Y-%m-%d %H:%M:%S")
+    return {"user_id": u, "event_id": eid, "ts": ts}
 
 
-def _run(spark, tmp_path, name, files):
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, (fname, rows) in enumerate(files):
-        p = src / fname
-        _write(rows, str(p))
-        t = time.time() - 100 + i * 10
-        os.utime(p, (t, t))
-    q = (
-        sessionize_capped_stateful(
-            file_event_source(spark, str(src)), gap=GAP, cap=CAP
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+def _run(spark, tmp_path, name, files, line=_line):
+    src = write_files(tmp_path / "src", files, line)
+    return drain(
+        sessionize_capped_stateful(file_event_source(spark, src), gap=GAP, cap=CAP),
+        tmp_path / "ckpt",
+        name,
     )
-    q.awaitTermination(300)
-    return spark.sql(f"SELECT * FROM {name}").collect()
 
 
 def _key(r):
@@ -152,7 +135,7 @@ def test_streaming_sessions_cap_split_counts(spark, tmp_path):
     assert u1[(2, 1)]["duration_sec"] == 60
 
 
-def test_streaming_sessions_checkpoint_restart(spark, tmp_path, state_backend):
+def test_streaming_sessions_checkpoint_restart(spark, tmp_path):
     """Durability: stop the sessionizer mid-fixture — with user 1's
     second gap-session HALF-FED, the hardest state to lose — restart a
     new query on the same checkpoint, feed the rest + flush. The closed
@@ -166,7 +149,6 @@ def test_streaming_sessions_checkpoint_restart(spark, tmp_path, state_backend):
     assert first and rest  # the split lands inside u1's gap-session 2
 
     src = tmp_path / "src"
-    src.mkdir()
     collected: list = []
 
     def _start():
@@ -183,18 +165,11 @@ def test_streaming_sessions_checkpoint_restart(spark, tmp_path, state_backend):
             .start()
         )
 
-    p1 = src / "f1.json"
-    _write(first, str(p1))
-    os.utime(p1, (time.time() - 100, time.time() - 100))
+    write_files(src, [("f1.json", first)], _line)
     q1 = _start()
     q1.awaitTermination(300)
 
-    p2 = src / "f2.json"
-    _write(rest, str(p2))
-    os.utime(p2, (time.time() - 50, time.time() - 50))
-    p3 = src / "f3.json"
-    _write(_flush(100_000), str(p3))
-    os.utime(p3, (time.time() - 40, time.time() - 40))
+    write_files(src, [("f2.json", rest), ("f3.json", _flush(100_000))], _line)
     q2 = _start()
     q2.awaitTermination(300)
 
@@ -253,5 +228,25 @@ def test_streaming_sessions_out_of_order_on_time_events(spark, tmp_path):
     assert len(keys) == len(set(keys)), sorted(keys)
     exp = _expected(spark, first + second)
     assert {k: r.asDict() for k, r in zip(keys, closed)} == {
+        k: r.asDict() for k, r in exp.items()
+    }
+
+
+def test_streaming_sessions_skip_events_without_time(spark, tmp_path):
+    """An event whose time does not parse decodes to a null ``ts``; it
+    cannot be placed in an episode, so the sessionizer drops it and the
+    query goes on. The closed sessions equal the batch twin over the
+    good line alone."""
+    good = [(1, 1, 0)]
+    bad = {"user_id": 1, "event_id": 2, "ts": "not-a-time"}
+    files = [
+        ("f1.json", [_line(r) for r in good] + [bad]),
+        ("f2.json", [_line(r) for r in _flush(100_000)]),
+    ]
+    got = _run(spark, tmp_path, "sess_bad_ts", files, line=lambda row: row)
+    flush_day = (T0 + timedelta(seconds=100_000)).strftime("%Y-%m-%d")
+    closed = [r for r in got if not r["session_start"].startswith(flush_day)]
+    exp = _expected(spark, good)
+    assert {_key(r): r.asDict() for r in closed} == {
         k: r.asDict() for k, r in exp.items()
     }

@@ -25,7 +25,8 @@ from kafka_stream_faust_deprecated_spark.streaming.sinks import (
     read_upsert_table,
     upsert_latest_sink,
 )
-from tests.test_streaming_windows import make_event, _write_sources
+from tests.stream_drain import write_files
+from tests.test_streaming_windows import make_event
 
 BATCH_1 = [
     make_event(1, 0, 1, "purchase", 10.0),
@@ -45,14 +46,12 @@ def _rows(spark, out_dir):
 
 
 def test_idempotent_sink_replay_does_not_duplicate(spark, tmp_path):
-    dirs = _write_sources(
-        tmp_path, {"src": [("b1.json", BATCH_1), ("b2.json", BATCH_2)]}
-    )
+    src = write_files(tmp_path / "src", [("b1.json", BATCH_1), ("b2.json", BATCH_2)])
     out_dir = str(tmp_path / "sink_out")
     sink = idempotent_parquet_sink(out_dir)
 
     # maxFilesPerTrigger=1 -> one micro-batch per source file.
-    stream = file_event_source(spark, dirs["src"]).select(
+    stream = file_event_source(spark, src).select(
         "event_id", "user_id", "event_type", "value"
     )
     q = (
@@ -150,15 +149,13 @@ UPSERT_B2 = [
 
 
 def test_upsert_latest_sink_materializes_latest_per_key(spark, tmp_path):
-    dirs = _write_sources(
-        tmp_path, {"src": [("b1.json", UPSERT_B1), ("b2.json", UPSERT_B2)]}
-    )
+    src = write_files(tmp_path / "src", [("b1.json", UPSERT_B1), ("b2.json", UPSERT_B2)])
     out_dir = str(tmp_path / "mv")
     sink = upsert_latest_sink(
         spark, out_dir, key_cols=("user_id",), ts_col="ts",
         tiebreak_col="event_id", n_buckets=4,
     )
-    stream = file_event_source(spark, dirs["src"]).select(
+    stream = file_event_source(spark, src).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
     q = (

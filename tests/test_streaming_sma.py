@@ -12,15 +12,14 @@ The same ``sma_aggregate`` transformation is checked three ways:
 from __future__ import annotations
 
 import json
-import os
-import time
 from datetime import datetime
 
 import pytest
 
 from kafka_stream_faust_deprecated_spark.io import decode_ticks, file_tick_source
 from kafka_stream_faust_deprecated_spark.streaming import build_file_sma_query, sma_aggregate
-from tests.tick_fixture import build_fixture, golden_sma, make_tick, write_ndjson
+from tests.stream_drain import write_files
+from tests.tick_fixture import build_fixture, golden_sma, make_tick
 
 
 def _ticks_df(spark, ticks):
@@ -66,24 +65,11 @@ def test_sma_batch_matches_golden(spark):
     assert all(r["count_of_vwap"] >= 4 for r in ccc)
 
 
-def _write_files(src, files):
-    """Write each ``(file name, ticks)`` as NDJSON under ``src``, with
-    mtimes in list order: the file source drains oldest mtime first."""
-    src.mkdir()
-    for i, (fname, ticks) in enumerate(files):
-        p = src / fname
-        write_ndjson(ticks, str(p))
-        t = time.time() - 100 + i * 10
-        os.utime(p, (t, t))
-
-
 def _run_file_job(spark, tmp_path, files, name):
     """The file job (``build_file_sma_query``) over ``files``, run to the
     end of its input; returns the finished query."""
-    _write_files(tmp_path / "src", files)
-    q = build_file_sma_query(
-        spark, str(tmp_path / "src"), str(tmp_path / "ckpt"), query_name=name
-    )
+    src = write_files(tmp_path / "src", files)
+    q = build_file_sma_query(spark, src, str(tmp_path / "ckpt"), query_name=name)
     q.awaitTermination(300)
     return q
 
@@ -93,65 +79,18 @@ def _run_stream(spark, tmp_path, files, name):
     return spark.sql(f"SELECT * FROM {name}").collect()
 
 
-@pytest.mark.parametrize("backend", ["hdfs", "rocksdb"])
-def test_sma_streaming_matches_golden(spark, tmp_path, backend):
+def test_sma_streaming_matches_golden(spark, tmp_path):
     """File-source streaming run over 2 micro-batches; a far-future flush
     tick advances the watermark so every fixture window closes and emits
-    exactly once (append mode, S27).
-
-    Parameterized over both state store backends (SURVEY.md M6): the
-    in-heap HDFS-backed default and the disk-backed RocksDB provider the
-    engine selects for 100 TB keyspaces. Same golden either way — the
-    backend is a storage choice, never a semantics choice."""
-    from kafka_stream_faust_deprecated_spark.session import configure_state_store
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    configure_state_store(spark, backend)
-    try:
-        ticks = build_fixture()
-        flush = [make_tick("ZZZ", 100_000, 1.0, 1, True)]
-        rows = _run_stream(
-            spark, tmp_path, [("f1.json", ticks), ("f2.json", flush)], f"sma_s1_{backend}"
-        )
-        assert all(r["symbol"] != "ZZZ" for r in rows)  # lone tick never completes
-        _check_against_golden(rows, golden_sma(ticks))
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_sma_rocksdb_untracked_rows_same_golden(spark, tmp_path):
-    """The round-7 perf knob (configure_state_store(track_rows=False),
-    RocksDB's documented trackTotalNumberOfRows write-path toggle,
-    measured ~5-10% ticks/s) is a METRICS choice, never a semantics
-    choice: the same golden must hold with row tracking off. Kept off
-    the engine default because the S21 eviction proof reads
-    numRowsTotal (test_streaming_stateful.py)."""
-    from kafka_stream_faust_deprecated_spark.session import configure_state_store
-
-    conf_keys = (
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
+    exactly once (append mode, S27), on the engine's RocksDB state store
+    (SURVEY.md M6)."""
+    ticks = build_fixture()
+    flush = [make_tick("ZZZ", 100_000, 1.0, 1, True)]
+    rows = _run_stream(
+        spark, tmp_path, [("f1.json", ticks), ("f2.json", flush)], "sma_s1"
     )
-    prev = {k: spark.conf.get(k, None) for k in conf_keys}
-    configure_state_store(spark, "rocksdb", track_rows=False)
-    try:
-        ticks = build_fixture()
-        flush = [make_tick("ZZZ", 100_000, 1.0, 1, True)]
-        rows = _run_stream(
-            spark,
-            tmp_path,
-            [("f1.json", ticks), ("f2.json", flush)],
-            "sma_rocksdb_untracked",
-        )
-        assert all(r["symbol"] != "ZZZ" for r in rows)
-        _check_against_golden(rows, golden_sma(ticks))
-    finally:
-        for k, v in prev.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
+    assert all(r["symbol"] != "ZZZ" for r in rows)  # lone tick never completes
+    _check_against_golden(rows, golden_sma(ticks))
 
 
 def test_sma_streaming_update_mode_converges_to_golden(spark, tmp_path):
@@ -162,9 +101,10 @@ def test_sma_streaming_update_mode_converges_to_golden(spark, tmp_path):
     windows ever surface, so updates refine duplicates, not partials.)"""
     ticks = build_fixture()
     half = len(ticks) // 2
-    src = tmp_path / "src"
-    _write_files(src, [("f1.json", ticks[:half]), ("f2.json", ticks[half:])])
-    out = sma_aggregate(file_tick_source(spark, str(src)))
+    src = write_files(
+        tmp_path / "src", [("f1.json", ticks[:half]), ("f2.json", ticks[half:])]
+    )
+    out = sma_aggregate(file_tick_source(spark, src))
     batches: list[tuple[int, list]] = []
 
     def sink(batch_df, epoch_id):

@@ -11,19 +11,12 @@ restart from a checkpoint and is evicted once the watermark passes it.
 
 from __future__ import annotations
 
-import os
-import time
-
 from kafka_stream_faust_deprecated_spark.io import file_tick_source
 from kafka_stream_faust_deprecated_spark.streaming import sma_aggregate
+from tests.stream_drain import write_files
 from tests.test_checkpoint_files import _checkpoint_manager_class
-from tests.test_streaming_sma import (
-    _check_against_golden,
-    _iso,
-    _run_file_job,
-    _write_files,
-)
-from tests.tick_fixture import build_fixture, golden_sma, make_tick, write_ndjson
+from tests.test_streaming_sma import _check_against_golden, _iso, _run_file_job
+from tests.tick_fixture import build_fixture, golden_sma, make_tick
 
 
 def test_stateful_sma_idle_state_evicted(spark, tmp_path):
@@ -68,7 +61,7 @@ def _restart_resumes_state(spark, tmp_path, first_manager=None):
     ticks = build_fixture()
     half = len(ticks) // 2
     src = tmp_path / "src"
-    _write_files(src, [("f1.json", ticks[:half])])
+    write_files(src, [("f1.json", ticks[:half])])
 
     collected: list = []
 
@@ -99,12 +92,8 @@ def _restart_resumes_state(spark, tmp_path, first_manager=None):
             spark.conf.set(key, prior)
     assert q1.lastProgress is not None and q1.lastProgress["batchId"] >= 1
 
-    p2 = src / "f2.json"
-    write_ndjson(ticks[half:], str(p2))
-    os.utime(p2, (time.time() - 50, time.time() - 50))
-    flush = src / "f3.json"
-    write_ndjson([make_tick("ZZZ", 100_000, 1.0, 1, True)], str(flush))
-    os.utime(flush, (time.time() - 40, time.time() - 40))
+    flush = [make_tick("ZZZ", 100_000, 1.0, 1, True)]
+    write_files(src, [("f2.json", ticks[half:]), ("f3.json", flush)])
 
     q2 = _start()
     q2.awaitTermination(300)
@@ -116,7 +105,7 @@ def _restart_resumes_state(spark, tmp_path, first_manager=None):
     _check_against_golden(rows, golden_sma(ticks))
 
 
-def test_stateful_sma_checkpoint_restart_resumes_state(spark, tmp_path, state_backend):
+def test_stateful_sma_checkpoint_restart_resumes_state(spark, tmp_path):
     """Durability (the reference's changelog-topic story, ma_agg.py:42):
     stop the query mid-stream, start a NEW query on the same checkpoint,
     feed the rest of the fixture — the consumed files, the watermark and
@@ -127,7 +116,7 @@ def test_stateful_sma_checkpoint_restart_resumes_state(spark, tmp_path, state_ba
     _restart_resumes_state(spark, tmp_path)
 
 
-def test_stateful_sma_resumes_filecontext_checkpoint(spark, tmp_path, state_backend):
+def test_stateful_sma_resumes_filecontext_checkpoint(spark, tmp_path):
     """A checkpoint written through Spark's default FileContext manager,
     by any session without the engine's local setting, resumes under
     the local FileSystem manager: the output equals the golden with no

@@ -18,8 +18,6 @@ two-stream join state — and pin:
 from __future__ import annotations
 
 import json
-import os
-import time
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import functions as F
@@ -33,6 +31,7 @@ from kafka_stream_faust_deprecated_spark.streaming.windows import (
     streaming_dedup,
     tumbling_aggregate,
 )
+from tests.stream_drain import drain, write_files
 
 T0 = datetime(2024, 1, 1, 0, 0, 0, tzinfo=timezone.utc)
 
@@ -46,36 +45,6 @@ def make_event(event_id, minutes, user_id, event_type, value):
         "value": value,
         "props": json.dumps({"k": event_id}),
     }
-
-
-def _write_sources(tmp_path, sources):
-    """sources: {dirname: [(fname, [events]), ...]} with mtime ordering."""
-    dirs = {}
-    for dirname, files in sources.items():
-        d = tmp_path / dirname
-        d.mkdir()
-        for i, (fname, events) in enumerate(files):
-            p = d / fname
-            with open(p, "w") as f:
-                for e in events:
-                    f.write(json.dumps(e) + "\n")
-            t = time.time() - 100 + i * 10
-            os.utime(p, (t, t))
-        dirs[dirname] = str(d)
-    return dirs
-
-
-def _run_to_memory(spark, tmp_path, out_df, name):
-    q = (
-        out_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.sql(f"SELECT * FROM {name}").collect()
 
 
 def _batch_events_df(spark, events):
@@ -116,18 +85,17 @@ EXPECTED_PAIRS = {(1, 101), (2, 103), (3, 104)}
 
 
 def _join_pairs(spark, tmp_path, purchase_files, click_files, name):
-    dirs = _write_sources(
-        tmp_path, {"purchases": purchase_files, "clicks": click_files}
-    )
+    purchases = write_files(tmp_path / "purchases", purchase_files)
+    clicks = write_files(tmp_path / "clicks", click_files)
     joined = stream_stream_join(
-        file_event_source(spark, dirs["purchases"]),
-        file_event_source(spark, dirs["clicks"]),
+        file_event_source(spark, purchases),
+        file_event_source(spark, clicks),
         key="user_id",
     ).select(
         F.col("l.event_id").alias("purchase_id"),
         F.col("r.event_id").alias("click_id"),
     )
-    rows = _run_to_memory(spark, tmp_path, joined, name)
+    rows = drain(joined, tmp_path / f"ckpt_{name}", name)
     return {(r["purchase_id"], r["click_id"]) for r in rows}
 
 
@@ -212,11 +180,11 @@ def _rowset(rows, cols):
 
 
 def test_tumbling_streaming_matches_batch(spark, tmp_path):
-    dirs = _write_sources(
-        tmp_path, {"src": [("f1.json", TUMBLE_EVENTS), ("f2.json", FLUSH_EVENT)]}
+    src = write_files(
+        tmp_path / "src", [("f1.json", TUMBLE_EVENTS), ("f2.json", FLUSH_EVENT)]
     )
-    out = tumbling_aggregate(file_event_source(spark, dirs["src"]))
-    rows = _run_to_memory(spark, tmp_path, out, "tumb_s")
+    out = tumbling_aggregate(file_event_source(spark, src))
+    rows = drain(out, tmp_path / "ckpt_tumb_s", "tumb_s")
     got = _rowset(
         [r for r in rows if r["event_type"] != "flush"],
         ("win_start", "event_type", "n", "total_value", "avg_value"),
@@ -231,11 +199,11 @@ def test_session_streaming_matches_batch(spark, tmp_path):
     """Runs the session-window STATE STORE (streaming session windows
     merge adjacent state ranges — a different physical path from the
     batch sort-based plan)."""
-    dirs = _write_sources(
-        tmp_path, {"src": [("f1.json", TUMBLE_EVENTS), ("f2.json", FLUSH_EVENT)]}
+    src = write_files(
+        tmp_path / "src", [("f1.json", TUMBLE_EVENTS), ("f2.json", FLUSH_EVENT)]
     )
-    out = sessionize(file_event_source(spark, dirs["src"]))
-    rows = _run_to_memory(spark, tmp_path, out, "sess_s")
+    out = sessionize(file_event_source(spark, src))
+    rows = drain(out, tmp_path / "ckpt_sess_s", "sess_s")
     cols = ("user_id", "session_start", "session_last", "n_events", "total_value")
     got = _rowset([r for r in rows if r["user_id"] != 99], cols)
     batch = sessionize(_batch_events_df(spark, TUMBLE_EVENTS)).collect()
@@ -247,11 +215,11 @@ def test_session_streaming_matches_batch(spark, tmp_path):
 def test_sliding_streaming_matches_batch(spark, tmp_path):
     """2h/1h hopping windows through the streaming state store: append
     mode emits each finalized hop exactly once; the flush closes all."""
-    dirs = _write_sources(
-        tmp_path, {"src": [("f1.json", TUMBLE_EVENTS), ("f2.json", FLUSH_EVENT)]}
+    src = write_files(
+        tmp_path / "src", [("f1.json", TUMBLE_EVENTS), ("f2.json", FLUSH_EVENT)]
     )
-    out = sliding_aggregate(file_event_source(spark, dirs["src"]))
-    rows = _run_to_memory(spark, tmp_path, out, "slide_s")
+    out = sliding_aggregate(file_event_source(spark, src))
+    rows = drain(out, tmp_path / "ckpt_slide_s", "slide_s")
     cols = ("win_start", "win_end", "n", "total_value")
     flush_wins = {
         r["win_start"]
@@ -270,14 +238,13 @@ def test_stream_static_join_matches_batch(spark, tmp_path):
     dim = spark.createDataFrame(
         [(1, "alice"), (2, "bob"), (3, "carol")], "user_id LONG, name STRING"
     )
-    dirs = _write_sources(
-        tmp_path,
-        {"src": [("f1.json", TUMBLE_EVENTS[:5]), ("f2.json", TUMBLE_EVENTS[5:])]},
+    src = write_files(
+        tmp_path / "src", [("f1.json", TUMBLE_EVENTS[:5]), ("f2.json", TUMBLE_EVENTS[5:])]
     )
     out = stream_static_join(
-        file_event_source(spark, dirs["src"]), dim, on="user_id"
+        file_event_source(spark, src), dim, on="user_id"
     ).select("event_id", "user_id", "name")
-    rows = _run_to_memory(spark, tmp_path, out, "ssj_static")
+    rows = drain(out, tmp_path / "ckpt_ssj_static", "ssj_static")
     batch = (
         stream_static_join(_batch_events_df(spark, TUMBLE_EVENTS), dim, on="user_id")
         .select("event_id", "user_id", "name")
@@ -299,16 +266,16 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
         make_event(2, 7, 2, "view", 2.0),    # exact dup
         make_event(3, 8, 3, "view", 3.0),
     ]
-    dirs = _write_sources(
-        tmp_path, {"src": [("f1.json", dup_events), ("f2.json", FLUSH_EVENT)]}
+    src = write_files(
+        tmp_path / "src", [("f1.json", dup_events), ("f2.json", FLUSH_EVENT)]
     )
     out = streaming_dedup(
-        file_event_source(spark, dirs["src"]),
+        file_event_source(spark, src),
         keys=("event_id",),
         watermark="10 minutes",
         within_watermark=True,
     )
-    rows = _run_to_memory(spark, tmp_path, out, "dedup_s")
+    rows = drain(out, tmp_path / "ckpt_dedup_s", "dedup_s")
     ids = sorted(r["event_id"] for r in rows if r["event_type"] != "flush")
     assert ids == [1, 2, 3]
 
@@ -326,27 +293,24 @@ def test_stream_stream_left_outer_emits_null_after_watermark(spark, tmp_path):
     same choreography as the inner-join eviction test). This is a
     different state-store path from the inner join: unmatched left rows
     are retained and re-examined at watermark advance, not discarded."""
-    dirs = _write_sources(
-        tmp_path,
-        {
-            "purchases": [("p1.json", PURCHASES + ORPHAN_P), ("p2.json", FLUSH_P)],
-            "clicks": [
-                ("c1.json", CLICKS),
-                ("c2.json", FLUSH_C),
-                ("c3.json", FLUSH_C2),
-            ],
-        },
+    purchases = write_files(
+        tmp_path / "purchases",
+        [("p1.json", PURCHASES + ORPHAN_P), ("p2.json", FLUSH_P)],
+    )
+    clicks = write_files(
+        tmp_path / "clicks",
+        [("c1.json", CLICKS), ("c2.json", FLUSH_C), ("c3.json", FLUSH_C2)],
     )
     joined = stream_stream_join(
-        file_event_source(spark, dirs["purchases"]),
-        file_event_source(spark, dirs["clicks"]),
+        file_event_source(spark, purchases),
+        file_event_source(spark, clicks),
         key="user_id",
         how="left_outer",
     ).select(
         F.col("l.event_id").alias("purchase_id"),
         F.col("r.event_id").alias("click_id"),
     )
-    rows = _run_to_memory(spark, tmp_path, joined, "ssj_louter")
+    rows = drain(joined, tmp_path / "ckpt_ssj_louter", "ssj_louter")
     pairs = {(r["purchase_id"], r["click_id"]) for r in rows}
     assert EXPECTED_PAIRS <= pairs, pairs
     assert (4, None) in pairs, pairs

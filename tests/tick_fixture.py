@@ -8,7 +8,6 @@ against independently-computed numbers.
 
 from __future__ import annotations
 
-import json
 from datetime import datetime, timedelta, timezone
 
 T0 = datetime(2024, 1, 1, 0, 0, 0, tzinfo=timezone.utc)
@@ -52,12 +51,6 @@ def build_fixture() -> list[dict]:
     # last-write-wins coincide, so batch and streaming agree on it
     ticks.append(make_tick("AAA", 10, 105.0, 20, True))
     return ticks
-
-
-def write_ndjson(ticks: list[dict], path: str) -> None:
-    with open(path, "w") as f:
-        for t in ticks:
-            f.write(json.dumps(t) + "\n")
 
 
 def golden_sma(ticks: list[dict]) -> dict[tuple[str, str], dict]:
